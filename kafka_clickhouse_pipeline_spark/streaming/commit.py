@@ -31,8 +31,11 @@ renamed data files (a crash mid-publish is re-swept by batch-id
 prefix on replay), but publish latency on object stores is O(bytes),
 not O(1).
 
-(streaming/sink.py's idempotent_batch_writer implements the same idea
-for partitioned event sinks with a different staging layout.)
+LAYOUTS: staging holds flat parquet files (state writers) or one
+level of Hive ``key=value`` directories (the month-partitioned MV
+table sink): ``event_month=X/part-*.parquet`` publishes as
+``event_month=X/b{batch_id}-part-*.parquet``, the sweep covers both
+levels, and the manifest names files relative to the destination.
 """
 
 from __future__ import annotations
@@ -41,6 +44,7 @@ import glob
 import json
 import os
 import posixpath
+import re
 import shutil
 from typing import Callable, Sequence
 from urllib.parse import urlparse
@@ -218,15 +222,28 @@ def sweep_uncommitted(batch_id: int, *dest_dirs: str) -> None:
     is always safe."""
     for dest_dir in dest_dirs:
         fs, p = _backend(dest_dir)
-        for stale in fs.glob(fs.join(p, f"b{batch_id}-*")):
+        for stale in _batch_files(fs, p, batch_id):
             fs.remove(stale)
 
 
+def _batch_files(fs, root: str, batch_id: int) -> list[str]:
+    """``b{batch_id}-*`` files in ``root`` and its ``key=value`` dirs."""
+    pattern = f"b{batch_id}-*"
+    return fs.glob(fs.join(root, pattern)) + fs.glob(fs.join(root, "*=*", pattern))
+
+
+#: Spark names every file of one write job ``part-<task>-<job uuid>...``;
+#: dropping the per-job uuid makes a replay publish the same names as
+#: the crashed attempt it replaces.
+_JOB_UUID = re.compile(r"-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+
+
 def publish_staged(staging: str, dest_dir: str, batch_id: int) -> list[str]:
-    """Move a staging directory's parquet files into ``dest_dir`` under
+    """Move a staging directory's parquet files (flat, or one level of
+    ``key=value`` partition directories) into ``dest_dir`` under
     batch-id-prefixed names, sweeping any half-published files from a
     previous crashed attempt of the same batch first. Returns the
-    published destination FILE NAMES -- the marker manifest
+    published names relative to ``dest_dir`` -- the marker manifest
     (write_marker) records them so readers never depend on a listing
     (object-store list-after-write lag; see read_latest_state)."""
     fs, dest = _backend(dest_dir)
@@ -248,14 +265,18 @@ def publish_staged(staging: str, dest_dir: str, batch_id: int) -> list[str]:
             "different filesystems; staged publish requires a same-"
             "filesystem rename (copy across backends is not implemented)"
         )
-    for stale in fs.glob(fs.join(dest, f"b{batch_id}-*")):
+    for stale in _batch_files(fs, dest, batch_id):
         fs.remove(stale)
-    fs.makedirs(dest)
     published: list[str] = []
-    for f in sfs.glob(sfs.join(stag, "*.parquet")):
-        name = f"b{batch_id}-{sfs.basename(f)}"
-        fs.move(f, fs.join(dest, name))
-        published.append(name)
+    parts = [sfs.basename(d) for d in sfs.glob(sfs.join(stag, "*=*"))]
+    for part in [""] + parts:
+        fs.makedirs(fs.join(dest, part))
+        for f in sfs.glob(sfs.join(stag, part, "*.parquet")):
+            name = posixpath.join(
+                part, f"b{batch_id}-{_JOB_UUID.sub('', sfs.basename(f), 1)}"
+            )
+            fs.move(f, fs.join(dest, name))
+            published.append(name)
     return published
 
 
@@ -320,9 +341,10 @@ def staged_foreach_batch(
 
     ``body(batch_df, batch_id, staging)`` receives a dict mapping each
     destination directory to its per-batch staging directory and must
-    write every output (plain ``df.write.parquet(staging[dest])``)
-    into those; it may freely read the destination directories (the
-    crashed-attempt sweep has already run) and read back its own
+    write every output (plain ``df.write.parquet(staging[dest])``, one
+    write job per staging directory) into those; it may freely read
+    the destination directories (the crashed-attempt sweep has
+    already run) and read back its own
     staging output (the dual-dir dedup writers derive the index from
     the staged survivors). The wrapper enforces, in order: replayed
     batch -> no-op; sweep ``b{batch_id}-*`` leftovers from every

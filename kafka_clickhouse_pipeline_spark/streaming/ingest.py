@@ -14,15 +14,14 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
-
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..schemas import SALES_RAW_SCHEMA, WAREHOUSE_RAW_SCHEMA
 from ..sources.kafka import read_json_lines_stream, read_kafka_json_stream
-from .sink import prepare_batch, write_stream_to_table
+from .commit import staged_foreach_batch
+from .sink import idempotent_batch_writer, write_batch_to_table
 from .transforms import parse_sales, parse_stock
 
 #: Superset schema for the multiplexed variant (SURVEY.md S2 note: one
@@ -65,14 +64,13 @@ class PipelineManager:
         """Start consumption (ATTACH TABLE analog, README.md:68-69)."""
         d = self.definitions[name]
         df = d.transform(d.source(self.spark))
-        if d.foreach_batch is not None:
-            writer = (
-                df.writeStream.foreachBatch(d.foreach_batch)
-                .option("checkpointLocation", d.checkpoint)
-                .queryName(name)
+        writer = (
+            df.writeStream.foreachBatch(
+                d.foreach_batch or idempotent_batch_writer(d.table_path)
             )
-        else:
-            writer = write_stream_to_table(df, d.table_path, d.checkpoint).queryName(name)
+            .option("checkpointLocation", d.checkpoint)
+            .queryName(name)
+        )
         if trigger_available_now:
             writer = writer.trigger(availableNow=True)
         q = writer.start()
@@ -108,6 +106,27 @@ class PipelineManager:
             self.detach(name)
 
 
+def _mv_pipeline(
+    spark: SparkSession,
+    read_sales: Callable[[SparkSession], DataFrame],
+    read_stock: Callable[[SparkSession], DataFrame],
+    sales_path: str,
+    stock_path: str,
+    checkpoint_root: str,
+) -> PipelineManager:
+    """Both reference MVs over the given raw-stream sources:
+    sales_mv/stock_movements_mv -> month-partitioned tables."""
+    mgr = PipelineManager(spark)
+    for name, source, transform, path in (
+        ("sales_mv", read_sales, parse_sales, sales_path),
+        ("stock_movements_mv", read_stock, parse_stock, stock_path),
+    ):
+        mgr.register(
+            StreamDefinition(name, source, transform, path, f"{checkpoint_root}/{name}")
+        )
+    return mgr
+
+
 def kafka_pipeline(
     spark: SparkSession,
     brokers: str,
@@ -117,28 +136,12 @@ def kafka_pipeline(
 ) -> PipelineManager:
     """The full reference topology against real Kafka: topics
     ``sales``/``warehouse`` -> sales_mv/stock_movements_mv -> tables."""
-    mgr = PipelineManager(spark)
-    mgr.register(
-        StreamDefinition(
-            name="sales_mv",
-            source=lambda s: read_kafka_json_stream(s, brokers, "sales", SALES_RAW_SCHEMA),
-            transform=parse_sales,
-            table_path=sales_path,
-            checkpoint=f"{checkpoint_root}/sales_mv",
-        )
+    return _mv_pipeline(
+        spark,
+        lambda s: read_kafka_json_stream(s, brokers, "sales", SALES_RAW_SCHEMA),
+        lambda s: read_kafka_json_stream(s, brokers, "warehouse", WAREHOUSE_RAW_SCHEMA),
+        sales_path, stock_path, checkpoint_root,
     )
-    mgr.register(
-        StreamDefinition(
-            name="stock_movements_mv",
-            source=lambda s: read_kafka_json_stream(
-                s, brokers, "warehouse", WAREHOUSE_RAW_SCHEMA
-            ),
-            transform=parse_stock,
-            table_path=stock_path,
-            checkpoint=f"{checkpoint_root}/stock_movements_mv",
-        )
-    )
-    return mgr
 
 
 def multiplexed_file_pipeline(
@@ -153,40 +156,27 @@ def multiplexed_file_pipeline(
     topic column; the file stand-in demuxes on event_type, which the
     payloads carry). Each micro-batch is routed to both MV transforms
     inside a single foreachBatch -- one checkpoint, half the consumer
-    overhead of two independent streams.
+    overhead of two independent streams. One staged commit, marked on
+    the sales table, publishes both, so a replayed batch is a no-op.
     """
     mgr = PipelineManager(spark)
 
-    def _source(s: SparkSession):
-        return read_json_lines_stream(s, events_dir, MERGED_RAW_SCHEMA)
-
-    def _identity(df: DataFrame) -> DataFrame:
-        return df
-
-    def _route(batch_df: DataFrame, batch_id: int) -> None:
-        sales = parse_sales(
-            batch_df.filter(F.col("event_type") == "sale").select(*SALES_RAW_SCHEMA.names)
-        )
-        stock = parse_stock(
-            batch_df.filter(F.col("event_type") == "stock_movement").select(
-                *WAREHOUSE_RAW_SCHEMA.names
-            )
-        )
-        prepare_batch(sales).write.mode("append").partitionBy("event_month").parquet(
-            sales_path
-        )
-        prepare_batch(stock).write.mode("append").partitionBy("event_month").parquet(
-            stock_path
-        )
+    def _route(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
+        for kind, schema, parse, path in (
+            ("sale", SALES_RAW_SCHEMA, parse_sales, sales_path),
+            ("stock_movement", WAREHOUSE_RAW_SCHEMA, parse_stock, stock_path),
+        ):
+            events = batch_df.filter(F.col("event_type") == kind).select(*schema.names)
+            write_batch_to_table(parse(events), staging[path])
 
     mgr.register(
         StreamDefinition(
             name="multiplex_mv",
-            source=_source,
-            transform=_identity,
+            source=lambda s: read_json_lines_stream(s, events_dir, MERGED_RAW_SCHEMA),
+            transform=lambda df: df,
             table_path=sales_path,
             checkpoint=f"{checkpoint_root}/multiplex_mv",
-            foreach_batch=_route,
+            foreach_batch=staged_foreach_batch(sales_path, [sales_path, stock_path], _route),
         )
     )
     return mgr
@@ -202,23 +192,9 @@ def file_pipeline(
 ) -> PipelineManager:
     """Same topology with JSON-lines file sources standing in for Kafka
     (offline tests; identical parse/transform/sink path)."""
-    mgr = PipelineManager(spark)
-    mgr.register(
-        StreamDefinition(
-            name="sales_mv",
-            source=lambda s: read_json_lines_stream(s, sales_json_dir, SALES_RAW_SCHEMA),
-            transform=parse_sales,
-            table_path=sales_path,
-            checkpoint=f"{checkpoint_root}/sales_mv",
-        )
+    return _mv_pipeline(
+        spark,
+        lambda s: read_json_lines_stream(s, sales_json_dir, SALES_RAW_SCHEMA),
+        lambda s: read_json_lines_stream(s, stock_json_dir, WAREHOUSE_RAW_SCHEMA),
+        sales_path, stock_path, checkpoint_root,
     )
-    mgr.register(
-        StreamDefinition(
-            name="stock_movements_mv",
-            source=lambda s: read_json_lines_stream(s, stock_json_dir, WAREHOUSE_RAW_SCHEMA),
-            transform=parse_stock,
-            table_path=stock_path,
-            checkpoint=f"{checkpoint_root}/stock_movements_mv",
-        )
-    )
-    return mgr

@@ -10,10 +10,12 @@ The sort key matters at 100 TB: parquet row-group min/max stats on
 event_time give the same granule-skipping the MergeTree sparse index
 provides, so time-range serving queries touch only matching row groups.
 
-Small-file problem (SURVEY.md section 4): streaming micro-batches
-produce many small files; ``foreachBatch`` compacts each micro-batch to
-a bounded file count before write. A real deployment adds periodic
-compaction (Delta OPTIMIZE); here the knob is ``target_files``.
+Every streaming write goes through commit.py's staged-commit protocol
+(``idempotent_batch_writer``), so a replayed micro-batch is a no-op on
+any filesystem commit.py routes to. Small-file problem (SURVEY.md
+section 4): ``prepare_batch`` bounds each micro-batch to
+``target_files`` files, and ``compact_partitions`` rewrites crowded
+month partitions.
 """
 
 from __future__ import annotations
@@ -49,62 +51,16 @@ def prepare_batch(df: DataFrame, target_files: int = 4) -> DataFrame:
 
 
 def idempotent_batch_writer(path: str, target_files: int = 4):
-    """Effectively-once foreachBatch writer.
+    """Effectively-once foreachBatch writer for a month-partitioned
+    table: each batch is staged with ``partitionBy(event_month)`` and
+    published by commit.staged_foreach_batch (replayed batch -> no-op,
+    crashed attempt swept, one commit marker on ``path``)."""
+    from .commit import staged_foreach_batch
 
-    A plain append inside foreachBatch double-writes if a micro-batch
-    retries after a partial write (foreachBatch is at-least-once).
-    This writer stages each batch to ``_staging/<batch_id>`` (overwrite
-    -- retry-safe), then publishes files into the partition layout and
-    drops a commit marker; a replayed batch id with a marker is a
-    no-op. On an object store the publish step would be a metastore/
-    manifest swap; the protocol is the same.
-    """
-    import glob
-    import os
-    import shutil
+    def _body(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
+        write_batch_to_table(batch_df, staging[path], target_files)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(path, "_commits", str(batch_id))
-        if os.path.exists(marker):
-            return  # batch replay after successful publish
-        staging = os.path.join(path, "_staging", str(batch_id))
-        (
-            prepare_batch(batch_df, target_files)
-            .write.mode("overwrite")
-            .partitionBy("event_month")
-            .parquet(staging)
-        )
-        # a crash mid-publish leaves some files moved but no marker:
-        # remove any half-published files of this batch before moving
-        # (staged parquet names are fresh UUIDs per attempt)
-        for stale in glob.glob(os.path.join(path, "event_month=*", f"b{batch_id}-*")):
-            os.remove(stale)
-        for part_dir in glob.glob(os.path.join(staging, "event_month=*")):
-            dest = os.path.join(path, os.path.basename(part_dir))
-            os.makedirs(dest, exist_ok=True)
-            for f in glob.glob(os.path.join(part_dir, "*.parquet")):
-                # batch id in the name keeps publish idempotent per file
-                shutil.move(f, os.path.join(dest, f"b{batch_id}-{os.path.basename(f)}"))
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("committed")
-        shutil.rmtree(staging, ignore_errors=True)
-
-    return _write
-
-
-def write_stream_to_table(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    target_files: int = 4,
-):
-    """writeStream into a month-partitioned columnar table via
-    foreachBatch (needed for per-batch compaction + sort), with the
-    effectively-once staged-commit writer."""
-    return df.writeStream.foreachBatch(
-        idempotent_batch_writer(path, target_files)
-    ).option("checkpointLocation", checkpoint)
+    return staged_foreach_batch(path, [path], _body)
 
 
 def write_batch_to_table(df: DataFrame, path: str, target_files: int = 4) -> None:

@@ -12,6 +12,7 @@ import pytest
 from kafka_clickhouse_pipeline_spark.catalog import table_path
 from kafka_clickhouse_pipeline_spark.schemas import FIXTURE_TABLES
 from kafka_clickhouse_pipeline_spark.session import get_spark
+from kafka_clickhouse_pipeline_spark.streaming import commit
 
 SMOKE_SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -52,3 +53,76 @@ def oracle(sf_dir):
             )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def hadoop_fs(monkeypatch, spark):
+    """Route every plain path and file: URI in streaming/commit.py
+    through the Hadoop FileSystem backend (the JVM LocalFileSystem): the
+    exact globStatus/rename/create/delete calls an s3a:// or hdfs://
+    table makes, no mocks."""
+    real_backend = commit._backend
+
+    def forced(path, spark_arg=None):
+        if path.startswith("/"):
+            return commit._HadoopBackend(f"file://{path}", spark=spark), path
+        if path.startswith("file:"):
+            return commit._HadoopBackend(path, spark=spark), path
+        return real_backend(path, spark_arg)
+
+    monkeypatch.setattr(commit, "_backend", forced)
+
+
+@pytest.fixture()
+def lag_fs(monkeypatch):
+    """Object store whose LIST lags its PUTs (s3a list-after-write
+    semantics): files written by move/write_text stay INVISIBLE to
+    glob/listdir until the store 'settles' (the returned callable),
+    while exists() (a GET) stays consistent, and rename follows Hadoop
+    semantics (raises via the false-return contract when dst exists).
+    Shared by the staged-commit and compaction protocol tests."""
+    import shutil
+
+    hidden: set[str] = set()
+
+    class _ListLagBackend(commit._LocalBackend):
+        def move(self, src, dst):
+            if os.path.exists(dst):  # Hadoop rename-false contract
+                raise IOError(f"Hadoop rename failed: {src!r} -> {dst!r}")
+            shutil.move(src, dst)
+            hidden.add(dst)
+
+        def write_text(self, path, text):
+            super().write_text(path, text)
+            hidden.add(path)
+
+        def remove(self, path):  # deletes are GET-consistent
+            super().remove(path)
+            hidden.discard(path)
+
+        def glob(self, pattern):
+            return [
+                f for f in super().glob(pattern) if f not in hidden
+            ]
+
+        def listdir(self, path):
+            return [
+                n
+                for n in super().listdir(path)
+                if os.path.join(path, n) not in hidden
+            ]
+
+    orig = commit._backend
+
+    def routed(path, spark=None):
+        fs, p = orig(path, spark)
+        if isinstance(fs, commit._LocalBackend):
+            return _ListLagBackend(), p
+        return fs, p
+
+    monkeypatch.setattr(commit, "_backend", routed)
+
+    def settle():
+        hidden.clear()
+
+    return settle

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -22,8 +23,22 @@ def _batch(spark, payloads):
     )
 
 
-def test_replayed_batch_is_noop(spark, tmp_path):
-    path = str(tmp_path / "tbl")
+def _table(request, tmp_path, scheme: str) -> tuple[str, str]:
+    """(writer path, local directory) of the table under test: a plain
+    path, or a file:// URI whose every commit-protocol operation goes
+    through commit._HadoopBackend (the s3a:// / hdfs:// code path)."""
+    local = str(tmp_path / "tbl")
+    if scheme:
+        request.getfixturevalue("hadoop_fs")
+    return scheme + local, local
+
+
+TABLES = pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+
+
+@TABLES
+def test_replayed_batch_is_noop(spark, tmp_path, request, scheme):
+    path, _ = _table(request, tmp_path, scheme)
     writer = idempotent_batch_writer(path, target_files=2)
     df = _batch(spark, ["a", "b", "c"])
     writer(df, 0)
@@ -34,18 +49,19 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     assert spark.read.parquet(path).count() == 4
 
 
-def test_half_published_batch_retry_does_not_duplicate(spark, tmp_path):
-    path = str(tmp_path / "tbl")
+@TABLES
+def test_half_published_batch_retry_does_not_duplicate(spark, tmp_path, request, scheme):
+    path, local = _table(request, tmp_path, scheme)
     writer = idempotent_batch_writer(path, target_files=2)
     writer(_batch(spark, ["a", "b", "c"]), 0)
     # simulate a crash AFTER publish but BEFORE the commit marker:
     # remove the marker; published files of batch 0 remain
-    os.remove(os.path.join(path, "_commits", "0"))
-    n_files_before = len(glob.glob(f"{path}/event_month=*/b0-*"))
+    os.remove(os.path.join(local, "_commits", "0"))
+    n_files_before = len(glob.glob(f"{local}/event_month=*/b0-*"))
     assert n_files_before > 0
     writer(_batch(spark, ["a", "b", "c"]), 0)  # retry
     assert spark.read.parquet(path).count() == 3  # no duplicates
-    assert os.path.exists(os.path.join(path, "_commits", "0"))
+    assert os.path.exists(os.path.join(local, "_commits", "0"))
 
 
 def test_compact_partitions_rewrites_only_crowded_months(spark, tmp_path):

@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import json
 
-from kafka_clickhouse_pipeline_spark.streaming.ingest import multiplexed_file_pipeline
+from kafka_clickhouse_pipeline_spark.sources.kafka import parse_json_payload
+from kafka_clickhouse_pipeline_spark.streaming.ingest import (
+    MERGED_RAW_SCHEMA,
+    multiplexed_file_pipeline,
+)
 
 
-def test_multiplexed_stream_routes_both_kinds(spark, tmp_path):
-    src = tmp_path / "in"
+def _write_mixed_events(src) -> None:
     src.mkdir()
     events = []
     # ~70/30 mix like the reference's topic split (generate_data.py:436)
@@ -52,6 +55,11 @@ def test_multiplexed_stream_routes_both_kinds(spark, tmp_path):
         for ev in events:
             f.write(json.dumps(ev) + "\n")
 
+
+def test_multiplexed_stream_routes_both_kinds(spark, tmp_path):
+    src = tmp_path / "in"
+    _write_mixed_events(src)
+
     mgr = multiplexed_file_pipeline(
         spark,
         str(src),
@@ -70,3 +78,23 @@ def test_multiplexed_stream_routes_both_kinds(spark, tmp_path):
     # each table got its kind-specific typed schema
     assert "price" in sales.columns and "warehouse" not in sales.columns
     assert "movement_type" in stock.columns and "price" not in stock.columns
+
+
+def test_replayed_batch_lands_each_event_once(spark, tmp_path):
+    """foreachBatch is at-least-once: a micro-batch replayed after a
+    restart must not write its rows into either table a second time."""
+    src = tmp_path / "in"
+    _write_mixed_events(src)
+    sales_path, stock_path = str(tmp_path / "sales"), str(tmp_path / "stock")
+    mgr = multiplexed_file_pipeline(
+        spark, str(src), sales_path, stock_path, str(tmp_path / "ckpt")
+    )
+    batch = parse_json_payload(spark.read.text(str(src)), MERGED_RAW_SCHEMA)
+    route = mgr.definitions["multiplex_mv"].foreach_batch
+    route(batch, 0)
+    route(batch, 0)  # replay of the same batch id
+
+    sales = [r.event_id for r in spark.read.parquet(sales_path).collect()]
+    stock = [r.event_id for r in spark.read.parquet(stock_path).collect()]
+    assert sorted(sales) == [f"s{i}" for i in range(10) if i % 10 < 7]
+    assert sorted(stock) == [f"w{i}" for i in range(10) if i % 10 >= 7]
