@@ -184,7 +184,9 @@ def make_handler(spark: SparkSession, sf_dir: str):
                 body = json.dumps(payload).encode()
                 self.send_response(200)
             except Exception as exc:  # bad SQL -> client error, not a crash
-                body = json.dumps({"error": str(exc).splitlines()[0]}).encode()
+                # ParseException's text starts with a blank line
+                first = next((ln for ln in str(exc).splitlines() if ln.strip()), type(exc).__name__)
+                body = json.dumps({"error": first}).encode()
                 self.send_response(400)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))

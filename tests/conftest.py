@@ -5,6 +5,7 @@ driver's harness)."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -53,6 +54,27 @@ def oracle(sf_dir):
             )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` on this thread under a fresh
+    Spark job group and returns how many jobs it started."""
+    sc = spark.sparkContext
+
+    def run(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture()

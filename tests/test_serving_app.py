@@ -128,3 +128,63 @@ def test_api_sql_clickhouse_dialect(server):
     except urllib.error.HTTPError as e:
         assert e.code == 400
         assert "error" in _json.loads(e.read())
+
+
+def _post_sql(base, sql: bytes):
+    import urllib.error
+
+    req = urllib.request.Request(base + "/api/sql", data=sql, method="POST")
+    try:
+        with urllib.request.urlopen(req, timeout=120) as resp:
+            return resp.status, json.loads(resp.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+@pytest.mark.parametrize(
+    "sql, condition",
+    [(b"SELECT countIf(", "PARSE_SYNTAX_ERROR"), (b"", "PARSE_EMPTY_STATEMENT")],
+)
+def test_api_sql_parse_error_names_its_condition(server, sql, condition):
+    """Spark's ParseException text starts with a blank line; the 400's
+    error must be its first non-empty line, not ''."""
+    status, payload = _post_sql(server, sql)
+    assert status == 400
+    assert condition in payload["error"]
+
+
+#: The ad-hoc query the dashboard benchmark sends to /api/sql.
+_ADHOC_SQL = (
+    "SELECT toStartOfDay(ts) AS day, countIf(event_type = 'purchase') AS purchases, "
+    "uniqExact(user_id) AS users "
+    "FROM events WHERE ts >= now() - INTERVAL 7 DAY AND ts < now() GROUP BY day ORDER BY day"
+)
+
+
+@pytest.mark.parametrize(
+    "route, jobs",
+    [
+        # partial-agg shuffle, range-sort sample, range shuffle, sorted collect
+        ("sales", 4),
+        # partial-agg shuffle, final agg + top-5 collect
+        ("stock", 2),
+        # one top-10 scan
+        ("recent", 1),
+        # partial-agg shuffle, range-sort sample, range shuffle, sorted collect
+        ("status", 4),
+        # (day, user) agg shuffle, distinct-agg shuffle, top-1000 collect;
+        # register_views reloads all ten tables and starts no job
+        ("sql", 3),
+    ],
+)
+def test_warm_route_jobs(spark, sf_dir, count_jobs, route, jobs):
+    """Jobs per warm request, pinned: no route pays a parquet
+    schema-inference job (catalog.load_table caches the schema)."""
+    if route == "sql":
+        def call():
+            serving_app.get_sql_payload(spark, sf_dir, _ADHOC_SQL)
+    else:
+        def call():
+            serving_app.ROUTES[f"/api/{route}"](spark, sf_dir)
+    call()
+    assert count_jobs(call) == jobs
