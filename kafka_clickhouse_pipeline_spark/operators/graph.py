@@ -628,13 +628,19 @@ def co_purchase_adjacency(li: DataFrame) -> DataFrame:
     )
 
 
-#: Node-id ceiling for the packed-pair fast path: both wedge endpoints
-#: must fit in 32 unsigned bits for (u << 32) | v to be collision-free
-#: in one BIGINT. TPC-H partkeys blow past this near SF ~10,000, so the
-#: gate is checked per-run from the same bounded aggregate that sizes
-#: the wedge shuffle, and oversized graphs fall back to the two-column
-#: pair key (identical results, ~15-20% slower shuffle+agg).
-_PAIR_PACK_MAX_ID = 1 << 32
+#: Bits in the one BIGINT key that carries a wedge pair and, when the
+#: weight depends on it, the wedge center's degree:
+#: k = (u << (vb + db)) | (v << db) | d, with vb = max_id.bit_length()
+#: and db the degree field's width (0 for Jaccard). The pack rule,
+#: ``0 <= min_id and 2 * vb + db <= _PAIR_KEY_BITS``, is checked per
+#: run from the bounded sizes aggregate; a graph that fails it takes
+#: the two-column (u, v) key (identical results, ~15-20% slower
+#: shuffle+agg) and never the kernel. Keys may wrap the sign bit, so
+#: every unpack uses the LOGICAL right shift. Jaccard (db = 0) packs
+#: ids < 2^32. Adamic-Adar's rule also counts the degree bits, for its
+#: fallback key too, so its packed id range is narrower (e.g. ids <
+#: 2^28 at max degree 255).
+_PAIR_KEY_BITS = 64
 
 
 def _expand_wedges(adj: DataFrame, extra: list[str]) -> DataFrame:
@@ -660,249 +666,151 @@ def _expand_wedges(adj: DataFrame, extra: list[str]) -> DataFrame:
     )
 
 
-def _pack_pair() -> "F.Column":
-    """(u << 32) | v as one BIGINT: halves the shuffle row to a single
-    8-byte key (one hash, one comparison per row in the pair
-    aggregate). Only valid under the ``_PAIR_PACK_MAX_ID`` gate."""
-    return (
-        F.shiftleft(F.col("u").cast("long"), 32) + F.col("v").cast("long")
-    ).alias("k")
+def _pack_pair(vb: int, db: int = 0) -> "F.Column":
+    """The wedge key (u << (vb + db)) | (v << db) | d as one BIGINT:
+    a single 8-byte shuffle key (one hash, one comparison per row).
+    Only valid under the ``_PAIR_KEY_BITS`` rule."""
+    k = F.shiftleft(F.col("u").cast("long"), vb + db) + F.shiftleft(
+        F.col("v").cast("long"), db
+    )
+    return (k + F.col("d") if db else k).alias("k")
 
 
-def _unpack_pair(df: DataFrame, key_type: str) -> DataFrame:
-    """Split the packed BIGINT key back into (u, v) with the original
-    node-id column type so downstream joins stay cast-free. The pack
-    is bijective mod 2^64 for ids < 2^32 even when u << 32 wraps the
-    signed long, so unpacking uses the LOGICAL right shift (arithmetic
-    shift would sign-extend wrapped keys)."""
+def _unpack_pair(df: DataFrame, vb: int, key_type: str) -> DataFrame:
+    """Split a packed (u << vb) | v key back into (u, v) with the
+    original node-id column type so downstream joins stay cast-free."""
     return df.select(
-        F.shiftrightunsigned("k", 32).cast(key_type).alias("u"),
-        F.col("k").bitwiseAND(F.lit((1 << 32) - 1)).cast(key_type).alias("v"),
+        F.shiftrightunsigned("k", vb).cast(key_type).alias("u"),
+        F.col("k").bitwiseAND(F.lit((1 << vb) - 1)).cast(key_type).alias("v"),
         *[c for c in df.columns if c != "k"],
     )
 
 
-def _wedge_pairs_reduce_arrow(
+def _wedge_reduce_arrow(
     spark: SparkSession,
-    pairs_packed: DataFrame,
+    packed: DataFrame,
     *,
-    deg: DataFrame,
-    linked: DataFrame,
+    ids,
+    degs,
+    linked,
+    wtab,
+    vb: int,
+    db: int,
+    score,
+    margin: float,
     topk: int,
 ) -> DataFrame:
-    """Per-shuffle-partition vectorized reduce of the packed wedge-pair
-    stream (r11 optimization round, guide sections 4.2 "hand whole
-    batches to vectorized native libraries" and 8 "decide with small
-    rows"): ONE Arrow kernel per partition replaces the planner-forced
-    partial+final HashAggregate pass over the ~Sigma C(d,2) pair rows
-    (each of the 138.6M sf0.1 rows was hashed TWICE in one stage --
-    the partial pass reduces ~nothing because wedge pairs are near
-    unique, see OPTIMIZATION_r11.md "examined and rejected") AND the
-    downstream anti-join + 100M-row top-K scan: the kernel
-    sort-uniques the packed keys (exact integer counts), drops linked
-    pairs by binary search against a per-worker broadcast of the
-    packed linked array, and emits only a provable SUPERSET of the
-    global top-``topk`` contenders (a few dozen rows per partition),
-    so everything downstream of the pair exchange handles
-    |parts| x ~topk rows.
+    """Per-shuffle-partition vectorized reduce of the packed wedge
+    stream, shared by Jaccard and Adamic-Adar. ONE Arrow kernel per
+    partition replaces the planner-forced partial+final HashAggregate
+    over the ~Sigma C(d,2) wedge rows (each of the 138.6M sf0.1 rows
+    was hashed TWICE; wedge pairs are near unique, so the partial pass
+    reduces ~nothing), the anti-join, and the top-K scan over ~100M
+    candidate pairs. Per partition:
 
-    Single-column contract (measured, OPTIMIZATION_r11.md): the ONLY
-    payload crossing the Arrow boundary is the packed 8-byte key.
-    A 140M-row (k BIGINT, w INT) two-column stream measured 2.0x the
-    wall of the k-only stream (71.5 s vs 35.0 s mapInPandas). r12:
-    the weighted Adamic-Adar twin now ALSO runs a single-column
-    kernel by packing the center degree into the same int64
-    (_wedge_weighted_reduce_arrow) instead of carrying a second
-    column. mapInArrow, not mapInPandas: the same k-only
-    micro-benchmark ran 26.2 s as raw Arrow batches vs 35.0 s with
-    the per-batch pandas wrapping.
+    1. count the distinct (u, v, d) keys with ``np.unique``;
+    2. look up each center's weight in ``wtab``, indexed by the key's
+       degree field (a key with ``db = 0`` has no degree bits: every
+       center reads slot 0, so the table is [1] for Jaccard);
+    3. sum counts and count x weight exactly (int64) onto each pair --
+       a key without degree bits already is one pair, so the
+       segment-sum is skipped (461 -> 404 ms on a synthetic 2M-key
+       partition, one core of a 4-vCPU VM);
+    4. drop linked pairs by binary search in the sorted ``linked``
+       pair keys;
+    5. emit a top-``topk`` superset by ``score(n_common, wsum, u, v,
+       degree)``, plus n_union = deg(u) + deg(v) - n_common from the
+       (``ids``, ``degs``) arrays. The score gets the degree lookup
+       rather than its result, so a score that needs no endpoint
+       degree (Adamic-Adar) looks up only the emitted pairs (452 ->
+       229 ms on the same partition).
 
-    Exactness: counts are exact int64; the caller re-derives every
-    OUTPUT value with the same Spark expressions as the fallback
-    shape, so emitted rows are bit-identical -- the kernel only
-    SELECTS. Selection proof (final order is round(c/un, 6) DESC,
-    u, v): with t0 = the partition's topk-th largest unrounded ratio,
-    pairs with ratio >= t0 - 2e-6 are emitted. round(x, 6) moves x by
-    <= 5e-7 (+ulp), so an excluded pair's rounded value sits > 1e-6
-    BELOW the rounded value of >= topk same-partition pairs --
-    strictly dominated before the (u, v) tiebreak can matter. The
-    kernel's ratio is the same correctly-rounded IEEE double division
-    Spark evaluates, so the margin argument is exact.
+    The exchange hashes the pair bits, so every (u, v, *) key of a
+    pair is in one partition and the sums are global. Two membership
+    guards fail loudly instead of silently reading a neighbor's
+    entry: a pair node missing from ``ids`` (searchsorted returns an
+    insertion point) and a center degree with no weight.
 
-    State: the packed linked array (8 B/edge) and the (ids, degree)
-    arrays (16 B/node) ride one sc.broadcast fetched once per
-    WORKER -- the same data volume the fallback shape already
-    broadcasts as JVM hash relations under the identical
-    NODE_JACCARD_BROADCAST_MAX_* gates; callers must gate this path
-    on those same bounds. Per-task state is the partition's pair
-    slice (~_WEDGE_PAIRS_PER_TASK x 8 B, bounded by the same
-    wedge-count-derived ``parts`` at any scale)."""
+    Single-column contract (OPTIMIZATION_r11.md): the only payload
+    crossing the Arrow boundary is the packed int64 key; a 140M-row
+    (k BIGINT, w INT) stream measured 2.0x the k-only wall, which is
+    why the degree rides inside the key. mapInArrow, not mapInPandas:
+    26.2 s vs 35.0 s on the same k-only stream.
+
+    Selection proof: the final order is (f(score) DESC, u, v), where
+    f moves a score by at most ``margin / 2`` -- Jaccard orders by
+    round(n_common / n_union, 6) (|f(x) - x| <= 5e-7 + ulp, margin
+    2e-6), Adamic-Adar by the exact integer wsum itself (f = identity,
+    margin 0). With t0 the partition's topk-th largest score, the
+    kernel keeps every pair with score >= t0 - margin. An excluded
+    pair has f(s) <= s + margin/2 < t0 - margin/2 <= f(s') for each of
+    the >= topk same-partition pairs with s' >= t0, so it can never
+    reach the global top-K, whatever the (u, v) tiebreak. The kernel's ratio is the
+    same correctly rounded IEEE division Spark evaluates, and counts
+    and weight sums are order-independent integer sums, so the caller
+    re-deriving every output value in Spark gets bit-identical rows.
+
+    State: the linked keys (8 B/edge) and the (ids, degs) arrays
+    (16 B/node) ride one sc.broadcast fetched once per WORKER -- the
+    data volume the fallback broadcasts as JVM hash relations under
+    the same NODE_JACCARD_BROADCAST_MAX_* gates. Per-task state is
+    the partition's key slice (~_WEDGE_PAIRS_PER_TASK x 8 B)."""
     import numpy as np
     import pyarrow as pa
 
-    lk = np.sort(
-        linked.select(_pack_pair())
-        .toPandas()["k"]
-        .to_numpy()
-        .astype(np.int64, copy=False)
-    )
-    dp = deg.toPandas()
-    ids = dp["src"].to_numpy().astype(np.int64, copy=False)
-    order = np.argsort(ids)
-    deg_ids = ids[order]
-    deg_vals = dp["d"].to_numpy().astype(np.int64, copy=False)[order]
-    bc = spark.sparkContext.broadcast((lk, deg_ids, deg_vals, int(topk)))
+    bc = spark.sparkContext.broadcast((ids, degs, linked, wtab))
+    sdb, svb = np.uint64(db), np.uint64(vb)
+    dmask, vmask = np.uint64((1 << db) - 1), np.uint64((1 << vb) - 1)
 
     def reduce_part(batches):
-        lk_, ids_, dvals_, k_top = bc.value
+        ids_, degs_, lk_, wtab_ = bc.value
         ks = [b.column(0).to_numpy(zero_copy_only=False) for b in batches]
-        if not ks:
+        if not ks or not sum(k.size for k in ks):
             return
-        k = np.concatenate(ks)
-        if k.size == 0:
-            return
-        uk, cnt = np.unique(k, return_counts=True)
-        cnt = cnt.astype(np.int64, copy=False)
-        if lk_.size and uk.size:
-            pos = np.minimum(np.searchsorted(lk_, uk), lk_.size - 1)
-            keep = lk_[pos] != uk
-            uk, cnt = uk[keep], cnt[keep]
-        if uk.size == 0:
-            return
-        ku = uk.view(np.uint64)
-        u = (ku >> np.uint64(32)).astype(np.int64)
-        v = (ku & np.uint64(0xFFFFFFFF)).astype(np.int64)
-        qu = np.minimum(np.searchsorted(ids_, u), ids_.size - 1)
-        qv = np.minimum(np.searchsorted(ids_, v), ids_.size - 1)
-        # membership guard (VERDICT r11 #8): searchsorted returns an
-        # insertion point, so a pair node absent from the degree
-        # broadcast would silently read a NEIGHBOR's degree -- fail
-        # loudly instead (currently unreachable: deg spans all adj0
-        # src and the graph is symmetric, but one refactor away).
-        if not ((ids_[qu] == u).all() and (ids_[qv] == v).all()):
-            raise AssertionError(
-                "wedge pair node missing from degree broadcast"
-            )
-        du = dvals_[qu]
-        dv = dvals_[qv]
-        n_union = du + dv - cnt
-        if cnt.size > k_top:
-            ratio = cnt / n_union
-            t0 = np.partition(ratio, ratio.size - k_top)[ratio.size - k_top]
-            sel = ratio >= t0 - 2e-6
-            u, v, cnt, n_union = u[sel], v[sel], cnt[sel], n_union[sel]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(u), pa.array(v), pa.array(cnt), pa.array(n_union)],
-            ["u", "v", "n_common", "n_union"],
+        uk, n_common = np.unique(
+            np.concatenate(ks).view(np.uint64), return_counts=True
         )
-
-    return pairs_packed.mapInArrow(
-        reduce_part, "u long, v long, n_common long, n_union long"
-    )
-
-
-def _wedge_weighted_reduce_arrow(
-    spark: SparkSession,
-    pairs_packed: DataFrame,
-    *,
-    weight_by_degree: dict[int, int],
-    linked: DataFrame,
-    vbits: int,
-    dbits: int,
-    topk: int,
-) -> DataFrame:
-    """Weighted (Adamic-Adar) twin of ``_wedge_pairs_reduce_arrow``
-    (r12). The r11 round measured the obvious weighted kernel -- a
-    (k BIGINT, w INT) two-column stream -- at 2.0x the k-only stream's
-    wall across the Arrow boundary and kept the JVM hash-aggregate for
-    AA. This kernel removes that cost by packing the wedge CENTER's
-    DEGREE into the same single BIGINT as the pair:
-
-        k = (u << (vbits + dbits)) | (v << dbits) | d
-
-    (caller guarantees ubits + vbits + dbits <= 63 from the same
-    bounded aggregate that sizes the wedge shuffle). The ONLY payload
-    crossing the boundary is still one int64 column -- the r11
-    negative does not apply. Per partition: np.unique over the packed
-    (u, v, d) keys (exact int64 counts), weight lookup from
-    ``weight_by_degree`` -- the (degree -> nano-quantized int weight)
-    map COMPUTED BY SPARK EXPRESSIONS on the driver, so the weights
-    are bit-identical to the fallback's JVM floor(1/ln(d)*1e9+0.5)
-    and no executor-side libm enters the result -- then an exact
-    integer segment-sum onto the distinct (u, v) pairs, linked-pair
-    drop by binary search, and a provable top-``topk`` superset.
-
-    Exactness: aa = sum of int64 weights and n_common = sum of int64
-    counts are order-independent exact integer sums, so emitted values
-    are bit-identical to the fallback's JVM aggregate. Selection is
-    EXACT (no epsilon, unlike the jaccard kernel's rounded-double
-    margin): the final order is (aa DESC, u, v); with t0 = the
-    partition's topk-th largest aa, every excluded pair (aa < t0) is
-    strictly dominated by >= topk same-partition pairs before the
-    (u, v) tiebreak can matter."""
-    import numpy as np
-    import pyarrow as pa
-
-    lk = np.sort(
-        linked.select(_pack_pair())
-        .toPandas()["k"]
-        .to_numpy()
-        .astype(np.int64, copy=False)
-    )
-    max_d = max(weight_by_degree) if weight_by_degree else 1
-    wtab = np.zeros(max_d + 1, dtype=np.int64)
-    for d, w in weight_by_degree.items():
-        wtab[d] = w
-    bc = spark.sparkContext.broadcast(
-        (lk, wtab, int(vbits), int(dbits), int(topk))
-    )
-
-    def reduce_part(batches):
-        lk_, wtab_, vb, db, k_top = bc.value
-        ks = [b.column(0).to_numpy(zero_copy_only=False) for b in batches]
-        if not ks:
-            return
-        k = np.concatenate(ks)
-        if k.size == 0:
-            return
-        uk, cnt = np.unique(k, return_counts=True)
-        cnt = cnt.astype(np.int64, copy=False)
-        ku = uk.view(np.uint64)
-        d = (ku & np.uint64((1 << db) - 1)).astype(np.int64)
-        pair = (ku >> np.uint64(db)).astype(np.int64)  # (u << vbits) | v
-        if (d >= wtab_.size).any() or (wtab_[d] == 0).any():
+        n_common = n_common.astype(np.int64, copy=False)
+        w = wtab_[uk & dmask]
+        if (w == 0).any():
             raise AssertionError("wedge center degree missing from weight table")
-        w = wtab_[d] * cnt
-        # segment-sum the (count, weighted) runs onto distinct pairs:
-        # uk is sorted, so equal pairs are adjacent
-        boundary = np.empty(pair.size, dtype=bool)
-        boundary[0] = True
-        np.not_equal(pair[1:], pair[:-1], out=boundary[1:])
-        idx = np.flatnonzero(boundary)
-        pairs_u = pair[idx]
-        n_common = np.add.reduceat(cnt, idx)
-        aa = np.add.reduceat(w, idx)
-        pu = pairs_u.view(np.uint64)
-        u = (pu >> np.uint64(vb)).astype(np.int64)
-        v = (pu & np.uint64((1 << vb) - 1)).astype(np.int64)
-        if lk_.size and u.size:
-            k32 = ((u.view(np.uint64) << np.uint64(32)) | v.view(np.uint64)).view(np.int64)
-            pos = np.minimum(np.searchsorted(lk_, k32), lk_.size - 1)
-            keepm = lk_[pos] != k32
-            u, v, n_common, aa = u[keepm], v[keepm], n_common[keepm], aa[keepm]
-        if u.size == 0:
+        wsum = w * n_common
+        pair = uk >> sdb
+        if db:
+            # degree bits split a pair's wedges over several keys; uk is
+            # sorted, so they are adjacent: sum them onto the pair
+            idx = np.flatnonzero(np.r_[True, pair[1:] != pair[:-1]])
+            pair = pair[idx]
+            n_common = np.add.reduceat(n_common, idx)
+            wsum = np.add.reduceat(wsum, idx)
+        if lk_.size:
+            pos = np.minimum(np.searchsorted(lk_, pair), lk_.size - 1)
+            keep = lk_[pos] != pair
+            pair, n_common, wsum = pair[keep], n_common[keep], wsum[keep]
+        if pair.size == 0:
             return
-        if aa.size > k_top:
-            t0 = np.partition(aa, aa.size - k_top)[aa.size - k_top]
-            sel = aa >= t0
-            u, v, n_common, aa = u[sel], v[sel], n_common[sel], aa[sel]
+        u = (pair >> svb).astype(np.int64)
+        v = (pair & vmask).astype(np.int64)
+
+        def degree(x):
+            q = np.minimum(np.searchsorted(ids_, x), ids_.size - 1)
+            if not (ids_[q] == x).all():
+                raise AssertionError("wedge pair node missing from degree broadcast")
+            return degs_[q]
+
+        if pair.size > topk:
+            s = score(n_common, wsum, u, v, degree)
+            t0 = np.partition(s, s.size - topk)[s.size - topk]
+            sel = s >= t0 - margin
+            u, v, n_common, wsum = u[sel], v[sel], n_common[sel], wsum[sel]
+        n_union = degree(u) + degree(v) - n_common
         yield pa.RecordBatch.from_arrays(
-            [pa.array(u), pa.array(v), pa.array(n_common), pa.array(aa)],
-            ["u", "v", "n_common", "aa"],
+            [pa.array(a) for a in (u, v, n_common, n_union, wsum)],
+            ["u", "v", "n_common", "n_union", "wsum"],
         )
 
-    return pairs_packed.mapInArrow(
-        reduce_part, "u long, v long, n_common long, aa long"
+    return packed.mapInArrow(
+        reduce_part, "u long, v long, n_common long, n_union long, wsum long"
     )
 
 
@@ -1598,18 +1506,178 @@ _WEDGE_PAIRS_PER_TASK = 2_000_000
 NODE_JACCARD_BROADCAST_MAX_NODES = 5_000_000
 NODE_JACCARD_BROADCAST_MAX_EDGES = 50_000_000
 
-#: r12 adjudication switch (VERDICT r11 #2): selects the in-kernel
-#: Arrow reduce vs the JVM hash-aggregate fallback WITHOUT touching
-#: the fallback's own broadcast gates (forcing the edge gate to -1,
-#: as the equality tests do, also strips the fallback's broadcasts --
-#: fine for bit-equality pins, unfair for a wall-clock A/B). The
-#: idle gate-toggled A/B is recorded in OPTIMIZATION_r12.md.
-WEDGE_KERNEL_ENABLED = True
 
-#: r12: the weighted (Adamic-Adar) wedge kernel's switch, same role as
-#: WEDGE_KERNEL_ENABLED (A/B toggle that leaves the fallback's own
-#: broadcasts intact). See _wedge_weighted_reduce_arrow.
-AA_KERNEL_ENABLED = True
+def _aa_weight(d: "F.Column") -> "F.Column":
+    """The Adamic-Adar weight of a center of degree d >= 2, 1/ln(d)
+    quantized to nano-units as floor(1/ln(d) * 1e9 + 0.5). INT, not
+    long: d >= 2 bounds it by 1,442,695,041 < 2^31, so it rides the
+    wedge exchange as 4 bytes and sum() still promotes to an exact
+    long (r11, guide section 2.3 "narrower types across the big
+    shuffle")."""
+    return F.floor(
+        F.lit(1.0) / F.log(d.cast("double")) * F.lit(1000000000.0) + F.lit(0.5)
+    ).cast("int")
+
+
+def _wedge_link_scores(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    max_degree: int | None,
+    _adj: DataFrame | None,
+    weight,
+    degree_bits: bool,
+    score,
+    margin: float,
+) -> DataFrame:
+    """The wedge path shared by q_node_jaccard and q_adamic_adar:
+    (u, v, n_common, n_union, wsum) BIGINT rows for the co-purchase
+    pairs u < v that share a neighbor but are not linked -- every such
+    pair, or on the kernel path a provable superset of the top
+    NODE_JACCARD_TOPK by ``score``. n_common counts the shared wedge
+    CENTERS (those of degree <= ``max_degree``), n_union is
+    deg(u) + deg(v) - n_common, and wsum sums ``weight(deg(center))``
+    over them. The two queries differ only in these arguments: the
+    weight, whether the key carries the center degree
+    (``degree_bits``), and the kernel's ``score`` and selection
+    ``margin`` (see _wedge_reduce_arrow).
+
+    Prep (r11): everything derives from ONE checkpointed adjacency
+    frame (``_adj``, or built here from lineitem; |V| array rows) and
+    one bounded ``sizes`` collect. The wedge count under the cap sizes
+    the shuffle; the node/edge counts, id bounds (the pack rule) and
+    everything broadcast span the WHOLE frame, hubs above the cap
+    included -- a capped-out hub is still a wedge endpoint (ADVICE r6)
+    and still in the degree and linked broadcasts."""
+    if _adj is not None:
+        adj0 = _adj
+    else:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey"
+        )
+        adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+    dsz = F.size("nbrs").cast("long")
+    keep = F.lit(True) if max_degree is None else dsz <= F.lit(max_degree)
+    sizes = adj0.agg(
+        F.coalesce(F.sum(F.when(keep, dsz * (dsz - 1))), F.lit(0)).alias("w2"),
+        F.count(F.lit(1)).alias("nodes"),
+        F.coalesce(F.sum(dsz), F.lit(0)).alias("m2"),
+        F.min("src").alias("min_id"),
+        F.max("src").alias("max_id"),
+        F.max(F.when(keep, dsz)).alias("maxd"),
+    ).collect()[0]
+    parts = max(
+        spark.sparkContext.defaultParallelism,
+        min(4096, sizes.w2 // 2 // _WEDGE_PAIRS_PER_TASK + 1),
+    )
+    vb = int(sizes.max_id or 0).bit_length()
+    db = int(sizes.maxd or 0).bit_length() if degree_bits else 0
+    # one pack rule for the kernel key and the fallback key; it narrows
+    # Adamic-Adar's fallback id range (see _PAIR_KEY_BITS)
+    packable = (
+        sizes.max_id is not None
+        and 0 <= sizes.min_id
+        and 2 * vb + db <= _PAIR_KEY_BITS
+    )
+    small_nodes = sizes.nodes <= NODE_JACCARD_BROADCAST_MAX_NODES
+    small_edges = sizes.m2 // 2 <= NODE_JACCARD_BROADCAST_MAX_EDGES
+    adj = adj0 if max_degree is None else adj0.filter(keep)
+    # Round-robin the centers over the wedge-derived width before
+    # expanding: the adjacency rows are few bytes but fan out to C(d,2)
+    # pair rows each, work AQE's byte heuristic cannot see (r11: 12
+    # tasks / 149 s executor time on 32 cores, 20 idle).
+    pairs = _expand_wedges(
+        adj.filter(dsz >= 2)
+        .select("nbrs", dsz.alias("d"), weight(dsz).alias("w"))
+        .repartition(parts),
+        ["d", "w"],
+    )
+    # The kernel runs wherever its broadcasts fit; the gates count the
+    # whole graph, since hubs above the cap are in both broadcasts.
+    # Above them (the 100 TB regime) the JVM hash-aggregate below is
+    # the only path. Measured reason for the kernel (r12 interleaved
+    # A/B at sf0.1, OPTIMIZATION_r12.md sections 2 and 5a):
+    # q_node_jaccard_capped kernel min 15.9 s vs fallback min 31.1 s;
+    # q_adamic_adar_capped fallback median 1.95x the kernel's time.
+    if packable and small_nodes and small_edges:
+        import numpy as np
+
+        # one collect gives the degree arrays, the packed linked keys
+        # and the (degree -> weight) table, the weights computed by the
+        # same Spark expression the fallback sums (no executor libm)
+        nodes = adj0.select(
+            F.col("src").cast("long").alias("src"),
+            dsz.alias("d"),
+            F.when(keep & (dsz >= 2), weight(dsz)).cast("long").alias("w"),
+            F.filter("nbrs", lambda x: x > F.col("src")).alias("hi"),
+        ).toArrow()
+        src = nodes.column("src").to_numpy()
+        d = nodes.column("d").to_numpy()
+        w = nodes.column("w").fill_null(0).to_numpy()
+        hi = nodes.column("hi").combine_chunks()
+        linked = np.sort(
+            np.repeat(src, hi.value_lengths().to_numpy()).astype(np.uint64)
+            << np.uint64(vb)
+            | hi.flatten().to_numpy().astype(np.uint64)
+        )
+        wtab = np.zeros(1 << db, dtype=np.int64)
+        wtab[d[w > 0] & ((1 << db) - 1)] = w[w > 0]
+        order = np.argsort(src)
+        return _wedge_reduce_arrow(
+            spark,
+            pairs.select(_pack_pair(vb, db)).repartition(
+                parts, F.shiftrightunsigned("k", db)
+            ),
+            ids=src[order],
+            degs=d[order],
+            linked=linked,
+            wtab=wtab,
+            vb=vb,
+            db=db,
+            score=score,
+            margin=margin,
+            topk=NODE_JACCARD_TOPK,
+        )
+    aggs = [
+        F.count(F.lit(1)).alias("n_common"),
+        F.sum("w").cast("long").alias("wsum"),
+    ]
+    if packable:
+        common = _unpack_pair(
+            pairs.select(_pack_pair(vb), "w")
+            .repartition(parts, "k")
+            .groupBy("k")
+            .agg(*aggs),
+            vb,
+            dict(adj0.dtypes)["src"],
+        )
+    else:
+        common = (
+            pairs.repartition(parts, "u", "v").groupBy("u", "v").agg(*aggs)
+        )
+    linked = adj0.select(
+        F.col("src").alias("u"), F.explode("nbrs").alias("v")
+    ).filter(F.col("u") < F.col("v"))
+    du = adj0.select(F.col("src").alias("u"), F.size("nbrs").alias("du"))
+    dv = adj0.select(F.col("src").alias("v"), F.size("nbrs").alias("dv"))
+    if small_edges:
+        linked = F.broadcast(linked)
+    if small_nodes:
+        du, dv = F.broadcast(du), F.broadcast(dv)
+    return (
+        common.join(linked, ["u", "v"], "left_anti")
+        .join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.col("u").cast("long").alias("u"),
+            F.col("v").cast("long").alias("v"),
+            F.col("n_common").cast("long").alias("n_common"),
+            (F.col("du") + F.col("dv") - F.col("n_common"))
+            .cast("long")
+            .alias("n_union"),
+            "wsum",
+        )
+    )
 
 
 def q_node_jaccard(
@@ -1617,7 +1685,6 @@ def q_node_jaccard(
     sf_dir: str,
     *,
     max_degree: int | None = None,
-    _edges: DataFrame | None = None,
     _adj: DataFrame | None = None,
 ) -> DataFrame:
     """Common-neighbor link prediction over the co-purchase graph: for
@@ -1626,27 +1693,24 @@ def q_node_jaccard(
     the classic "products bought alongside the same things but never
     together yet" recommender signal. Top-K pairs by similarity.
 
-    Plan: candidate pairs are generated by WEDGE EXPANSION from the
-    per-node adjacency array (the co_purchase_edges grouping reused:
-    one shuffle to adjacency, pair expansion map-side), counted per
-    pair to get |N(u) n N(v)| -- the wedge-center pass touches each
-    2-path exactly once, there is NO edge-list self-join, and the
-    wedge shuffle width scales with the EXACT wedge count sum d*(d-1)/2
-    (one bounded scalar off the degree frame, the triangle-census
-    sizing pattern). Expansion is sorted-slice (emit exactly C(d,2)
-    rows, never the d^2 generate-then-filter stream) and the pair
-    crosses the shuffle as ONE packed BIGINT key when node ids fit in
-    32 bits (per-run gate off the same bounded aggregate; oversized
-    id spaces -- TPC-H partkeys near SF 10k -- fall back to the
-    two-column key, identical results). Measured at sf0.1: 35-50 s
-    warm -> ~28 s with far tighter variance. Everything DOWNSTREAM of
-    the pair aggregate is
-    join-shuffle-free: the (node, degree) frame and the undirected
-    edge list are size-gated BROADCASTs (dense graphs make the
+    Plan (_wedge_link_scores, shared with q_adamic_adar): candidate
+    pairs are generated by WEDGE EXPANSION from the per-node adjacency
+    array -- the wedge-center pass touches each 2-path exactly once,
+    there is NO edge-list self-join, and the wedge shuffle width
+    scales with the EXACT wedge count sum d*(d-1)/2. Expansion is
+    sorted-slice (exactly C(d,2) rows, never the d^2
+    generate-then-filter stream) and the pair crosses the shuffle as
+    ONE packed BIGINT key when node ids fit (oversized id spaces --
+    TPC-H partkeys near SF 10k -- fall back to the two-column key,
+    identical results). Measured at sf0.1: 35-50 s warm -> ~28 s with
+    far tighter variance. Below the broadcast gates one Arrow kernel
+    per partition counts, prunes linked pairs and pre-selects a top-K
+    superset (_wedge_reduce_arrow, weight 1, no degree bits); above
+    them the pair hash-aggregate is followed by join-shuffle-free
+    size-gated BROADCAST degree/anti joins (dense graphs make the
     candidate-pair frame ~n^2-sized -- 101M pairs at sf0.1 -- so
-    re-shuffling it three times for degree/degree/anti joins is the
-    dominant cost; 8-byte-per-node broadcasts are not), and the top-K
-    is TakeOrderedAndProject (map-side heap, no full sort). Jaccard is
+    re-shuffling it three times is the dominant cost). The top-K is
+    TakeOrderedAndProject (map-side heap, no full sort). Jaccard is
     one exact integer ratio evaluated in doubles (IEEE-identical both
     engines) with (u, v) tiebreak.
 
@@ -1656,146 +1720,25 @@ def q_node_jaccard(
     the cap, the standard hub exclusion -- a node co-bought with
     everything contributes near-zero similarity signal but dominates
     the pair volume. Default None keeps the oracle contract exact.
-    Past the broadcast gates the degree/anti joins fall back to
-    shuffle joins on the pair key -- correct, just no longer free.
-    ``_edges`` / ``_adj`` let wrappers hand in an already-built edge
-    or adjacency frame so the co-purchase self-group is not computed
-    twice.
-
-    Prep (r11, guide section 1.2 "don't compute things you throw
-    away"): everything before the expansion -- degree, the capped
-    adjacency, the wedge census, the pack-gate bounds, the linked
-    anti-join set -- derives from ONE checkpointed adjacency frame
-    (|V| array rows) instead of the flat edge checkpoint the earlier
-    shape re-aggregated per derivation (6-7 groupBy passes over a
-    ~200 MB deserialized block at sf0.1). The census and the bounds
-    collapse into a single driver collect: the bounds must cover the
-    UNFILTERED node universe under the cap (a dropped hub above 2^32
-    must still disable packing, ADVICE r6), so the aggregate runs
-    over the full frame with the cap as a conditional inside."""
-    if _adj is not None:
-        adj0 = _adj
-    elif _edges is not None:
-        adj0 = (
-            _edges.groupBy("src")
-            .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
-            .transform(cut_lineage)
-        )
-    else:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        adj0 = co_purchase_adjacency(li).transform(cut_lineage)
-    deg = adj0.select("src", F.size("nbrs").alias("d"))
-    adj = adj0
-    if max_degree is not None:
-        adj = adj.filter(F.size("nbrs") <= max_degree)
-    # exact wedge count (bounded driver scalars) sizes the pair shuffle
-    # and decides the broadcast gates; min/max span ALL nodes (hubs
-    # above the cap included) so the pack gate stays collision-safe
-    keep = (
-        F.lit(True)
-        if max_degree is None
-        else (F.size("nbrs") <= F.lit(max_degree))
-    )
-    dsz = F.size("nbrs").cast("long")
-    sizes = adj0.agg(
-        F.coalesce(
-            F.sum(F.when(keep, (dsz * (dsz - 1)).cast("long"))) / 2,
-            F.lit(0),
-        ).alias("wedges"),
-        F.coalesce(F.sum(F.when(keep, F.lit(1))), F.lit(0)).alias("nodes"),
-        F.coalesce(F.sum(F.when(keep, dsz)), F.lit(0)).alias("m2"),
-        F.min("src").alias("min_id"),
-        F.max("src").alias("max_id"),
-    ).collect()[0]
-    min_id, max_id = sizes.min_id, sizes.max_id
-    parts = max(
-        spark.sparkContext.defaultParallelism,
-        min(4096, int(sizes.wedges) // _WEDGE_PAIRS_PER_TASK + 1),
-    )
-    # wedge expansion: for each center, all u < v neighbor pairs
-    # (sorted-slice: exactly C(d,2) rows). The adjacency aggregate is
-    # small in BYTES (one array row per node), so AQE coalesces it to
-    # a handful of partitions -- but the expansion stage downstream
-    # fans each row out to C(d,2) pair rows, work AQE's byte heuristic
-    # cannot see (measured r11: 12 tasks / 149 s executor time on 32
-    # cores, 20 idle). Spread the centers round-robin over the same
-    # wedge-count-derived width as the pair shuffle before expanding
-    # (guide section 2: size partitioning from the data, here the
-    # exact wedge count already in hand).
-    pairs = _expand_wedges(adj.repartition(parts), [])
-    key_type = dict(adj0.dtypes)["src"]
-    packable = (
-        max_id is not None
-        and 0 <= int(min_id)
-        and int(max_id) < _PAIR_PACK_MAX_ID
-    )
-    linked = (
-        adj0.select(F.col("src").alias("u"), F.explode("nbrs").alias("v"))
-        .filter(F.col("u") < F.col("v"))
-    )
+    ``_adj`` lets wrappers hand in an already-built adjacency frame so
+    the co-purchase self-group is not computed twice."""
     jac = F.round(
         F.col("n_common").cast("double") / F.col("n_union").cast("double"), 6
     )
-    # In-kernel reduce fast path (r11 opt round): gated on the SAME
-    # node/edge bounds that authorize the fallback's JVM broadcasts of
-    # the identical degree/linked frames -- above them (the 100 TB
-    # regime) the hash-aggregate + shuffle-join shape below is kept.
-    if (
-        WEDGE_KERNEL_ENABLED
-        and packable
-        and sizes.nodes <= NODE_JACCARD_BROADCAST_MAX_NODES
-        and sizes.m2 is not None
-        and sizes.m2 // 2 <= NODE_JACCARD_BROADCAST_MAX_EDGES
-    ):
-        reduced = _wedge_pairs_reduce_arrow(
-            spark,
-            pairs.select(_pack_pair()).repartition(parts, "k"),
-            deg=deg,
-            linked=linked,
-            topk=NODE_JACCARD_TOPK,
-        )
-        return (
-            reduced.select("u", "v", "n_common", "n_union", jac.alias("jaccard"))
-            .orderBy(F.col("jaccard").desc(), "u", "v")
-            .limit(NODE_JACCARD_TOPK)
-        )
-    if packable:
-        common = _unpack_pair(
-            pairs.select(_pack_pair())
-            .repartition(parts, "k")
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("n_common")),
-            key_type,
-        )
-    else:
-        common = (
-            pairs.repartition(parts, "u", "v")
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    if sizes.m2 is not None and sizes.m2 // 2 <= NODE_JACCARD_BROADCAST_MAX_EDGES:
-        linked = F.broadcast(linked)
-    du = deg.select(F.col("src").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("src").alias("v"), F.col("d").alias("dv"))
-    if sizes.nodes <= NODE_JACCARD_BROADCAST_MAX_NODES:
-        du, dv = F.broadcast(du), F.broadcast(dv)
-    candidates = common.join(linked, ["u", "v"], "left_anti")
-    scored = (
-        candidates.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.col("u").cast("long").alias("u"),
-            F.col("v").cast("long").alias("v"),
-            "n_common",
-            (F.col("du") + F.col("dv") - F.col("n_common")).cast("long").alias(
-                "n_union"
-            ),
-        )
-    )
     return (
-        scored.select("u", "v", "n_common", "n_union", jac.alias("jaccard"))
+        _wedge_link_scores(
+            spark,
+            sf_dir,
+            max_degree=max_degree,
+            _adj=_adj,
+            weight=lambda d: F.lit(1),
+            degree_bits=False,
+            score=lambda n_common, wsum, u, v, degree: (
+                n_common / (degree(u) + degree(v) - n_common)
+            ),
+            margin=2e-6,
+        )
+        .select("u", "v", "n_common", "n_union", jac.alias("jaccard"))
         .orderBy(F.col("jaccard").desc(), "u", "v")
         .limit(NODE_JACCARD_TOPK)
     )
@@ -2132,7 +2075,6 @@ def q_node_jaccard_minhash(
     spark: SparkSession,
     sf_dir: str,
     *,
-    _edges: DataFrame | None = None,
     _adj: DataFrame | None = None,
     bands: int = WEDGE_MINHASH_BANDS,
     rows: int = WEDGE_MINHASH_ROWS,
@@ -2199,12 +2141,6 @@ def q_node_jaccard_minhash(
     """
     if _adj is not None:
         adj0 = _adj
-    elif _edges is not None:
-        adj0 = (
-            _edges.groupBy("src")
-            .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
-            .transform(cut_lineage)
-        )
     else:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
@@ -2790,7 +2726,6 @@ def q_adamic_adar(
     sf_dir: str,
     *,
     max_degree: int | None = None,
-    _edges: DataFrame | None = None,
     _adj: DataFrame | None = None,
 ) -> DataFrame:
     """Adamic-Adar link prediction over the co-purchase graph: for
@@ -2803,225 +2738,57 @@ def q_adamic_adar(
     Adar 2003); on skewed graphs the weighting is what separates real
     affinity from hub noise.
 
-    Plan: identical wedge-expansion shape to q_node_jaccard (adjacency
-    arrays -> map-side pair explosion sized by the exact wedge count,
-    one pair shuffle, size-gated broadcast anti-join against the edge
-    list) with the per-CENTER weight 1/ln(deg(center)) attached to
-    each wedge before expansion, so the pair aggregate is a single
-    SUM -- no extra join.
+    Plan: q_node_jaccard's wedge path (_wedge_link_scores) with the
+    per-CENTER weight 1/ln(deg(center)) summed per pair. Below the
+    broadcast gates the center DEGREE rides inside the packed key and
+    the Arrow kernel resolves its weight from a Spark-computed table,
+    so the boundary carries a single int64 column (the r11 two-column
+    negative does not apply); above them the weight rides each wedge
+    into the JVM pair aggregate as one SUM.
 
     Exactness: each weight is quantized to BIGINT NANO-UNITS with
-    floor(1/ln(d) * 1e9 + 0.5), so the pair aggregate is an exact
-    long sum, order-independent, and the shuffled weight is 8 bytes
-    instead of a 16-byte decimal across the ~wedge-count-sized
-    exchange. Caveat (ADVICE r5): /, * and floor are correctly
-    rounded on both engines, but ln is only FAITHFULLY rounded in
-    JVM Math.log and DuckDB ln() -- a 1-ulp divergence where
-    1/ln(d)*1e9+0.5 sits within ~1 ulp of an integer boundary could
-    flip one quantized weight. tests/test_round6_ops.py guards the
-    observed degree sets (sf0.001/sf0.01) against that boundary; at
-    other scales the strict sweep would surface a flip as a hash
-    mismatch on the affected pair. The output renders the nano sum
-    as a fixed-scale string via integer div/mod + lpad.
+    floor(1/ln(d) * 1e9 + 0.5) (_aa_weight), so the pair aggregate is
+    an exact long sum, order-independent. Caveat (ADVICE r5): /, * and
+    floor are correctly rounded on both engines, but ln is only
+    FAITHFULLY rounded in JVM Math.log and DuckDB ln() -- a 1-ulp
+    divergence where 1/ln(d)*1e9+0.5 sits within ~1 ulp of an integer
+    boundary could flip one quantized weight. tests/test_round6_ops.py
+    guards the observed degree sets (sf0.001/sf0.01) against that
+    boundary; at other scales the strict sweep would surface a flip
+    as a hash mismatch on the affected pair. The output renders the
+    nano sum as a fixed-scale string via integer div/mod + lpad.
 
     ``max_degree`` is the hub-exclusion knob (mirrors q_node_jaccard,
     VERDICT r5 #3): drop wedge CENTERS above the cap before pair
     expansion -- on skewed graphs hub wedges are C(d,2)-quadratic
     pair volume carrying ~zero AA weight each (1/ln(d) -> 0), so the
     cap removes the scale-killer while barely moving top-K scores.
-    Default None keeps the registered oracle contract exact.
-
-    Prep mirrors q_node_jaccard (r11): one checkpointed adjacency
-    frame feeds the degree weights, the census+bounds single collect,
-    the expansion and the linked anti-join set -- no repeated passes
-    over a flat edge checkpoint.
-
-    r12: below the same broadcast gates (plus a 63-bit pack budget),
-    the pair reduce is ONE Arrow kernel per partition
-    (_wedge_weighted_reduce_arrow) -- the center DEGREE rides inside
-    the packed key, so the boundary carries a single int64 column and
-    the r11 two-column negative does not apply. Interleaved A/B at
-    sf0.1: fallback/kernel median 1.95x (min 31.1 -> 15.7 s)."""
-    if _adj is not None:
-        adj0 = _adj
-    elif _edges is not None:
-        adj0 = (
-            _edges.groupBy("src")
-            .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
-            .transform(cut_lineage)
-        )
-    else:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        adj0 = co_purchase_adjacency(li).transform(cut_lineage)
-    adj = adj0
-    if max_degree is not None:
-        adj = adj.filter(F.size("nbrs") <= max_degree)
-    adjw = adj.select(
-        "nbrs",
-        # int32, not long: d >= 2 bounds the nano-quantized weight by
-        # floor(1e9/ln 2 + .5) = 1,442,695,041 < 2^31, so the weight
-        # rides the ~wedge-count-sized exchange as 4 bytes; Spark's
-        # sum() promotes int to long, making the pair aggregate the
-        # same exact long sum as before (r11, guide section 2.3
-        # "narrower types across the big shuffle").
-        F.floor(
-            F.lit(1.0) / F.log(F.size("nbrs").cast("double"))
-            * F.lit(1000000000.0)
-            + F.lit(0.5)
-        )
-        .cast("int")
-        .alias("w"),
-    ).filter(F.size("nbrs") >= 2)
-    keep = (
-        F.lit(True)
-        if max_degree is None
-        else (F.size("nbrs") <= F.lit(max_degree))
-    )
-    dsz = F.size("nbrs").cast("long")
-    sizes = adj0.agg(
-        F.coalesce(
-            F.sum(F.when(keep, dsz * (dsz - 1))) / 2,
-            F.lit(0),
-        ).alias("wedges"),
-        F.coalesce(F.sum(F.when(keep, F.lit(1))), F.lit(0)).alias("nodes"),
-        F.coalesce(F.sum(F.when(keep, dsz)), F.lit(0)).alias("m2"),
-        F.min("src").alias("min_id"),
-        F.max("src").alias("max_id"),
-        F.max(F.when(keep, dsz)).alias("maxd"),
-    ).collect()[0]
-    min_id, max_id = sizes.min_id, sizes.max_id
-    parts = max(
-        spark.sparkContext.defaultParallelism,
-        min(4096, int(sizes.wedges) // _WEDGE_PAIRS_PER_TASK + 1),
-    )
-    key_type = dict(adj0.dtypes)["src"]
-    packable = (
-        max_id is not None
-        and 0 <= int(min_id)
-        and int(max_id) < _PAIR_PACK_MAX_ID
-    )
-    linked = (
-        adj0.select(F.col("src").alias("u"), F.explode("nbrs").alias("v"))
-        .filter(F.col("u") < F.col("v"))
-    )
-    # In-kernel weighted reduce (r12). The r11 round measured the naive
-    # weighted kernel -- a (k BIGINT, w INT) TWO-column stream -- at
-    # 2.0x the k-only stream's boundary cost and kept the JVM
-    # aggregate; this path instead packs the wedge center's DEGREE
-    # into the same single BIGINT as the pair (id/degree bit budget
-    # checked from the same bounded aggregate) and resolves the
-    # nano-quantized weight inside the kernel from a Spark-computed
-    # (degree -> weight) table, so the boundary still carries ONE
-    # int64 column. Gated on the fallback's own broadcast bounds plus
-    # the 63-bit pack budget; above them the JVM shape below is kept.
-    vb = int(max_id).bit_length() if packable else 64
-    db = int(sizes.maxd).bit_length() if sizes.maxd is not None else 64
-    if (
-        AA_KERNEL_ENABLED
-        and packable
-        and sizes.nodes <= NODE_JACCARD_BROADCAST_MAX_NODES
-        and sizes.m2 is not None
-        and sizes.m2 // 2 <= NODE_JACCARD_BROADCAST_MAX_EDGES
-        and 2 * vb + db <= 63
-    ):
-        adjd = adj.select(
-            "nbrs", F.size("nbrs").cast("long").alias("d")
-        ).filter(F.col("d") >= 2)
-        pairs_d = _expand_wedges(adjd.repartition(parts), ["d"])
-        kcol = (
-            F.shiftleft(F.col("u").cast("long"), vb + db)
-            + F.shiftleft(F.col("v").cast("long"), db)
-            + F.col("d")
-        ).alias("k")
-        packed = pairs_d.select(kcol).repartition(
-            # partition by the PAIR bits so every (u, v, *) row of a
-            # pair lands in one partition: counts and the aa sum are
-            # then globally exact inside the kernel
-            parts,
-            F.shiftrightunsigned(F.col("k"), db),
-        )
-        wmap = {
-            int(r["d"]): int(r["w"])
-            for r in adj.select(F.size("nbrs").cast("long").alias("d"))
-            .filter(F.col("d") >= 2)
-            .distinct()
-            .select(
-                "d",
-                F.floor(
-                    F.lit(1.0) / F.log(F.col("d").cast("double"))
-                    * F.lit(1000000000.0)
-                    + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("w"),
-            )
-            .collect()
-        }
-        reduced = _wedge_weighted_reduce_arrow(
-            spark,
-            packed,
-            weight_by_degree=wmap,
-            linked=linked,
-            vbits=vb,
-            dbits=db,
-            topk=NODE_JACCARD_TOPK,
-        )
-        return (
-            reduced.orderBy(F.col("aa").desc(), "u", "v")
-            .limit(NODE_JACCARD_TOPK)
-            .select(
-                F.col("u").cast("long").alias("u"),
-                F.col("v").cast("long").alias("v"),
-                F.col("n_common").cast("long").alias("n_common"),
-                F.concat(
-                    (F.col("aa") / 1000000000).cast("long").cast("string"),
-                    F.lit("."),
-                    F.lpad((F.col("aa") % 1000000000).cast("string"), 9, "0"),
-                ).alias("aa_score"),
-            )
-        )
-    # sorted-slice expansion + packed pair key (same shape and gate as
-    # q_node_jaccard) with the center weight riding along each wedge.
-    # Round-robin the centers over the wedge-derived width first: the
-    # adjacency rows are few bytes but expand to C(d,2) pairs each,
-    # so AQE leaves the expansion stage under-parallelized (see
-    # q_node_jaccard).
-    pairs = _expand_wedges(adjw.repartition(parts), ["w"])
-    aggs = [
-        F.sum("w").cast("long").alias("aa"),
-        F.count(F.lit(1)).alias("n_common"),
-    ]
-    if packable:
-        scored_pairs = _unpack_pair(
-            pairs.select(_pack_pair(), "w")
-            .repartition(parts, "k")
-            .groupBy("k")
-            .agg(*aggs),
-            key_type,
-        )
-    else:
-        scored_pairs = (
-            pairs.repartition(parts, "u", "v").groupBy("u", "v").agg(*aggs)
-        )
-    if sizes.m2 is not None and sizes.m2 // 2 <= NODE_JACCARD_BROADCAST_MAX_EDGES:
-        linked = F.broadcast(linked)
+    Default None keeps the registered oracle contract exact."""
+    aa = F.col("wsum")
     return (
-        scored_pairs.join(linked, ["u", "v"], "left_anti")
-        .orderBy(F.col("aa").desc(), "u", "v")
+        _wedge_link_scores(
+            spark,
+            sf_dir,
+            max_degree=max_degree,
+            _adj=_adj,
+            weight=_aa_weight,
+            degree_bits=True,
+            score=lambda n_common, wsum, u, v, degree: wsum,
+            margin=0,
+        )
+        .orderBy(aa.desc(), "u", "v")
         .limit(NODE_JACCARD_TOPK)
         # long nano-units are exact for the ordering; the output
         # boundary renders them as a fixed-scale string by integer
         # arithmetic only (no engine decimal/round in the path)
         .select(
-            F.col("u").cast("long").alias("u"),
-            F.col("v").cast("long").alias("v"),
-            F.col("n_common").cast("long").alias("n_common"),
+            "u",
+            "v",
+            "n_common",
             F.concat(
-                (F.col("aa") / 1000000000).cast("long").cast("string"),
+                (aa / 1000000000).cast("long").cast("string"),
                 F.lit("."),
-                F.lpad((F.col("aa") % 1000000000).cast("string"), 9, "0"),
+                F.lpad((aa % 1000000000).cast("string"), 9, "0"),
             ).alias("aa_score"),
         )
     )

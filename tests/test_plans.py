@@ -387,41 +387,30 @@ def test_label_propagation_broadcast_is_size_gated(spark):
 
 
 def test_wedge_pair_shuffle_is_single_packed_key(spark, sf_dir):
-    """The round-6 wedge fast path: with node ids under 2^32 the pair
-    stream must exchange ONE packed BIGINT key (hashpartitioning on
-    k), not the two-column (u, v) pair. Since the r11 optimization
-    round, below the broadcast gates the pair reduce is ONE vectorized
-    Arrow kernel per shuffle partition (MapInArrow: sort-unique +
-    linked prune + top-K superset pre-selection) -- there must be NO
-    JVM hash aggregate of the ~Sigma C(d,2) pair rows left in the
-    plan (the partial+final HashAggregate pass hashed every pair row
-    twice), and the global top-K over the kernel's
-    few-rows-per-partition output stays TakeOrderedAndProject."""
+    """The wedge path shared by Jaccard and Adamic-Adar has ONE plan
+    shape below the gates: the wedge stream exchanges ONE packed
+    BIGINT key, hash-partitioned on its pair bits (shiftrightunsigned
+    drops the center-degree field Adamic-Adar packs; Jaccard packs
+    none) so all keys of a pair meet in one partition; ONE Arrow
+    kernel per partition (MapInArrow: unique-count + weight sum +
+    linked prune + top-K superset pre-selection) replaces the JVM
+    hash aggregate of the ~Sigma C(d,2) pair rows (its partial+final
+    pass hashed every row twice); and the global top-K over the
+    kernel's few-rows-per-partition output is TakeOrderedAndProject."""
     from kafka_clickhouse_pipeline_spark.operators import graph
 
-    df = graph.q_node_jaccard(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"hashpartitioning\(k#\d+L?\b", plan), plan[:2000]
-    assert "MapInArrow" in plan
-    # the pair aggregate is gone: no count/sum hash-aggregate downstream
-    # of the packed-key exchange (the only aggregate left is the bounded
-    # sizes/census collect upstream)
-    assert "partial_count" not in plan, plan[:2000]
-    assert plans.uses_top_k(df)
-
-    # the weighted twin (r12): the r11 two-column (k, w) kernel was a
-    # measured negative, but packing the center DEGREE into the same
-    # single int64 key removes the extra column -- below the gates the
-    # AA reduce is the same one-kernel-per-partition shape, with the
-    # exchange hashed on the PAIR bits (shiftrightunsigned) so the
-    # (u, v, d) rows of a pair land together and the kernel's integer
-    # sums are globally exact
-    df2 = graph.q_adamic_adar(spark, sf_dir)
-    plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"hashpartitioning\(shiftrightunsigned\(k#\d+L?", plan2)
-    assert "MapInArrow" in plan2
-    assert "partial_sum" not in plan2, plan2[:2000]
-    assert plans.uses_top_k(df2)
+    for fn in (graph.q_node_jaccard, graph.q_adamic_adar):
+        df = fn(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert re.search(
+            r"hashpartitioning\(shiftrightunsigned\(k#\d+L?, \d+\)", plan
+        ), plan[:2000]
+        assert "MapInArrow" in plan
+        # no pair aggregate: the only aggregate left is the bounded
+        # sizes collect upstream
+        assert "partial_count" not in plan, plan[:2000]
+        assert "partial_sum" not in plan, plan[:2000]
+        assert plans.uses_top_k(df)
 
 
 def test_minhash_wedge_twin_plan(spark, sf_dir):

@@ -9,7 +9,8 @@ picks a PHYSICAL strategy only; these tests force the other branch by
 shrinking the gate constant to 0 and require bit-identical rows --
 the same both-branches contract test_pagerank_broadcast_is_size_gated
 and test_label_propagation_broadcast_is_size_gated pin for the older
-gates.
+gates. The wedge kernel's gates run in the default suite instead, in
+tests/test_graph_wedge.py.
 """
 
 from __future__ import annotations
@@ -64,27 +65,3 @@ def test_pair_scorer_gate_branches_identical(spark, monkeypatch):
     monkeypatch.setattr(similarity, "PAIR_SCORE_BROADCAST_MAX_BYTES", 0)
     slow = _rows(similarity.q_knn_graph(spark, SF))
     assert fast == slow
-
-
-@pytest.mark.parametrize(
-    "fn_name",
-    [
-        "q_node_jaccard",
-        "q_node_jaccard_capped",
-        "q_adamic_adar",
-        "q_adamic_adar_capped",
-    ],
-)
-def test_wedge_kernel_gate_branches_identical(spark, monkeypatch, fn_name):
-    """The in-kernel wedge-pair reduce (_wedge_pairs_reduce_arrow) must
-    return exactly the rows of the hash-aggregate + anti-join fallback
-    it replaces below the broadcast gates -- including the tie-heavy
-    jaccard ordering (the kernel only pre-selects a provable superset;
-    the final ORDER BY/LIMIT and every output expression run in Spark
-    either way). Forcing the edge gate to -1 disables the kernel (and
-    the fallback's own broadcasts) without touching the pack gate."""
-    fn = getattr(graph, fn_name)
-    fast = _rows(fn(spark, SF))
-    monkeypatch.setattr(graph, "NODE_JACCARD_BROADCAST_MAX_EDGES", -1)
-    slow = _rows(fn(spark, SF))
-    assert fast == slow and len(fast) > 0

@@ -1,40 +1,23 @@
 """Round-12 optimization gates: every new fast path must be
 output-identical to its fallback / exact twin.
 
-- The weighted (Adamic-Adar) wedge kernel packs the center degree into
-  the single int64 pair key and resolves the nano-quantized weight
-  inside the kernel from a Spark-computed table; AA_KERNEL_ENABLED
-  toggles it WITHOUT touching the fallback's broadcasts (the r11
-  edge-gate=-1 matrix in test_round11_gates covers the
-  no-broadcast-fallback branch, which now also disables this kernel).
 - The PPJoin positional filter prunes verification candidates by an
   exact overlap upper bound; the operator must stay row-identical to
   the exact inverted-index twin on the real fixture (the r6 synthetic
   and adversarial equality tests still run too).
+- The weighted wedge kernel's gate branches are covered with the
+  other wedge gates in tests/test_graph_wedge.py.
 """
 
 from __future__ import annotations
 
-import pytest
-
-from kafka_clickhouse_pipeline_spark.operators import dedup, graph
+from kafka_clickhouse_pipeline_spark.operators import dedup
 
 SF = "/root/testdata/sf0.001"
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.mark.parametrize("fn_name", ["q_adamic_adar", "q_adamic_adar_capped"])
-def test_aa_weighted_kernel_gate_branches_identical(
-    spark, monkeypatch, fn_name
-):
-    fn = getattr(graph, fn_name)
-    fast = _rows(fn(spark, SF))
-    monkeypatch.setattr(graph, "AA_KERNEL_ENABLED", False)
-    slow = _rows(fn(spark, SF))
-    assert fast == slow and len(fast) > 0
 
 
 def test_prefix_filter_positional_bound_is_lossless_on_fixture(spark):
