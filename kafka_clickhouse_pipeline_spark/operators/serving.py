@@ -18,10 +18,15 @@ fixtures are static, so relative predicates anchor at a fixed timestamp
 decimal(18,2) so aggregation is exact and order-insensitive -- no
 floating-point drift between engines.
 
-Scale notes (100 TB): every query is a single scan -> partial agg ->
-shuffle-on-group-key -> final agg (or TakeOrderedAndProject for the
-top-K/recent-N forms). Filters and column pruning reach the parquet
-scan; no joins, no UDFs, no driver-side loops.
+Scale notes: every query is a single ``events`` scan. When that scan
+is one input split (the fixtures up to sf0.1: one file, one row
+group), ``_events`` declares it with ``coalesce(1)``; Catalyst then
+plans no exchange, and the aggregate, sort and limit all run in the
+scan's one task, one Spark job per chart. At 100 TB the scan is many
+splits and each query is scan -> partial agg -> shuffle-on-group-key
+-> final agg (or TakeOrderedAndProject for the top-K/recent-N forms).
+Filters and column pruning reach the parquet scan in both shapes; no
+joins, no UDFs, no driver-side loops.
 """
 
 from __future__ import annotations
@@ -29,12 +34,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, scan_partitions
 from ..functions import ch_if, to_start_of_hour
 from ..functions.canon import money, ts_str
 
 #: Fixed "now" for relative-time predicates over static fixtures.
 ANCHOR = "2024-01-30 00:00:00"
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` table every serving query reads, coalesced to one
+    partition when its scan is already one split. Over one partition,
+    ``coalesce(1)`` never changes rows, and it lets Catalyst satisfy
+    every aggregate and sort without an exchange: each chart route runs
+    as one Spark job with one task (up to 4 before, with a range-sort
+    sampling job and separate AQE map and result stages). So a wrong
+    partition count can only cost parallelism, never a wrong answer."""
+    events = load_table(spark, sf_dir, "events")
+    if scan_partitions(spark, sf_dir, "events") == 1:
+        return events.coalesce(1)
+    return events
 
 
 def sales_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,8 +67,12 @@ def sales_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Mapped: purchases in the 24 h before ANCHOR; count(*) stands in for
     sum(quantity) (events carry no quantity), sum(value) for revenue.
+
+    The query bounds its result to at most 24 rows (a 1-day window
+    grouped by hour), so it is sorted in one partition: no range
+    shuffle and no sampling job when the scan is many splits.
     """
-    events = load_table(spark, sf_dir, "events")
+    events = _events(spark, sf_dir)
     return (
         events.filter(
             (F.col("event_type") == "purchase")
@@ -61,7 +84,8 @@ def sales_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("total_quantity"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("rev"),
         )
-        .orderBy("hour_ts")
+        .coalesce(1)
+        .sortWithinPartitions("hour_ts")
         .select(
             ts_str("hour_ts").alias("hour"),
             "total_quantity",
@@ -86,7 +110,7 @@ def stock_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity. user_id is the deterministic tiebreaker. Spark plans the
     ORDER BY+LIMIT as TakeOrderedAndProject -- true top-K, no full sort.
     """
-    events = load_table(spark, sf_dir, "events")
+    events = _events(spark, sf_dir)
     dec = F.col("value").cast("decimal(18,2)")
     zero = F.lit(0).cast("decimal(18,2)")
     agged = (
@@ -118,7 +142,7 @@ def recent_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     event_id is the deterministic tiebreaker. TakeOrderedAndProject.
     """
-    events = load_table(spark, sf_dir, "events")
+    events = _events(spark, sf_dir)
     return (
         events.filter(F.col("event_type") == "purchase")
         .orderBy(F.col("ts").desc(), F.col("event_id"))
@@ -136,8 +160,10 @@ def status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-table row counts, the /api/status health query
     (app.py:158-160): ``SELECT count() FROM sales`` + ``FROM
     stock_movements``. Mapped: per-event_type counts over events --
-    same COUNT(*) aggregate, one row per logical table."""
-    events = load_table(spark, sf_dir, "events")
+    same COUNT(*) aggregate, one row per logical table. Its row count
+    is set by the data, not by the query, so it keeps a global
+    ``orderBy``."""
+    events = _events(spark, sf_dir)
     return (
         events.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("row_count"))
@@ -147,8 +173,8 @@ def status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: The same four queries as raw SQL strings executed by spark.sql over
 #: registered views -- the reference's entry style (app.py passes SQL
-#: strings to clickhouse-driver). Catalyst compiles these to the same
-#: plans as the DataFrame forms (asserted in tests/test_sql_interface.py).
+#: strings to clickhouse-driver). They return the same rows as the
+#: DataFrame forms (asserted in tests/test_sql_interface.py).
 def _serving_sql(ts_render: str) -> dict[str, str]:
     """The four serving queries as SQL. ``ts_render`` is a
     ``{}``-style format spec rendering a timestamp expression to the

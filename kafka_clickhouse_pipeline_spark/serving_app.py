@@ -22,14 +22,23 @@ before every query with graceful empty payloads (app.py:16-42), and
 from __future__ import annotations
 
 import json
+import logging
 import os
+import re
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
 from .catalog import tables_exist
 from .operators import serving
+from .schemas import FIXTURE_TABLES
+
+#: One INFO line per request: method, path, status and milliseconds.
+#: Python's default WARNING level drops them; a deployment that wants
+#: an access log sets this logger to INFO.
+log = logging.getLogger(__name__)
 
 REQUIRED_TABLES = ("events",)
 
@@ -113,17 +122,30 @@ _TEMPLATE_PATH = os.path.join(
 SQL_ROW_CAP = 1000
 
 
+def _named_tables(sql: str) -> list[str]:
+    """The fixture tables whose name is an identifier token of ``sql``,
+    case-insensitively (``partition`` does not name ``part``). A name
+    inside a string literal or a column alias also counts: registering
+    a view the query does not read is harmless."""
+    tokens = {t.lower() for t in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", sql)}
+    return [name for name in FIXTURE_TABLES if name in tokens]
+
+
 def get_sql_payload(spark: SparkSession, sf_dir: str, sql_text: str) -> dict:
     """POST /api/sql -- run a ClickHouse-dialect query verbatim against
-    the registered tables (the ad-hoc query path a reference user has
-    against ClickHouse itself). Relative-time predicates anchor at the
-    serving ANCHOR so results are reproducible over static fixtures;
-    rows are capped at SQL_ROW_CAP."""
+    the fixture tables (the ad-hoc query path a reference user has
+    against ClickHouse itself). Only the fixture tables the translated
+    query names are (re)registered as views, so each request reads the
+    current files without reloading all ten tables. Relative-time
+    predicates anchor at the serving ANCHOR so results are
+    reproducible over static fixtures; rows are capped at
+    SQL_ROW_CAP."""
     from .catalog import register_views
-    from .functions.clickhouse_dialect import run_clickhouse_sql
+    from .functions.clickhouse_dialect import translate
 
-    register_views(spark, sf_dir)
-    df = run_clickhouse_sql(spark, sql_text, anchor=serving.ANCHOR)
+    sql = translate(sql_text, anchor=serving.ANCHOR)
+    register_views(spark, sf_dir, _named_tables(sql))
+    df = spark.sql(sql)
     rows = df.limit(SQL_ROW_CAP).collect()
 
     def jv(v):
@@ -145,55 +167,46 @@ def get_dashboard_html() -> bytes:
 def make_handler(spark: SparkSession, sf_dir: str):
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802 (stdlib API name)
+            t0 = time.perf_counter()
             if self.path in ("/", "/index.html"):
-                body = get_dashboard_html()
-                self.send_response(200)
-                self.send_header("Content-Type", "text/html; charset=utf-8")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._reply(t0, 200, get_dashboard_html(), "text/html; charset=utf-8")
                 return
             fn = ROUTES.get(self.path)
             if fn is None:
-                self.send_response(404)
-                self.end_headers()
-                self.wfile.write(b'{"error": "not found"}')
+                self._reply(t0, 404, b'{"error": "not found"}')
                 return
             try:
-                payload = fn(spark, sf_dir)
-                body = json.dumps(payload).encode()
-                self.send_response(200)
+                status, body = 200, json.dumps(fn(spark, sf_dir)).encode()
             except Exception as exc:  # graceful degradation, app.py:74-77
-                body = json.dumps({"error": str(exc)}).encode()
-                self.send_response(500)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+                status, body = 500, json.dumps({"error": str(exc)}).encode()
+            self._reply(t0, status, body)
 
         def do_POST(self):  # noqa: N802 (stdlib API name)
+            t0 = time.perf_counter()
             if self.path != "/api/sql":
-                self.send_response(404)
-                self.end_headers()
-                self.wfile.write(b'{"error": "not found"}')
+                self._reply(t0, 404, b'{"error": "not found"}')
                 return
             length = int(self.headers.get("Content-Length", 0))
             sql_text = self.rfile.read(length).decode("utf-8", "replace")
             try:
-                payload = get_sql_payload(spark, sf_dir, sql_text)
-                body = json.dumps(payload).encode()
-                self.send_response(200)
+                status, body = 200, json.dumps(get_sql_payload(spark, sf_dir, sql_text)).encode()
             except Exception as exc:  # bad SQL -> client error, not a crash
                 # ParseException's text starts with a blank line
                 first = next((ln for ln in str(exc).splitlines() if ln.strip()), type(exc).__name__)
-                body = json.dumps({"error": first}).encode()
-                self.send_response(400)
-            self.send_header("Content-Type", "application/json")
+                status, body = 400, json.dumps({"error": first}).encode()
+            self._reply(t0, status, body)
+
+        def _reply(self, t0: float, status: int, body: bytes,
+                   content_type: str = "application/json") -> None:
+            self.send_response(status)
+            self.send_header("Content-Type", content_type)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
+            log.info("%s %s %d %.1f ms", self.command, self.path, status,
+                     (time.perf_counter() - t0) * 1000.0)
 
-        def log_message(self, *args):  # quiet test output
+        def log_message(self, *args):  # requests are logged by _reply
             pass
 
     return Handler
@@ -211,6 +224,7 @@ def serve(spark: SparkSession, sf_dir: str, port: int = 8080) -> ThreadingHTTPSe
 if __name__ == "__main__":
     from .session import get_spark
 
+    logging.basicConfig(level=logging.INFO, format="%(asctime)s %(message)s")
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark_session = get_spark(app_name="serving-app")
     server = serve(spark_session, sf, port=int(os.environ.get("PORT", "8080")))

@@ -15,6 +15,7 @@ from pyspark.errors import AnalysisException
 from kafka_clickhouse_pipeline_spark.catalog import (
     load_table,
     register_views,
+    scan_partitions,
     table_path,
     tables_exist,
 )
@@ -96,3 +97,15 @@ def test_concurrent_cold_loads_agree(spark, sf_dir, tmp_path):
     for schema, rows in results:
         assert schema == expected.schema
         assert rows == expected_rows
+
+
+def test_scan_partitions_is_none_for_a_directory_table(spark, tmp_path):
+    """A directory table (a streaming sink's output) gets no cached
+    partition count: its top-level mtime does not move when a batch
+    lands in a partition subdirectory."""
+    path = table_path(str(tmp_path), "t")
+    os.makedirs(path)
+    pq.write_table(pa.table({"id": [1, 2]}), os.path.join(path, "part-0.parquet"))
+    assert scan_partitions(spark, str(tmp_path), "t") is None
+    assert scan_partitions(spark, str(tmp_path), "no_such_table") is None
+    assert load_table(spark, str(tmp_path), "t").count() == 2

@@ -8,6 +8,7 @@ from __future__ import annotations
 import re
 
 from kafka_clickhouse_pipeline_spark import plans
+from kafka_clickhouse_pipeline_spark.catalog import scan_partitions
 from kafka_clickhouse_pipeline_spark.operators import (
     advanced,
     analytics,
@@ -39,6 +40,15 @@ def test_serving_column_pruning(spark, sf_dir):
 def test_recent_sales_uses_top_k(spark, sf_dir):
     assert plans.uses_top_k(serving.recent_sales(spark, sf_dir))
     assert plans.uses_top_k(serving.stock_top5(spark, sf_dir))
+
+
+def test_serving_queries_plan_no_exchange_at_one_split(spark, sf_dir):
+    """When the events scan is one split, every serving query runs in
+    that split's task: no exchange anywhere in the plan."""
+    assert scan_partitions(spark, sf_dir, "events") == 1
+    for fn in (serving.sales_by_hour, serving.stock_top5, serving.recent_sales,
+               serving.status_counts):
+        assert plans.count_shuffles(fn(spark, sf_dir)) == 0, fn.__name__
 
 
 def test_q3_top10_uses_top_k(spark, sf_dir):

@@ -4,11 +4,18 @@ all four endpoints like the dashboard does, check payload shapes."""
 from __future__ import annotations
 
 import json
+import logging
+import os
+import re
+import time
 import urllib.request
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from kafka_clickhouse_pipeline_spark import serving_app
+from kafka_clickhouse_pipeline_spark.catalog import load_table, table_path
+from kafka_clickhouse_pipeline_spark.operators import serving
 
 
 @pytest.fixture(scope="module")
@@ -164,16 +171,16 @@ _ADHOC_SQL = (
 @pytest.mark.parametrize(
     "route, jobs",
     [
-        # partial-agg shuffle, range-sort sample, range shuffle, sorted collect
-        ("sales", 4),
-        # partial-agg shuffle, final agg + top-5 collect
-        ("stock", 2),
-        # one top-10 scan
+        # the events scan is one split: scan, agg and sort in one task
+        ("sales", 1),
+        # one split: scan, agg and top-5 in one task
+        ("stock", 1),
+        # one split: one top-10 scan
         ("recent", 1),
-        # partial-agg shuffle, range-sort sample, range shuffle, sorted collect
-        ("status", 4),
+        # one split: scan, agg and sort in one task
+        ("status", 1),
         # (day, user) agg shuffle, distinct-agg shuffle, top-1000 collect;
-        # register_views reloads all ten tables and starts no job
+        # register_views reloads only `events` and starts no job
         ("sql", 3),
     ],
 )
@@ -188,3 +195,110 @@ def test_warm_route_jobs(spark, sf_dir, count_jobs, route, jobs):
             serving_app.ROUTES[f"/api/{route}"](spark, sf_dir)
     call()
     assert count_jobs(call) == jobs
+
+
+def _oracle_payloads(oracle) -> dict[str, dict]:
+    """Each chart route's payload, computed by DuckDB over
+    SERVING_ORACLES and shaped the way serving_app shapes Spark's rows."""
+    def rows(name):
+        res = oracle.execute(serving.SERVING_ORACLES[name])
+        cols = [d[0] for d in res.description]
+        return [dict(zip(cols, r)) for r in res.fetchall()]
+
+    sales, stock = rows("sales_by_hour"), rows("stock_top5")
+    recent, status = rows("recent_sales"), rows("status_counts")
+    return {
+        "sales": {"labels": [r["hour"][11:16] for r in sales],
+                  "quantity": [int(r["total_quantity"]) for r in sales],
+                  "revenue": [round(float(r["revenue"]), 2) for r in sales]},
+        "stock": {"labels": [f"Product {r['user_id']}" for r in stock],
+                  "incoming": [float(r["incoming"]) for r in stock],
+                  "outgoing": [float(r["outgoing"]) for r in stock]},
+        "recent": {"sales": [{"time": r["ts"], "product": f"Product {r['user_id']}",
+                              "quantity": 1, "total": float(r["value"])} for r in recent]},
+        "status": {"status": "ok",
+                   "counts": {r["event_type"]: int(r["row_count"]) for r in status}},
+    }
+
+
+@pytest.mark.parametrize(
+    "splits, jobs",
+    [
+        # coalesce(1) over the one split: no exchange, one job per route
+        ("one", {"sales": 1, "stock": 1, "recent": 1, "status": 1}),
+        # agg shuffle + sorted collect in one partition (<= 24 rows);
+        # agg shuffle + top-5; one top-10 scan; agg shuffle, range-sort
+        # sample, range shuffle, sorted collect
+        ("many", {"sales": 2, "stock": 2, "recent": 1, "status": 4}),
+    ],
+    ids=("one_split", "many_splits"),
+)
+def test_one_split_gate_branches(spark, sf_dir, oracle, count_jobs, splits, jobs):
+    """Both branches of the serving queries' one-split gate, through the
+    public route functions: byte-identical payloads to the DuckDB
+    oracles, and the jobs each branch plans. The many-split branch
+    shrinks the split size in the same session, so a partition-count
+    cache that ignored the conf would keep coalescing and fail the pin."""
+    conf = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(conf, None)
+    if splits == "many":
+        spark.conf.set(conf, str(os.path.getsize(table_path(sf_dir, "events")) // 4))
+    try:
+        n = load_table(spark, sf_dir, "events").rdd.getNumPartitions()
+        assert (n == 1) if splits == "one" else (n > 1)
+        expected = _oracle_payloads(oracle)
+        for route, want in jobs.items():
+            fn = serving_app.ROUTES[f"/api/{route}"]
+            assert json.dumps(fn(spark, sf_dir)) == json.dumps(expected[route]), route
+            assert count_jobs(lambda: fn(spark, sf_dir)) == want, route
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
+
+
+def test_api_sql_joins_two_tables(spark, sf_dir, oracle):
+    """Only the tables a query names are registered; a join of two
+    of them works and matches DuckDB."""
+    sql = (
+        "SELECT n.n_name, r.r_name FROM nation n JOIN region r "
+        "ON n.n_regionkey = r.r_regionkey ORDER BY n.n_name"
+    )
+    payload = serving_app.get_sql_payload(spark, sf_dir, sql)
+    assert payload["columns"] == ["n_name", "r_name"]
+    assert payload["rows"] == [list(r) for r in oracle.execute(sql).fetchall()]
+    assert payload["rows"]
+
+
+def test_api_sql_unknown_table_is_not_found(spark, sf_dir):
+    with pytest.raises(AnalysisException) as exc:
+        serving_app.get_sql_payload(spark, sf_dir, "SELECT count() FROM no_such_table")
+    assert exc.value.getCondition() == "TABLE_OR_VIEW_NOT_FOUND"
+
+
+def test_named_tables_match_whole_identifiers():
+    """Table names match whole identifier tokens, case-insensitively:
+    ``partition`` does not name ``part``, nor ``order`` ``orders``."""
+    named = serving_app._named_tables
+    assert named("SELECT * FROM Orders o JOIN LINEITEM l ON o.o_orderkey = l.l_orderkey") == [
+        "orders", "lineitem"]
+    assert named("SELECT row_number() OVER (PARTITION BY x ORDER BY y) FROM t") == []
+    assert named("SELECT p_name FROM `part`") == ["part"]
+
+
+def test_requests_are_logged(server, caplog):
+    """One INFO line per request on the module logger: method, path,
+    status and milliseconds."""
+    caplog.set_level(logging.INFO, logger=serving_app.log.name)
+    assert _get(server, "/api/status")[0] == 200
+    assert _post_sql(server, b"SELECT FROM nowhere")[0] == 400
+    pattern = re.compile(r"(GET /api/status 200|POST /api/sql 400) \d+\.\d ms")
+    deadline = time.monotonic() + 10
+    while True:  # the server thread logs after it has written the reply
+        lines = [r.getMessage() for r in caplog.records if r.name == serving_app.log.name]
+        if len(lines) >= 2 or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    assert len(lines) == 2 and all(pattern.fullmatch(ln) for ln in lines), lines
+    assert all(r.levelno == logging.INFO for r in caplog.records if r.name == serving_app.log.name)
