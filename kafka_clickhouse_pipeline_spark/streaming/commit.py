@@ -1,6 +1,6 @@
 """Staged-commit publish protocol shared by every state-store writer
 (incremental dedup exact + near-dup, heavy hitters, KMV distinct,
-drift, mixture): write each batch output into a
+funnel, drift, mixture): write each batch output into a
 ``_staging/<batch_id>`` directory, atomically publish the parquet
 files into the destination under batch-id-prefixed names, then drop a
 commit marker. Replayed batch ids are no-ops; half-published files
@@ -15,6 +15,16 @@ sweep-before-read ordering is the ADVICE r3 crash-window fix (a crash
 between publish and marker must not let the replay read its own
 half-published index files); centralizing it here means no writer can
 re-introduce the bug by reordering its own copy of the calls.
+``state_writer`` is that sequence for the one-destination state
+tables.
+
+READERS see committed output and nothing else. ``read_latest_state``
+(replace-style states: heavy hitters, KMV, funnel) reads the files the
+latest marker's manifest names. ``read_state`` (append-style states:
+drift, mixture, both dedup indexes) reads the whole directory minus
+every ``b{id}-*`` file whose batch has no ``_commits/{id}`` marker, so
+a batch published but not yet marked stays invisible until its
+replay commits it.
 
 FILESYSTEM ROUTING (VERDICT r6 #8, upgrading the ADVICE r4
 local-filesystem contract): every path operation routes through a
@@ -37,7 +47,6 @@ table sink): ``event_month=X/part-*.parquet`` publishes as
 ``event_month=X/b{batch_id}-part-*.parquet``, the sweep covers both
 levels, and the manifest names files relative to the destination.
 """
-
 from __future__ import annotations
 
 import glob
@@ -238,6 +247,10 @@ def _batch_files(fs, root: str, batch_id: int) -> list[str]:
 _JOB_UUID = re.compile(r"-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
 
 
+#: Published state files are ``b{batch_id}-<staged name>``.
+_BATCH_FILE = re.compile(r"(b\d+)-")
+
+
 def publish_staged(staging: str, dest_dir: str, batch_id: int) -> list[str]:
     """Move a staging directory's parquet files (flat, or one level of
     ``key=value`` partition directories) into ``dest_dir`` under
@@ -281,47 +294,41 @@ def publish_staged(staging: str, dest_dir: str, batch_id: int) -> list[str]:
 
 
 def write_marker(
-    out_path: str,
-    batch_id: int,
-    manifest: dict[str, list[str]] | None = None,
+    out_path: str, batch_id: int, manifest: dict[str, list[str]]
 ) -> None:
-    """Drop the commit marker. When ``manifest`` is given (dest dir ->
-    published file names, from publish_staged), it is recorded IN the
-    marker so state readers can resolve the batch's files by exact
-    path instead of listing the directory: on object stores a LIST can
-    lag a PUT (s3a list-after-write), and a reader that globs right
-    after the marker appears could see a committed batch as empty.
-    GET-after-PUT of the named files is consistent, so the manifest
-    closes that window. Markers without a manifest ("committed") stay
-    readable -- readers fall back to the glob."""
+    """Drop the commit marker, recording ``manifest`` (dest dir ->
+    published file names, from publish_staged) IN it so state readers
+    can resolve the batch's files by exact path instead of listing the
+    directory: on object stores a LIST can lag a PUT (s3a
+    list-after-write), and a reader that globs right after the marker
+    appears could see a committed batch as empty. GET-after-PUT of the
+    named files is consistent, so the manifest closes that window."""
     fs, p = _backend(out_path)
     commits = fs.join(p, "_commits")
     fs.makedirs(commits)
-    text = (
-        "committed"
-        if manifest is None
-        else json.dumps({"v": 2, "files": manifest})
+    fs.write_text(
+        fs.join(commits, str(batch_id)), json.dumps({"v": 2, "files": manifest})
     )
-    fs.write_text(fs.join(commits, str(batch_id)), text)
 
 
 def read_marker_manifest(
     marker_dir: str, batch_id: int
 ) -> dict[str, list[str]] | None:
     """The dest-dir -> published-file-names manifest recorded in a
-    commit marker, or None for legacy "committed" markers."""
+    commit marker, or None when the marker is absent. A marker that is
+    not a v2 manifest raises ``ValueError`` naming the marker file."""
     fs, p = _backend(marker_dir)
     path = fs.join(p, "_commits", str(batch_id))
     if not fs.exists(path):
         return None
-    text = fs.read_text(path)
     try:
-        doc = json.loads(text)
+        doc = json.loads(fs.read_text(path))
     except ValueError:
-        return None
-    if isinstance(doc, dict) and isinstance(doc.get("files"), dict):
-        return {k.rstrip("/"): v for k, v in doc["files"].items()}
-    return None
+        doc = None
+    files = doc.get("files") if isinstance(doc, dict) and doc.get("v") == 2 else None
+    if not isinstance(files, dict):
+        raise ValueError(f"commit marker {path!r} is not a v2 manifest")
+    return {k.rstrip("/"): v for k, v in files.items()}
 
 
 def clean_staging(*staging_dirs: str) -> None:
@@ -372,44 +379,81 @@ def staged_foreach_batch(
     return _write
 
 
+def state_writer(state_path: str, build: Callable):
+    """foreachBatch function for a one-destination state table: stage
+    ``build(batch_df)`` as one file and publish it through
+    staged_foreach_batch. ``build`` may read the state itself (the
+    crashed-attempt sweep has already run)."""
+
+    def _body(batch_df, batch_id: int, staging: dict) -> None:
+        build(batch_df).repartition(1).write.mode("overwrite").parquet(
+            staging[state_path]
+        )
+
+    return staged_foreach_batch(state_path, [state_path], _body)
+
+
+def _committed_ids(marker_dir: str) -> set[int]:
+    """Batch ids with a marker under ``marker_dir`` (one LIST)."""
+    fs, p = _backend(marker_dir)
+    commits = fs.join(p, "_commits")
+    if not fs.isdir(commits):
+        return set()
+    return {int(n) for n in fs.listdir(commits) if n.isdigit()}
+
+
 def latest_committed(state_path: str) -> int | None:
     """Highest committed batch id under ``state_path``, or None before
     the first commit. Scheme-routed (module docstring): POSIX listdir
     locally, Hadoop listStatus on object stores."""
-    fs, p = _backend(state_path)
-    commits = fs.join(p, "_commits")
-    if not fs.isdir(commits):
-        return None
-    ids = [int(n) for n in fs.listdir(commits) if n.isdigit()]
-    return max(ids) if ids else None
+    return max(_committed_ids(state_path), default=None)
 
 
 def read_latest_state(spark, state_path: str, schema):
     """REPLACE-style reader: the parquet files of the latest committed
     batch only (each batch republishes the whole summary). Empty frame
-    before the first commit or for an empty committed batch. The
-    append-delta states (drift, mixture) read ALL committed files
-    instead and keep their own readers.
+    before the first commit or for an empty committed batch.
 
-    File resolution prefers the marker's manifest (exact published
-    names recorded by staged_foreach_batch) over a directory listing:
-    on object stores a LIST can lag the PUTs it follows, and a glob
-    taken in that window would misread a committed batch as empty.
-    Only legacy manifest-less markers fall back to the glob."""
+    Files are resolved from the marker's manifest (exact published
+    names recorded by staged_foreach_batch), never from a directory
+    listing: on object stores a LIST can lag the PUTs it follows, and a
+    glob taken in that window would misread a committed batch as
+    empty."""
     latest = latest_committed(state_path)
     if latest is None:
         return spark.createDataFrame([], schema)
-    fs, p = _backend(state_path, spark=spark)
-    manifest = read_marker_manifest(state_path, latest)
-    if manifest is not None and state_path.rstrip("/") in manifest:
-        names = [
-            n
-            for n in manifest[state_path.rstrip("/")]
-            if n.endswith(".parquet")
-        ]
-        files = sorted(fs.join(p, n) for n in names)
-    else:
-        files = sorted(fs.glob(fs.join(p, f"b{latest}-*.parquet")))
-    if not files:  # manifest-confirmed (or legacy-glob) empty batch
+    fs, p = _backend(state_path, spark)
+    names = read_marker_manifest(state_path, latest)[state_path.rstrip("/")]
+    files = sorted(fs.join(p, n) for n in names if n.endswith(".parquet"))
+    if not files:  # manifest-confirmed empty batch
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*files)
+
+
+def read_state(spark, path: str, schema, marker_dir: str | None = None):
+    """APPEND-style reader: every file a COMMITTED batch published into
+    ``path`` (drift and mixture deltas, the dedup indexes). Empty frame
+    when ``path`` does not exist; any other read failure propagates,
+    because reading a dedup index as empty would publish historical
+    duplicates and append their fingerprints for good.
+
+    A ``b{id}-*`` file counts only when ``_commits/{id}`` exists under
+    ``marker_dir`` (default ``path``; the dedup indexes keep their one
+    marker on the output table). The read stays one directory read --
+    one path, so no partition-discovery job however many batches the
+    state holds -- and a pending batch's files are dropped in the plan
+    by ``_metadata.file_name``."""
+    from pyspark.sql import functions as F
+
+    fs, p = _backend(path, spark)
+    if not fs.exists(p):
+        return spark.createDataFrame([], schema)
+    names = [fs.basename(f) for f in fs.glob(fs.join(p, "b*-*"))]
+    pending = {m.group(1) for m in map(_BATCH_FILE.match, names) if m} - {
+        f"b{i}" for i in _committed_ids(marker_dir or path)
+    }
+    df = spark.read.schema(schema).parquet(path)
+    if pending:
+        batch = F.substring_index(F.col("_metadata.file_name"), "-", 1)
+        df = df.filter(~batch.isin(*sorted(pending)))
+    return df

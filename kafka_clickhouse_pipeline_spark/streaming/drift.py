@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .commit import read_state, state_writer
+
 BIN_COUNTS_SCHEMA = StructType(
     [
         StructField("bin", StringType(), False),
@@ -52,16 +54,23 @@ def batch_bin_counts(batch: DataFrame) -> DataFrame:
 
 def read_bin_counts(spark, state_path: str) -> DataFrame:
     """Cumulative per-bin counts: the sum of every committed delta file
-    (missing path = empty state, fail-closed like the dedup index)."""
-    from .incremental_dedup import _is_path_not_found
-
-    try:
-        deltas = spark.read.schema(BIN_COUNTS_SCHEMA).parquet(state_path)
-    except Exception as exc:  # noqa: BLE001 -- only PATH_NOT_FOUND is benign
-        if _is_path_not_found(exc):
-            return spark.createDataFrame([], BIN_COUNTS_SCHEMA)
-        raise
+    (commit.read_state: missing path = empty state)."""
+    deltas = read_state(spark, state_path, BIN_COUNTS_SCHEMA)
     return deltas.groupBy("bin").agg(F.sum("n").alias("n"))
+
+
+def _bin_counts_vs(spark, state_path: str, reference: DataFrame) -> DataFrame:
+    """(bin, n_first, n_second): reference counts against the streamed
+    counts, 0 where a side has no row for the bin."""
+    ref = reference.select("bin", F.col("n").cast("long").alias("n_first"))
+    cur = read_bin_counts(spark, state_path).select(
+        "bin", F.col("n").cast("long").alias("n_second")
+    )
+    return ref.join(cur, "bin", "full_outer").select(
+        "bin",
+        F.coalesce("n_first", F.lit(0)).alias("n_first"),
+        F.coalesce("n_second", F.lit(0)).alias("n_second"),
+    )
 
 
 def current_psi(spark, state_path: str, reference: DataFrame) -> DataFrame:
@@ -71,29 +80,13 @@ def current_psi(spark, state_path: str, reference: DataFrame) -> DataFrame:
     operator."""
     from ..operators.advanced import psi_table
 
-    ref = reference.select("bin", F.col("n").cast("long").alias("n_first"))
-    cur = read_bin_counts(spark, state_path).select(
-        "bin", F.col("n").cast("long").alias("n_second")
-    )
-    counts = ref.join(cur, "bin", "full_outer").select(
-        "bin",
-        F.coalesce("n_first", F.lit(0)).alias("n_first"),
-        F.coalesce("n_second", F.lit(0)).alias("n_second"),
-    )
-    return psi_table(counts)
+    return psi_table(_bin_counts_vs(spark, state_path, reference))
 
 
 def drift_writer(state_path: str):
     """foreachBatch function: effectively-once append of this batch's
     per-bin count delta to the state table."""
-    from .commit import staged_foreach_batch
-
-    def _body(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
-        batch_bin_counts(batch_df).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(staging[state_path])
-
-    return staged_foreach_batch(state_path, [state_path], _body)
+    return state_writer(state_path, batch_bin_counts)
 
 
 def drift_stream(events_stream: DataFrame, state_path: str, checkpoint: str):
@@ -111,13 +104,4 @@ def current_ks(spark, state_path: str, reference: DataFrame) -> DataFrame:
     and any batch re-check agree bin-for-bin."""
     from ..operators.advanced import ks_binned_table
 
-    ref = reference.select("bin", F.col("n").cast("long").alias("n_first"))
-    cur = read_bin_counts(spark, state_path).select(
-        "bin", F.col("n").cast("long").alias("n_second")
-    )
-    counts = ref.join(cur, "bin", "full_outer").select(
-        "bin",
-        F.coalesce("n_first", F.lit(0)).alias("n_first"),
-        F.coalesce("n_second", F.lit(0)).alias("n_second"),
-    )
-    return ks_binned_table(counts)
+    return ks_binned_table(_bin_counts_vs(spark, state_path, reference))

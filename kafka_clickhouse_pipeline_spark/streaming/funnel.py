@@ -8,11 +8,11 @@ can never drift (the incremental-dedup "pure transform twin" design).
 Per-user step flags are monotone ORs across batches.
 
 State architecture: replace-per-batch table under the shared
-staged-commit protocol (streaming/commit.py staged_foreach_batch;
-LOCAL-filesystem contract documented there). State per user is the
-(user_id, et, t) events inside the trailing FUNNEL_WINDOW_US of that
-user's max seen t, plus one flags row -- bounded by per-user 24h
-activity, independent of stream length.
+staged-commit protocol (streaming/commit.py state_writer; any path
+commit.py routes, local or a Hadoop FileSystem scheme). State per
+user is the (user_id, et, t) events inside the trailing
+FUNNEL_WINDOW_US of that user's max seen t, plus one flags row --
+bounded by per-user 24h activity, independent of stream length.
 
 Correctness contract: exact for event-time-ordered arrival ACROSS
 batches (any order within a batch is fine -- the range windows sort).
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.analytics import FUNNEL_STEPS, FUNNEL_WINDOW_US
+from .commit import read_latest_state, state_writer
 
 #: Retained-event rows: et NULL marks the per-user flags row, whose
 #: t packs nothing and whose l1/l2/l3 carry the monotone step flags.
@@ -45,8 +46,6 @@ FUNNEL_STATE_SCHEMA = StructType(
 
 
 def read_state(spark, state_path: str) -> DataFrame:
-    from .commit import read_latest_state
-
     return read_latest_state(spark, state_path, FUNNEL_STATE_SCHEMA)
 
 
@@ -152,17 +151,10 @@ def merge_batch(prior: DataFrame, batch: DataFrame) -> DataFrame:
 def funnel_writer(state_path: str):
     """foreachBatch function: effectively-once replace-style update of
     the per-user funnel state (protocol enforced by
-    commit.staged_foreach_batch)."""
-    from .commit import staged_foreach_batch
-
-    def _body(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
-        spark = batch_df.sparkSession
-        new_state = merge_batch(read_state(spark, state_path), batch_df)
-        new_state.repartition(1).write.mode("overwrite").parquet(
-            staging[state_path]
-        )
-
-    return staged_foreach_batch(state_path, [state_path], _body)
+    commit.state_writer)."""
+    return state_writer(
+        state_path, lambda b: merge_batch(read_state(b.sparkSession, state_path), b)
+    )
 
 
 def current_funnel(spark, state_path: str) -> DataFrame:

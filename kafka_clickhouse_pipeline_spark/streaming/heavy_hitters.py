@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .commit import read_latest_state, state_writer
+
 #: Counter budget of the maintained summary (shares the batch
 #: operator's headroom rationale, text.py MG_CAPACITY).
 STREAM_MG_CAPACITY = 256
@@ -51,10 +53,8 @@ SUMMARY_SCHEMA = StructType(
 def read_summary(spark, state_path: str) -> DataFrame:
     """The latest committed summary (term rows + the NULL-term total
     row); empty frame when no batch has committed yet. Replace-style
-    state on a LOCAL filesystem path (see streaming/commit.py's
-    module contract)."""
-    from .commit import read_latest_state
-
+    state on any path streaming/commit.py routes (local or a Hadoop
+    FileSystem scheme)."""
     return read_latest_state(spark, state_path, SUMMARY_SCHEMA)
 
 
@@ -109,17 +109,13 @@ def merge_and_trim(
 def heavy_hitters_writer(state_path: str, capacity: int = STREAM_MG_CAPACITY):
     """foreachBatch function: effectively-once replace-style update of
     the MG summary state (protocol enforced by
-    commit.staged_foreach_batch)."""
-    from .commit import staged_foreach_batch
-
-    def _body(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
-        spark = batch_df.sparkSession
-        merged = merge_and_trim(
-            read_summary(spark, state_path), batch_term_counts(batch_df), capacity
-        )
-        merged.repartition(1).write.mode("overwrite").parquet(staging[state_path])
-
-    return staged_foreach_batch(state_path, [state_path], _body)
+    commit.state_writer)."""
+    return state_writer(
+        state_path,
+        lambda b: merge_and_trim(
+            read_summary(b.sparkSession, state_path), batch_term_counts(b), capacity
+        ),
+    )
 
 
 def current_heavy_hitters(spark, state_path: str, k: int = 64) -> DataFrame:

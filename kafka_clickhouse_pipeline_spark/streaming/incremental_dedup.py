@@ -50,40 +50,6 @@ def fingerprint(text_col: Column) -> Column:
 INDEX_SCHEMA = StructType([StructField("fingerprint", StringType(), False)])
 
 
-def _read_index(spark, index_path: str) -> DataFrame:
-    """The fingerprint index, or an empty frame before the first
-    commit. Read through Spark (works on any filesystem the cluster
-    sees -- ``_staging``/``_commits`` are underscore-prefixed, which
-    Spark's file listing treats as hidden); ONLY a missing path gets
-    the empty-frame fallback -- any other read failure (permissions, a
-    transient filesystem outage) must fail the batch, because treating
-    it as 'empty index' would silently publish historical duplicates
-    and append their fingerprints, corrupting the corpus permanently."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(INDEX_SCHEMA).parquet(index_path)
-    except AnalysisException as exc:
-        if _is_path_not_found(exc):
-            return spark.createDataFrame([], INDEX_SCHEMA)
-        raise
-
-
-def _is_path_not_found(exc) -> bool:
-    """Detect a missing-path AnalysisException by error class, with a
-    message-substring fallback for Spark versions that phrase the error
-    differently ('Path does not exist' in 3.x)."""
-    for accessor in ("getCondition", "getErrorClass"):
-        try:
-            if getattr(exc, accessor)() == "PATH_NOT_FOUND":
-                return True
-            break  # accessor worked; no need to try the older name
-        except Exception:
-            continue
-    msg = str(exc)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
-
 def dedup_batch_against_index(batch: DataFrame, index: DataFrame) -> DataFrame:
     """Pure transform: one micro-batch of documents -> the subset that
     is new, deduped within the batch (deterministic: min doc_id wins a
@@ -106,15 +72,17 @@ def incremental_dedup_writer(out_path: str, index_path: str, target_files: int =
     no-op, and half-written files from a crashed attempt are named by
     batch id so they are swept before re-publish.
     """
-    from .commit import staged_foreach_batch
+    from .commit import read_state, staged_foreach_batch
 
     def _body(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
         # the wrapper has already swept this batch id's half-published
         # files, so reading the index here cannot see a crashed
         # attempt's own fingerprints (the ADVICE r3 replay data-loss
-        # window)
+        # window); read_state also hides any other batch published but
+        # not marked
         spark = batch_df.sparkSession
-        fresh = dedup_batch_against_index(batch_df, _read_index(spark, index_path))
+        index = read_state(spark, index_path, INDEX_SCHEMA, marker_dir=out_path)
+        fresh = dedup_batch_against_index(batch_df, index)
         fresh.repartition(target_files).write.mode("overwrite").parquet(
             staging[out_path]
         )

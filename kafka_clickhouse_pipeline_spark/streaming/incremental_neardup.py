@@ -151,34 +151,19 @@ def neardup_batch_against_index(batch: DataFrame, index: DataFrame) -> DataFrame
     return batch.join(dropped, "doc_id", "left_anti")
 
 
-def _read_index(spark, index_path: str) -> DataFrame:
-    """Empty-frame fallback ONLY for a missing path (before the first
-    commit); any other failure must fail the batch -- see
-    incremental_dedup._read_index for why."""
-    from pyspark.errors import AnalysisException
-
-    from .incremental_dedup import _is_path_not_found
-
-    try:
-        return spark.read.schema(INDEX_SCHEMA).parquet(index_path)
-    except AnalysisException as exc:
-        if _is_path_not_found(exc):
-            return spark.createDataFrame([], INDEX_SCHEMA)
-        raise
-
-
 def incremental_neardup_writer(out_path: str, index_path: str, target_files: int = 4):
     """foreachBatch function: effectively-once append of near-unique
     docs to ``out_path`` and their exploded band rows to
     ``index_path`` (staged-commit protocol shared with the exact
     writer -- streaming/commit.py)."""
-    from .commit import staged_foreach_batch
+    from .commit import read_state, staged_foreach_batch
 
     def _body(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
-        # sweep-before-read is enforced by the wrapper -- see
-        # commit.staged_foreach_batch
+        # sweep-before-read is enforced by the wrapper, and read_state
+        # shows committed index rows only -- see incremental_dedup
         spark = batch_df.sparkSession
-        fresh = neardup_batch_against_index(batch_df, _read_index(spark, index_path))
+        index = read_state(spark, index_path, INDEX_SCHEMA, marker_dir=out_path)
+        fresh = neardup_batch_against_index(batch_df, index)
         fresh.repartition(target_files).write.mode("overwrite").parquet(
             staging[out_path]
         )

@@ -34,6 +34,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.advanced import KMV_K, _kmv_hex32
 from ..operators.topk import grouped_topk
+from .commit import read_latest_state, state_writer
 
 SKETCH_SCHEMA = StructType(
     [
@@ -45,10 +46,8 @@ SKETCH_SCHEMA = StructType(
 
 def read_sketch(spark, state_path: str) -> DataFrame:
     """The latest committed per-group bottom-K hash table; empty frame
-    when no batch has committed yet. Replace-style state on a LOCAL
-    filesystem path (see streaming/commit.py's module contract)."""
-    from .commit import read_latest_state
-
+    when no batch has committed yet. Replace-style state on any path
+    streaming/commit.py routes (local or a Hadoop FileSystem scheme)."""
     return read_latest_state(spark, state_path, SKETCH_SCHEMA)
 
 
@@ -78,16 +77,12 @@ def merge_bottom_k(
 def kmv_writer(state_path: str, k: int = KMV_K):
     """foreachBatch function: effectively-once replace-style update of
     the per-group KMV sketch state."""
-    from .commit import staged_foreach_batch
-
-    def _body(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
-        spark = batch_df.sparkSession
-        merged = merge_bottom_k(
-            read_sketch(spark, state_path), batch_hashes(batch_df), k
-        )
-        merged.repartition(1).write.mode("overwrite").parquet(staging[state_path])
-
-    return staged_foreach_batch(state_path, [state_path], _body)
+    return state_writer(
+        state_path,
+        lambda b: merge_bottom_k(
+            read_sketch(b.sparkSession, state_path), batch_hashes(b), k
+        ),
+    )
 
 
 def current_distinct_estimates(spark, state_path: str, k: int = KMV_K) -> DataFrame:

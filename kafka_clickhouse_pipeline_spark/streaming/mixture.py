@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .commit import read_state, state_writer
+
 COUNTS_SCHEMA = StructType(
     [
         StructField("source", StringType(), False),
@@ -51,16 +53,8 @@ def batch_source_counts(batch: DataFrame) -> DataFrame:
 
 def read_counts(spark, state_path: str) -> DataFrame:
     """Cumulative per-source counts: the sum of every committed delta
-    file (missing path = empty state, same fail-closed contract as the
-    incremental-dedup index reader)."""
-    from .incremental_dedup import _is_path_not_found
-
-    try:
-        deltas = spark.read.schema(COUNTS_SCHEMA).parquet(state_path)
-    except Exception as exc:  # noqa: BLE001 -- only PATH_NOT_FOUND is benign
-        if _is_path_not_found(exc):
-            return spark.createDataFrame([], COUNTS_SCHEMA)
-        raise
+    file (commit.read_state: missing path = empty state)."""
+    deltas = read_state(spark, state_path, COUNTS_SCHEMA)
     return deltas.groupBy("source").agg(F.sum("n_tokens").alias("n_tokens"))
 
 
@@ -75,14 +69,7 @@ def current_thresholds(spark, state_path: str) -> DataFrame:
 def mixture_writer(state_path: str):
     """foreachBatch function: effectively-once append of this batch's
     per-source token-count delta to the state table."""
-    from .commit import staged_foreach_batch
-
-    def _body(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
-        batch_source_counts(batch_df).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(staging[state_path])
-
-    return staged_foreach_batch(state_path, [state_path], _body)
+    return state_writer(state_path, batch_source_counts)
 
 
 def mixture_stream(docs_stream: DataFrame, state_path: str, checkpoint: str):

@@ -64,7 +64,9 @@ def idempotent_batch_writer(path: str, target_files: int = 4):
 
 
 def write_batch_to_table(df: DataFrame, path: str, target_files: int = 4) -> None:
-    """Batch variant of the same layout (used by tests and backfills)."""
+    """Write ``df`` in the table layout (event_month partitions, sorted
+    files): the one write chain of the batch sink, compaction and
+    backfills."""
     (
         prepare_batch(df, target_files)
         .write.mode("overwrite")
@@ -311,12 +313,7 @@ def compact_partitions(
     ]
     subset = spark.read.option("basePath", path).parquet(*in_files)
     staging = fs.join(staging_root, f"compact-{cid}")
-    (
-        prepare_batch(subset.drop("event_month"), target_files)
-        .write.mode("overwrite")
-        .partitionBy("event_month")
-        .parquet(staging)
-    )
+    write_batch_to_table(subset.drop("event_month"), staging, target_files)
     # 6. publish under c{cid}- names (no marker yet: invisible)
     manifest: dict[str, dict] = {}
     for part in crowded:
@@ -349,11 +346,6 @@ def overwrite_partitions(df: DataFrame, path: str, target_files: int = 4) -> Non
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            prepare_batch(df, target_files)
-            .write.mode("overwrite")
-            .partitionBy("event_month")
-            .parquet(path)
-        )
+        write_batch_to_table(df, path, target_files)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

@@ -9,6 +9,7 @@ itself so a refactor of any single writer can't reorder the protocol.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -298,24 +299,19 @@ class TestListAfterWriteLag:
         finally:
             commit._LocalBackend.glob = real_glob
 
-    def test_legacy_marker_falls_back_to_glob(self, tmp_path, spark):
+    def test_text_marker_raises_naming_its_path(self, tmp_path, spark):
+        """A marker that is not a v2 manifest (the pre-manifest text
+        form) is an error that names the marker file, never a cue to
+        list the directory instead."""
         dest = str(tmp_path / "state")
         os.makedirs(os.path.join(dest, "_commits"))
-        spark.createDataFrame(
-            [(2, "b")], "id bigint, s string"
-        ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stg"))
-        part = next(
-            f
-            for f in os.listdir(tmp_path / "stg")
-            if f.endswith(".parquet")
-        )
-        os.rename(
-            tmp_path / "stg" / part, os.path.join(dest, f"b0-{part}")
-        )
-        with open(os.path.join(dest, "_commits", "0"), "w") as f:
-            f.write("committed")  # pre-manifest marker
-        out = commit.read_latest_state(spark, dest, "id bigint, s string")
-        assert [tuple(r) for r in out.collect()] == [(2, "b")]
+        marker = os.path.join(dest, "_commits", "0")
+        with open(marker, "w") as f:
+            f.write("committed")
+        with pytest.raises(ValueError, match=re.escape(repr(marker))):
+            commit.read_marker_manifest(dest, 0)
+        with pytest.raises(ValueError, match=re.escape(repr(marker))):
+            commit.read_latest_state(spark, dest, "id bigint, s string")
 
 
 class TestCompactionProtocol:
@@ -489,3 +485,113 @@ class TestCompactionProtocol:
             writer(df, b)
         assert compact_partitions(spark, path, max_files_per_partition=2) == []
         assert read_table(spark, path).count() == 30
+
+
+class TestCommittedOnlyReaders:
+    """commit.read_state shows a reader every file a committed batch
+    published and nothing else: a batch published but not yet marked
+    (a crash between publish_staged and write_marker) stays invisible
+    until its replay commits it. A missing state path reads as empty;
+    any other read failure propagates."""
+
+    @staticmethod
+    def _use_backend(request, backend):
+        if backend == "hadoop_fs":
+            request.getfixturevalue("hadoop_fs")
+
+    @staticmethod
+    def _batches(spark, state):
+        import datetime
+
+        if state == "drift":
+            from kafka_clickhouse_pipeline_spark.streaming.drift import (
+                drift_writer as writer,
+                read_bin_counts as read,
+            )
+
+            schema = "event_id BIGINT, ts TIMESTAMP, value DOUBLE"
+            ts = datetime.datetime(2024, 1, 2)
+            rows = [[(1, ts, 5.0)], [(2, ts, 30.0)]]
+        else:
+            from kafka_clickhouse_pipeline_spark.streaming.mixture import (
+                mixture_writer as writer,
+                read_counts as read,
+            )
+
+            schema = "doc_id BIGINT, text STRING, source STRING"
+            rows = [[(1, "a b c", "s1")], [(2, "d e", "s2")]]
+        batches = [spark.createDataFrame(r, schema) for r in rows]
+        return writer, read, batches
+
+    @pytest.mark.parametrize("backend", ["local", "hadoop_fs"])
+    @pytest.mark.parametrize("state", ["drift", "mixture"])
+    def test_uncommitted_batch_is_hidden_until_replay(
+        self, state, backend, request, spark, tmp_path
+    ):
+        self._use_backend(request, backend)
+        writer, read, (b0, b1) = self._batches(spark, state)
+        path = str(tmp_path / "state")
+        w = writer(path)
+
+        def counts():
+            return sorted(tuple(r) for r in read(spark, path).collect())
+
+        w(b0, 0)
+        batch0 = counts()
+        assert batch0  # the committed batch is visible
+        # crash window: batch 1 published, marker not yet written
+        w(b1, 1)
+        both = counts()
+        os.remove(commit.marker_path(path, 1))
+        assert any(f.startswith("b1-") for f in os.listdir(path))
+        assert commit.latest_committed(path) == 0
+        assert counts() == batch0
+        w(b1, 1)  # the replay commits it
+        assert counts() == both != batch0
+
+    def test_unmarked_index_file_does_not_suppress_a_fresh_doc(
+        self, spark, tmp_path
+    ):
+        from pyspark.sql import functions as F
+
+        from kafka_clickhouse_pipeline_spark.streaming.incremental_dedup import (
+            fingerprint,
+            incremental_dedup_writer,
+        )
+
+        schema = "doc_id BIGINT, text STRING, source STRING"
+        out, idx = str(tmp_path / "docs"), str(tmp_path / "index")
+        writer = incremental_dedup_writer(out, idx)
+        writer(spark.createDataFrame([(1, "old doc", "s")], schema), 0)
+        # a stray b9-* index file whose batch never committed, holding
+        # the fingerprint of the document batch 10 brings
+        stray = str(tmp_path / "stray")
+        spark.createDataFrame([("fresh doc",)], "text string").select(
+            fingerprint(F.col("text")).alias("fingerprint")
+        ).coalesce(1).write.parquet(stray)
+        part = next(f for f in os.listdir(stray) if f.endswith(".parquet"))
+        os.rename(os.path.join(stray, part), os.path.join(idx, f"b9-{part}"))
+        writer(spark.createDataFrame([(2, "fresh doc", "s")], schema), 10)
+        kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+        assert kept == {1, 2}
+
+    @pytest.mark.parametrize("backend", ["local", "hadoop_fs"])
+    def test_missing_path_reads_as_empty(self, backend, request, spark, tmp_path):
+        self._use_backend(request, backend)
+        out = commit.read_state(spark, str(tmp_path / "none"), "x bigint")
+        assert out.collect() == []
+
+    @pytest.mark.parametrize("backend", ["local", "hadoop_fs"])
+    def test_unreadable_committed_file_raises(
+        self, backend, request, spark, tmp_path
+    ):
+        """Fail closed: a path that exists and holds a marked batch
+        whose file is not parquet must raise, not read as empty."""
+        from py4j.protocol import Py4JJavaError
+
+        self._use_backend(request, backend)
+        path = str(tmp_path / "state")
+        _touch(os.path.join(path, "b0-part-0.parquet"), "not parquet")
+        commit.write_marker(path, 0, {path: ["b0-part-0.parquet"]})
+        with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+            commit.read_state(spark, path, "x bigint").collect()
