@@ -67,16 +67,27 @@ def parse_json_payload(df: DataFrame, schema: StructType) -> DataFrame:
     the rows ClickHouse's skip setting would discard, while valid JSON
     with missing fields still lands with NULLs (the MV layer's
     ``price IS NOT NULL`` then applies downstream, matching the
-    reference's layering)."""
+    reference's layering).
+
+    Each line is parsed once: the struct comes out of a one-element
+    ``explode``, which the optimizer cannot push the filter below. Over
+    a plain projection ``PushPredicateThroughNonJoin`` would inline
+    ``from_json`` into the filter and parse each line three times, all
+    outside whole-stage codegen (``JsonToStructs`` is
+    ``CodegenFallback``)."""
     from pyspark.sql.types import StringType, StructField
 
     corrupt = "_corrupt_record"
     aug = StructType(list(schema.fields) + [StructField(corrupt, StringType(), True)])
     parsed = df.select(
-        F.from_json(
-            F.col("value"),
-            aug,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt},
+        F.explode(
+            F.array(
+                F.from_json(
+                    F.col("value"),
+                    aug,
+                    {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt},
+                )
+            )
         ).alias("data")
     )
     return parsed.filter(

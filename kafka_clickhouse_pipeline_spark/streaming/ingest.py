@@ -86,7 +86,11 @@ class PipelineManager:
 
     def progress(self, name: str) -> dict:
         """Operational metrics for a running stream (the /api/status
-        analog for the ingest side): rows/sec, batch id, watermark."""
+        analog for the ingest side) from its last progress event:
+        rows/sec, batch id, watermark, the trigger's ``durationMs``
+        phases (``addBatch``, ``getBatch``, ``walCommit``,
+        ``triggerExecution``, ...) and each state operator's row and
+        memory counts (none for the stateless MV streams)."""
         q = self._queries.get(name)
         if q is None or q.lastProgress is None:
             return {"name": name, "state": "detached"}
@@ -99,6 +103,14 @@ class PipelineManager:
             "processed_rows_per_second": p.get("processedRowsPerSecond"),
             "num_input_rows": p.get("numInputRows"),
             "watermark": (p.get("eventTime") or {}).get("watermark"),
+            "duration_ms": dict(p.get("durationMs") or {}),
+            "state_operators": [
+                {
+                    "num_rows_total": op.get("numRowsTotal"),
+                    "memory_used_bytes": op.get("memoryUsedBytes"),
+                }
+                for op in p.get("stateOperators") or []
+            ],
         }
 
     def detach_all(self) -> None:

@@ -82,15 +82,17 @@ def hadoop_fs(monkeypatch, spark):
     """Route every plain path and file: URI in streaming/commit.py
     through the Hadoop FileSystem backend (the JVM LocalFileSystem): the
     exact globStatus/rename/create/delete calls an s3a:// or hdfs://
-    table makes, no mocks."""
+    table makes, no mocks. The replacement keeps ``_backend``'s
+    signature, so callers that pass the session by keyword work too."""
     real_backend = commit._backend
+    session = spark
 
-    def forced(path, spark_arg=None):
+    def forced(path, spark=None):
         if path.startswith("/"):
-            return commit._HadoopBackend(f"file://{path}", spark=spark), path
+            return commit._HadoopBackend(f"file://{path}", spark=spark or session), path
         if path.startswith("file:"):
-            return commit._HadoopBackend(path, spark=spark), path
-        return real_backend(path, spark_arg)
+            return commit._HadoopBackend(path, spark=spark or session), path
+        return real_backend(path, spark)
 
     monkeypatch.setattr(commit, "_backend", forced)
 

@@ -246,3 +246,73 @@ def test_chunking_transform_runs_in_streaming_pipeline(spark, tmp_path, sf_dir):
     q.awaitTermination(300)
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert got == expected
+
+
+def test_parse_json_payload_parses_each_line_once(spark, tmp_path):
+    """The optimized plan of the source parse holds one ``from_json``:
+    the filter on the parsed struct is not pushed below the parse, so
+    the parse is not inlined into it."""
+    from kafka_clickhouse_pipeline_spark.schemas import SALES_RAW_SCHEMA
+    from kafka_clickhouse_pipeline_spark.sources.kafka import parse_json_payload
+
+    src = tmp_path / "lines.jsonl"
+    src.write_text(json.dumps(SALES_EVENTS[0]) + "\n")
+    parsed = parse_json_payload(spark.read.text(str(src)), SALES_RAW_SCHEMA)
+    plan = parsed._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 1
+
+
+def test_parse_json_payload_drop_rule(spark):
+    """A null struct or a non-null corrupt record is dropped: a null
+    message, plain garbage and brace-prefixed garbage. ``{}``, null
+    values and a missing field land with NULLs."""
+    from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
+
+    from kafka_clickhouse_pipeline_spark.sources.kafka import parse_json_payload
+
+    schema = StructType([
+        StructField("event_id", StringType()),
+        StructField("product_id", LongType()),
+        StructField("price", DoubleType()),
+    ])
+    lines = [
+        '{"event_id": "a", "product_id": 1, "price": 1.5}',
+        '{"event_id": "no_price", "product_id": 2}',
+        '{"event_id": "nulls", "product_id": null, "price": null}',
+        "{}",
+        "{not json",
+        "BROKEN LINE",
+        None,
+    ]
+    df = spark.createDataFrame([(v,) for v in lines], "value STRING")
+    got = sorted(map(tuple, parse_json_payload(df, schema).collect()), key=repr)
+    assert got == sorted(
+        [("a", 1, 1.5), ("no_price", 2, None), ("nulls", None, None), (None, None, None)], key=repr
+    )
+
+
+def test_progress_reports_trigger_phases(spark, tmp_path):
+    """``progress()`` over an availableNow drain: the last trigger's
+    ``durationMs`` phases (``addBatch`` within ``triggerExecution``)
+    and no state operators for the stateless MV stream; an unknown
+    stream reads as detached."""
+    sales_in = tmp_path / "in_sales"
+    sales_in.mkdir()
+    with open(sales_in / "batch1.jsonl", "w") as f:
+        for ev in SALES_EVENTS:
+            f.write(json.dumps(ev) + "\n")
+    mgr = file_pipeline(
+        spark, str(sales_in), str(sales_in), str(tmp_path / "sales"),
+        str(tmp_path / "stock"), str(tmp_path / "ckpt"),
+    )
+    q = mgr.attach("sales_mv", trigger_available_now=True)
+    q.awaitTermination(120)
+    p = mgr.progress("sales_mv")
+    mgr.detach_all()
+    assert {"batch_id", "num_input_rows", "duration_ms", "state_operators"} <= set(p)
+    d = p["duration_ms"]
+    assert {"addBatch", "getBatch", "walCommit", "triggerExecution"} <= set(d)
+    assert 0 <= d["addBatch"] <= d["triggerExecution"]
+    assert p["num_input_rows"] == len(SALES_EVENTS)
+    assert p["state_operators"] == []
+    assert mgr.progress("no_such_stream") == {"name": "no_such_stream", "state": "detached"}
