@@ -25,6 +25,35 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: The confs that size a file scan's splits (Spark's
+#: ``FilePartition.maxSplitBytes``); part of every file version, so a
+#: conf change in the same session is seen.
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+)
+
+
+def file_version(spark: SparkSession, sf_dir: str, name: str) -> tuple | None:
+    """The version of table ``name``'s file that every per-file cache
+    keys on: ``(st_ino, st_size, st_mtime_ns, st_ctime_ns, split
+    confs)``, or None for a missing table or one that is not a regular
+    file. The inode and ctime catch a same-size restore that keeps its
+    mtime (``cp -p``, ``shutil.copy2``). A directory table (a streaming
+    sink's output) has no version, because its top-level stat does not
+    move when a batch lands in a partition subdirectory; nothing about
+    it is cached."""
+    try:
+        st = os.stat(table_path(sf_dir, name))
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _SPLIT_CONFS)
+    return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns, confs)
+
+
 #: Parquet schema per file version. A plain ``spark.read.parquet(path)``
 #: infers the schema by running a footer-reading Spark job on every
 #: call. Reading with the schema an earlier read inferred starts no
@@ -32,34 +61,35 @@ def table_path(sf_dir: str, name: str) -> str:
 #: (sales/stock/recent/status/sql) to 4/2/1/4/3, and on the sf0.1
 #: serving benchmark (4-vCPU VM, local[4]) the median warm
 #: ``load_table`` from 124 to 24 ms and ``register_views`` over the
-#: ten fixture tables from 1.26 to 0.35 s. The key is the
-#: file's identity, so a rewritten file or a directory table that a
-#: Spark overwrite or append touches (its mtime moves) is inferred
-#: afresh; the session is part of it because inference reads its
-#: confs. ``lru_cache`` is thread-safe; two threads that miss at once
-#: both infer the same schema. The cached StructType is only passed to
-#: ``spark.read.schema``, never handed to a caller. Bounded, because
-#: every rewrite of a file adds a key.
+#: ten fixture tables from 1.26 to 0.35 s. A rewritten file is
+#: inferred afresh; the session is part of the key because inference
+#: reads its confs. ``lru_cache`` is thread-safe; two threads that
+#: miss at once both infer the same schema. The cached StructType is
+#: only passed to ``spark.read.schema``, never handed to a caller.
+#: Bounded, because every rewrite of a file adds a key.
 @functools.lru_cache(maxsize=256)
-def _parquet_schema(spark: SparkSession, path: str, mtime_ns: int, size: int) -> StructType:
+def _parquet_schema(spark: SparkSession, path: str, version: tuple) -> StructType:
     return spark.read.parquet(path).schema
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        st = os.stat(path)
-    except OSError:  # missing table: Spark raises its own PATH_NOT_FOUND
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = table_path(sf_dir, name)
+    version = file_version(spark, sf_dir, name)
+    if version is None:  # Spark infers, or raises its own PATH_NOT_FOUND
         return spark.read.parquet(path)
-    schema = _parquet_schema(spark, path, st.st_mtime_ns, st.st_size)
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(_parquet_schema(spark, path, version)).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table with the vectorized reader and
-    pushdown/pruning. The schema comes from a cache keyed on the
-    file's ``(path, st_mtime_ns, st_size)``: only the first read of a
-    file version runs Spark's schema-inference job. The file listing
-    still runs on every read, so new rows are always seen.
+    pushdown/pruning. The schema comes from a cache keyed on
+    ``file_version``: only the first read of a file version runs
+    Spark's schema-inference job (a directory table, which has no
+    version, is inferred on every read). Each call lists the files
+    afresh, so the returned DataFrame reads the table as it is now; a
+    caller that keeps a DataFrame across calls (``serving_app``'s
+    stored chart queries) keys it on ``file_version`` to see a
+    rewrite.
 
     ``events.ts`` is physically TIMESTAMP(NANOS), which Spark's reader
     rejects; read it as long nanos (legacy conf) and floor-convert to a
@@ -68,48 +98,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, table_path(sf_dir, name))
+        df = _read_parquet(spark, sf_dir, name)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return _read_parquet(spark, table_path(sf_dir, name))
-
-
-#: The confs that size a file scan's splits (Spark's
-#: ``FilePartition.maxSplitBytes``); part of the partition-count key,
-#: so a conf change in the same session is seen.
-_SPLIT_CONFS = (
-    "spark.sql.files.maxPartitionBytes",
-    "spark.sql.files.openCostInBytes",
-    "spark.sql.files.minPartitionNum",
-)
+    return _read_parquet(spark, sf_dir, name)
 
 
 @functools.lru_cache(maxsize=256)
-def _scan_partitions(
-    spark: SparkSession, sf_dir: str, name: str, mtime_ns: int, size: int, confs: tuple
-) -> int:
+def _scan_partitions(spark: SparkSession, sf_dir: str, name: str, version: tuple) -> int:
     # ``.rdd`` plans the scan without running it: no Spark job
     return load_table(spark, sf_dir, name).rdd.getNumPartitions()
 
 
 def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int | None:
     """Input partitions of ``load_table(spark, sf_dir, name)``'s scan,
-    as Spark plans them, or None for a table that is not one regular
-    file. Read from the plan once per ``(session, path, mtime_ns,
-    size)`` and split confs: uncached, planning the scan costs 18-32
-    ms per call on top of ``load_table`` (sf0.1 ``events``, 4-vCPU VM).
-    A directory table (a streaming sink's output) gets None,
-    because its top-level mtime does not move when a batch lands in a
-    partition subdirectory."""
-    try:
-        st = os.stat(table_path(sf_dir, name))
-    except OSError:
+    as Spark plans them, or None for a table without a
+    ``file_version`` (missing, or a directory). Read from the plan once
+    per file version: uncached, planning the scan costs 18-32 ms per
+    call on top of ``load_table`` (sf0.1 ``events``, 4-vCPU VM)."""
+    version = file_version(spark, sf_dir, name)
+    if version is None:
         return None
-    if not stat.S_ISREG(st.st_mode):
-        return None
-    confs = tuple(spark.conf.get(k, None) for k in _SPLIT_CONFS)
-    return _scan_partitions(spark, sf_dir, name, st.st_mtime_ns, st.st_size, confs)
+    return _scan_partitions(spark, sf_dir, name, version)
 
 
 def register_views(

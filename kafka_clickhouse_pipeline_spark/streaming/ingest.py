@@ -170,16 +170,24 @@ def multiplexed_file_pipeline(
     inside a single foreachBatch -- one checkpoint, half the consumer
     overhead of two independent streams. One staged commit, marked on
     the sales table, publishes both, so a replayed batch is a no-op.
+    The batch is persisted for its two writes, so it is read and parsed
+    once.
     """
     mgr = PipelineManager(spark)
 
     def _route(batch_df: DataFrame, batch_id: int, staging: dict) -> None:
-        for kind, schema, parse, path in (
-            ("sale", SALES_RAW_SCHEMA, parse_sales, sales_path),
-            ("stock_movement", WAREHOUSE_RAW_SCHEMA, parse_stock, stock_path),
-        ):
-            events = batch_df.filter(F.col("event_type") == kind).select(*schema.names)
-            write_batch_to_table(parse(events), staging[path])
+        # each table is written by its own job; persisted, the batch's
+        # files are read and its lines parsed by the first job only
+        batch_df.persist()
+        try:
+            for kind, schema, parse, path in (
+                ("sale", SALES_RAW_SCHEMA, parse_sales, sales_path),
+                ("stock_movement", WAREHOUSE_RAW_SCHEMA, parse_stock, stock_path),
+            ):
+                events = batch_df.filter(F.col("event_type") == kind).select(*schema.names)
+                write_batch_to_table(parse(events), staging[path])
+        finally:
+            batch_df.unpersist()
 
     mgr.register(
         StreamDefinition(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
@@ -13,6 +14,7 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from kafka_clickhouse_pipeline_spark.catalog import (
+    file_version,
     load_table,
     register_views,
     scan_partitions,
@@ -54,8 +56,8 @@ def test_warm_register_views_starts_no_job(spark, sf_dir, count_jobs):
 
 
 def test_rewritten_table_is_read_with_its_new_schema(spark, tmp_path):
-    """The cached schema is keyed on the file's (path, mtime, size): a
-    rewrite with another column and other rows is read afresh."""
+    """The cached schema is keyed on the file's version: a rewrite with
+    another column and other rows is read afresh."""
     path = table_path(str(tmp_path), "t")
     pq.write_table(pa.table({"id": [1, 2], "v": ["a", "b"]}), path)
     first = load_table(spark, str(tmp_path), "t")
@@ -109,3 +111,27 @@ def test_scan_partitions_is_none_for_a_directory_table(spark, tmp_path):
     assert scan_partitions(spark, str(tmp_path), "t") is None
     assert scan_partitions(spark, str(tmp_path), "no_such_table") is None
     assert load_table(spark, str(tmp_path), "t").count() == 2
+
+
+def test_file_version_sees_a_same_size_restore_that_keeps_its_mtime(spark, tmp_path):
+    """``shutil.copy2`` of another file of the same size and mtime over a
+    table (a ``cp -p`` restore) keeps the table's size and mtime, but not
+    its ctime: ``file_version`` changes, and the new rows are read."""
+    path = table_path(str(tmp_path), "t")
+    other = str(tmp_path / "other.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), path)
+    pq.write_table(pa.table({"id": [3, 4]}), other)
+    st = os.stat(path)
+    os.utime(other, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.path.getsize(other) == st.st_size
+    assert sorted(r.id for r in load_table(spark, str(tmp_path), "t").collect()) == [1, 2]
+    before = file_version(spark, str(tmp_path), "t")
+    time.sleep(0.1)  # past the file system's coarse timestamp clock
+
+    shutil.copy2(other, path)
+    after = os.stat(path)
+    assert (after.st_size, after.st_mtime_ns) == (st.st_size, st.st_mtime_ns)
+    assert file_version(spark, str(tmp_path), "t") != before
+    assert sorted(r.id for r in load_table(spark, str(tmp_path), "t").collect()) == [3, 4]
+    assert file_version(spark, str(tmp_path), "no_such_table") is None
+    assert file_version(spark, str(tmp_path), "other") is not None

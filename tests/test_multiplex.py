@@ -98,3 +98,63 @@ def test_replayed_batch_lands_each_event_once(spark, tmp_path):
     stock = [r.event_id for r in spark.read.parquet(stock_path).collect()]
     assert sorted(sales) == [f"s{i}" for i in range(10) if i % 10 < 7]
     assert sorted(stock) == [f"w{i}" for i in range(10) if i % 10 >= 7]
+
+
+def _group_stages(spark, group: str) -> list[dict]:
+    """Every stage of the jobs in Spark job group ``group``, from the
+    status REST API."""
+    import urllib.request
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    port = sc.uiWebUrl.rsplit(":", 1)[1]
+    base = f"http://127.0.0.1:{port}/api/v1/applications/{sc.applicationId}"
+
+    def get(path):
+        with urllib.request.urlopen(base + path, timeout=60) as resp:
+            return json.loads(resp.read())
+
+    jobs = [j for j in get("/jobs") if j.get("jobGroup") == group]
+    return [a for j in jobs for s in j["stageIds"] for a in get(f"/stages/{s}")]
+
+
+def test_batch_is_read_and_parsed_once(spark, tmp_path):
+    """Both tables' writes share one read and parse of the micro-batch:
+    of the two write jobs, one stage reads the 1,000 input lines and
+    the other reads the persisted batch, which Spark counts as one
+    input record per cached column batch (1,000 rows fit in one)."""
+    import uuid
+
+    from pyspark.storagelevel import StorageLevel
+
+    src = tmp_path / "in"
+    src.mkdir()
+    sale = {"event_type": "sale", "event_time": "2024-01-15 10:00:00", "product_id": 1,
+            "product_name": "p", "category": "c", "quantity": 1, "price": 10.0,
+            "discount": 0.0, "total": 10.0, "store_id": 1, "cashier_id": 1,
+            "customer_id": "c1"}
+    stock = {"event_type": "stock_movement", "event_time": "2024-01-15 11:00:00",
+             "product_id": 2, "product_name": "p", "category": "c", "warehouse": "W1",
+             "quantity": 5, "movement_type": "supply", "source": "Acme", "responsible": "R"}
+    with open(src / "mixed.jsonl", "w") as f:
+        for i in range(1000):
+            ev = sale if i % 10 < 7 else stock
+            f.write(json.dumps({"event_id": f"e{i}", **ev}) + "\n")
+    sales_path, stock_path = str(tmp_path / "sales"), str(tmp_path / "stock")
+    mgr = multiplexed_file_pipeline(spark, str(src), sales_path, stock_path, str(tmp_path / "ckpt"))
+    batch = parse_json_payload(spark.read.text(str(src)), MERGED_RAW_SCHEMA)
+
+    sc = spark.sparkContext
+    group = f"multiplex-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        mgr.definitions["multiplex_mv"].foreach_batch(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    stages = _group_stages(spark, group)
+    assert sorted(s["inputRecords"] for s in stages) == [1, 1000]
+    assert batch.storageLevel == StorageLevel(False, False, False, False)  # unpersisted
+
+    assert spark.read.parquet(sales_path).count() == 700
+    assert spark.read.parquet(stock_path).count() == 300

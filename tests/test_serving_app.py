@@ -7,9 +7,16 @@ import json
 import logging
 import os
 import re
+import shutil
+import threading
 import time
+import urllib.error
 import urllib.request
+from concurrent.futures import ThreadPoolExecutor
 
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 
@@ -238,24 +245,134 @@ def test_one_split_gate_branches(spark, sf_dir, oracle, count_jobs, splits, jobs
     public route functions: byte-identical payloads to the DuckDB
     oracles, and the jobs each branch plans. The many-split branch
     shrinks the split size in the same session, so a partition-count
-    cache that ignored the conf would keep coalescing and fail the pin."""
+    cache that ignored the conf would keep coalescing and fail the pin.
+
+    The first call prepares the route's stored query and runs the
+    branch's jobs; a warm call runs one job in both branches: with many
+    splits, re-running the finished adaptive plan reads the shuffle
+    output its first run materialized."""
     conf = "spark.sql.files.maxPartitionBytes"
     before = spark.conf.get(conf, None)
     if splits == "many":
         spark.conf.set(conf, str(os.path.getsize(table_path(sf_dir, "events")) // 4))
+    serving_app._prepared.cache_clear()
     try:
         n = load_table(spark, sf_dir, "events").rdd.getNumPartitions()
         assert (n == 1) if splits == "one" else (n > 1)
         expected = _oracle_payloads(oracle)
         for route, want in jobs.items():
             fn = serving_app.ROUTES[f"/api/{route}"]
-            assert json.dumps(fn(spark, sf_dir)) == json.dumps(expected[route]), route
-            assert count_jobs(lambda: fn(spark, sf_dir)) == want, route
+            got = []
+            assert count_jobs(lambda: got.append(fn(spark, sf_dir))) == want, route
+            assert count_jobs(lambda: got.append(fn(spark, sf_dir))) == 1, route
+            for payload in got:
+                assert json.dumps(payload) == json.dumps(expected[route]), route
+        info = serving_app._prepared.cache_info()
+        assert (info.misses, info.hits) == (4, 4)
     finally:
         if before is None:
             spark.conf.unset(conf)
         else:
             spark.conf.set(conf, before)
+
+
+def _duckdb_over(path: str):
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def test_stored_queries_under_concurrency(spark, sf_dir, oracle):
+    """8 threads x 4 routes, cold (all threads miss at once) and warm
+    (all run the stored plans at once): every payload equals DuckDB's."""
+    expected = _oracle_payloads(oracle)
+    serving_app._prepared.cache_clear()
+    barrier = threading.Barrier(8)
+
+    def client(i):
+        barrier.wait()
+        routes = list(expected)[i % 4:] + list(expected)[:i % 4]
+        return {r: serving_app.ROUTES[f"/api/{r}"](spark, sf_dir) for r in routes}
+
+    for _ in ("cold", "warm"):
+        with ThreadPoolExecutor(8) as pool:
+            results = list(pool.map(client, range(8)))
+        for got in results:
+            assert json.dumps(got, sort_keys=True) == json.dumps(expected, sort_keys=True)
+    assert serving_app._prepared.cache_info().currsize == 4
+
+
+def test_rewritten_events_file_is_prepared_again(spark, sf_dir, tmp_path):
+    """A rewrite of ``events.parquet`` in place (same inode) is a new
+    file version: the next request prepares its query again and
+    matches DuckDB over the new file."""
+    path = table_path(str(tmp_path), "events")
+    shutil.copyfile(table_path(sf_dir, "events"), path)
+    con = _duckdb_over(path)
+    first = _oracle_payloads(con)
+    for route in ("sales", "stock", "recent", "status"):
+        fn = serving_app.ROUTES[f"/api/{route}"]
+        assert json.dumps(fn(spark, str(tmp_path))) == json.dumps(first[route]), route
+
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, table.num_rows // 2), path)
+    expected = _oracle_payloads(con)
+    assert expected != first
+    for route in ("sales", "stock", "recent", "status"):
+        fn = serving_app.ROUTES[f"/api/{route}"]
+        misses = serving_app._prepared.cache_info().misses
+        assert json.dumps(fn(spark, str(tmp_path))) == json.dumps(expected[route]), route
+        assert serving_app._prepared.cache_info().misses == misses + 1, route
+    con.close()
+
+
+def test_directory_events_table_is_never_stored(spark, sf_dir, tmp_path):
+    """A directory ``events`` table (a streaming sink's output) is
+    planned on every request: nothing is stored, and a file that lands
+    in it is seen by the next request."""
+    d = table_path(str(tmp_path), "events")
+    os.makedirs(d)
+    table = pq.read_table(table_path(sf_dir, "events"))
+    half = table.num_rows // 2
+    pq.write_table(table.slice(0, half), os.path.join(d, "part-0.parquet"))
+    con = _duckdb_over(os.path.join(d, "*.parquet"))
+    serving_app._prepared.cache_clear()
+    for landed in (False, True):
+        if landed:
+            pq.write_table(table.slice(half), os.path.join(d, "part-1.parquet"))
+        for route in ("sales", "stock", "recent", "status"):
+            fn = serving_app.ROUTES[f"/api/{route}"]
+            assert json.dumps(fn(spark, str(tmp_path))) == json.dumps(
+                _oracle_payloads(con)[route]), route
+    info = serving_app._prepared.cache_info()
+    assert (info.currsize, info.hits, info.misses) == (0, 0, 0)
+    con.close()
+
+
+def test_time_zone_change_misses_the_stored_query(spark, sf_dir, tmp_path):
+    """The stored plan keeps the session time zone it was analysed in,
+    so a request after a time-zone change prepares its query again.
+    The fixture's ``ts`` is zone-less, so the rows here come from a copy
+    whose ``ts`` is a UTC instant: its hour labels move with the zone."""
+    table = pq.read_table(table_path(sf_dir, "events"))
+    ts = table["ts"].cast(pa.timestamp("us", tz="UTC"), safe=False)
+    table = table.set_column(table.schema.get_field_index("ts"), "ts", ts)
+    pq.write_table(table, table_path(str(tmp_path), "events"))
+    fn = serving_app.ROUTES["/api/sales"]
+    before = spark.conf.get("spark.sql.session.timeZone")
+    utc = fn(spark, str(tmp_path))
+    assert utc["labels"]
+    misses = serving_app._prepared.cache_info().misses
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        shifted = fn(spark, str(tmp_path))
+        assert serving_app._prepared.cache_info().misses == misses + 1
+        assert shifted["labels"] != utc["labels"]
+        serving_app._prepared.cache_clear()
+        assert fn(spark, str(tmp_path)) == shifted  # the same rows planned cold
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+    assert fn(spark, str(tmp_path)) == utc
 
 
 def test_api_sql_joins_two_tables(spark, sf_dir, oracle):
@@ -302,3 +419,67 @@ def test_requests_are_logged(server, caplog):
         time.sleep(0.05)
     assert len(lines) == 2 and all(pattern.fullmatch(ln) for ln in lines), lines
     assert all(r.levelno == logging.INFO for r in caplog.records if r.name == serving_app.log.name)
+
+
+def test_api_metrics_counts_requests(spark, sf_dir):
+    """``/api/metrics`` counts a known request mix per route: requests,
+    errors (status >= 400) and latency count, sum and buckets; and
+    reports the stored-query cache's hits and misses."""
+    httpd = serving_app.serve(spark, sf_dir, port=0)
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
+    try:
+        serving_app._prepared.cache_clear()
+        for _ in range(3):
+            assert _get(base, "/api/sales")[0] == 200
+        assert _get(base, "/api/status")[0] == 200
+        assert _post_sql(base, b"SELECT FROM nowhere")[0] == 400
+        assert _post_sql(base, b"SELECT 1 AS one")[0] == 200
+        with pytest.raises(urllib.error.HTTPError):
+            _get(base, "/no/such/path")
+        status, metrics = _get(base, "/api/metrics")
+        assert status == 200
+        routes = metrics["routes"]
+        assert {r: (m["requests"], m["errors"]) for r, m in routes.items()} == {
+            "/api/sales": (3, 0), "/api/status": (1, 0), "/api/sql": (2, 1), "other": (1, 1)}
+        buckets = [*map(str, serving_app.LATENCY_BUCKETS_MS), "+Inf"]
+        for m in routes.values():
+            lat = m["latency_ms"]
+            assert list(lat["buckets"]) == buckets
+            assert lat["count"] == sum(lat["buckets"].values()) == m["requests"]
+            assert lat["sum"] > 0
+        assert metrics["prepared"]["misses"] == 2  # sales, status
+        assert metrics["prepared"]["hits"] == 2  # the 2nd and 3rd sales
+        assert metrics["prepared"]["size"] == 2
+        # the first snapshot was counted before it was sent
+        assert _get(base, "/api/metrics")[1]["routes"]["/api/metrics"]["requests"] == 1
+    finally:
+        httpd.shutdown()
+
+
+def test_request_metrics_lose_no_update_under_contention():
+    """16 threads record at once with a tiny switch interval: every
+    counter is exact, so no read-modify-write was lost."""
+    import sys
+
+    metrics = serving_app.RequestMetrics()
+    barrier = threading.Barrier(16)
+
+    def worker(i):
+        barrier.wait(timeout=30)
+        for k in range(500):
+            metrics.record("/api/sales" if i % 2 else "/nope", 200 if k % 5 else 500, 1.0)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            for future in [pool.submit(worker, i) for i in range(16)]:
+                future.result(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    routes = metrics.snapshot()["routes"]
+    for route in ("/api/sales", "other"):
+        m = routes[route]
+        assert (m["requests"], m["errors"]) == (4000, 800)
+        assert m["latency_ms"]["count"] == m["latency_ms"]["buckets"]["5"] == 4000
+        assert m["latency_ms"]["sum"] == 4000.0
