@@ -32,7 +32,14 @@ round anyway), not the timing, and at sf0.1 they burned 127 s/round
 
 Each query is fully materialized with the no-op sink (executors do all
 the work, nothing collects to the driver), timed after a session
-warm-up so JVM startup isn't billed to the first query.
+warm-up so JVM startup isn't billed to the first query. Each timed key
+runs under its own Spark job group, and the detail file's ``layers``
+map splits its cost into jobs, stages, tasks, executor time, shuffle
+bytes, spill and Catalyst phases (see ``time_key``).
+
+``python bench.py NAME...`` times only the named keys the same way and
+prints their timings and layers; it writes nothing (see ``run_named``).
+``tools/ladder.py`` reuses its session builder and timer.
 """
 
 from __future__ import annotations
@@ -43,6 +50,7 @@ import sys
 import time
 
 from kafka_clickhouse_pipeline_spark.session import get_spark
+from perfbench import tracing
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -365,7 +373,7 @@ def _paired_canary(spark, qs) -> tuple[dict, dict]:
             ts = []
             for _ in range(2):
                 t0 = time.perf_counter()
-                fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+                materialize(fn(spark, SF_DIR))
                 ts.append(round(time.perf_counter() - t0, 3))
             pairs[key] = ts
         except Exception:  # noqa: BLE001 - canary must not fail the bench
@@ -430,67 +438,173 @@ def _append_canary(record: dict) -> None:
         fh.write(json.dumps(record) + "\n")
 
 
-def main() -> None:
+def session(app_name: str = "bench"):
+    """The session every timing over registry keys runs in."""
+    spark = get_spark(app_name=app_name)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warm_up(spark, sf_dir: str = SF_DIR) -> None:
+    """Warm up the JVM, codegen, and input-table file indexes without
+    billing any query (a long-running cluster has all of these hot)."""
+    from kafka_clickhouse_pipeline_spark.catalog import load_table
+    from kafka_clickhouse_pipeline_spark.schemas import FIXTURE_TABLES
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for t in FIXTURE_TABLES:
+        load_table(spark, sf_dir, t).limit(1).collect()
+
+
+def best_of(runs: int, action):
+    """Min wall seconds over ``runs`` calls of ``action()``, and the
+    last call's result: steady-state cost, insulated from one-off
+    JIT/IO noise so round-over-round trends are real."""
+    best = float("inf")
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        out = action()
+        best = min(best, time.perf_counter() - t0)
+    return best, out
+
+
+def materialize(df):
+    """Run ``df`` to completion through the no-op sink: executors do
+    all the work, nothing is collected to the driver."""
+    df.write.mode("overwrite").format("noop").save()
+    return df
+
+
+def sweep_plan(qs, sf_dir: str = SF_DIR, audit_sf_dir: str = AUDIT_SF_DIR):
+    """``(key, query function, runs, sf_dir)`` for every timed key, in
+    sweep order: the full registry (VERDICT r5 #4), HEADLINE order
+    first so the cross-round per-query diff lines up, then the rest
+    sorted; min of 3 runs for the PARITY five, 2 for the rest. The
+    audit tier runs at the reduced fixture under bracketed keys
+    (VERDICT r9 #4), never at ``sf_dir`` -- labeled so a cross-round
+    diff can never silently compare sf0.01 against an old sf0.1 run.
+    Last, the canary-pinned variants (see SHARED_PINNED)."""
+    audit_set = set(AUDITS)
+    order = [n for n in HEADLINE if n in qs and n not in audit_set] + sorted(
+        n for n in qs if n not in HEADLINE and n not in audit_set
+    )
+    plan = [(n, qs[n], 3 if n in PARITY else 2, sf_dir) for n in order]
+    audit_sf = audit_sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    plan += [
+        (f"{n}[audit@sf{audit_sf}]", qs[n], 2, audit_sf_dir)
+        for n in AUDITS
+        if n in qs
+    ]
+    plan += [(key, fn, 2, sf_dir) for key, fn in SHARED_PINNED.values()]
+    return plan
+
+
+def time_key(spark, key: str, fn, sf_dir: str, runs: int) -> tuple[float, dict]:
+    """Time one key -- min of ``runs``, each run building and
+    materializing ``fn(spark, sf_dir)`` -- under its own Spark job
+    group, then read its layers outside the timed region.
+
+    ``layers``: the key's share of the status REST API over all its
+    runs (``perfbench/tracing.rest_ledger``: jobs, stages, tasks,
+    executor run and CPU ms, shuffle bytes, spill; eager actions taken
+    while the DataFrame is built count too), and the Catalyst
+    ``analysis``/``optimization``/``planning`` ms of the last run's
+    DataFrame (``tracing.catalyst_phases``). The no-op write plans a
+    copy of that DataFrame's plan, so its own plan is built here, after
+    the timing. Read per key: Spark's UI store keeps only the last 1000
+    jobs and stages."""
+    sc = spark.sparkContext
+    group = f"bench:{key}"
+    since = time.time()
+    sc.setJobGroup(group, key)
+    try:
+        best, df = best_of(runs, lambda: materialize(fn(spark, sf_dir)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    until = time.time()
+    # the UI store is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ledger = tracing.sum_groups(tracing.rest_ledger(spark, since, until), [group])
+    df._jdf.queryExecution().executedPlan()
+    layers = {**ledger, **tracing.catalyst_phases(df)}
+    return round(best, 3), {k: round(v, 3) for k, v in layers.items()}
+
+
+def run_named(spark, names: list[str], load_before: float, versions: dict,
+              sf_dir: str = SF_DIR, audit_sf_dir: str = AUDIT_SF_DIR) -> int:
+    """Time only the named keys, exactly as the sweep times them, and
+    print one JSON line per key (seconds and layers), then one with the
+    load averages, versions and errors. Writes no round artifact and
+    runs neither the ingest bench nor the canary. A name is a sweep key
+    or the registry name of an audit-tier key. For a fresh JVM per
+    query, run one process per name."""
     import __spark_entry__ as entry
 
+    plan: dict[str, tuple] = {}
+    for step in sweep_plan(entry.queries(), sf_dir, audit_sf_dir):
+        plan[step[0]] = step
+        plan.setdefault(step[0].split("[")[0], step)
+    errors = {n: "not a sweep key" for n in names if n not in plan}
+    warm_up(spark, sf_dir)
+    for name in names:
+        if name not in plan:
+            continue
+        key, fn, runs, key_sf = plan[name]
+        try:
+            sec, layers = time_key(spark, key, fn, key_sf, runs)
+        except Exception as exc:  # noqa: BLE001 - report, time the rest
+            errors[key] = f"{type(exc).__name__}: {exc}"[:300]
+            continue
+        print(json.dumps({"key": key, "sec": sec, "runs": runs, "layers": layers}),
+              flush=True)
+    print(json.dumps({
+        "loadavg": [load_before, round(os.getloadavg()[0], 2)],
+        "versions": versions,
+        "errors": errors,
+    }))
+    return 1 if errors else 0
+
+
+def main(argv: list[str] | None = None) -> int:
+    """``python bench.py`` runs the sweep; ``python bench.py NAME...``
+    times only the named keys (see run_named)."""
+    names = sys.argv[1:] if argv is None else argv
     # machine-state witness (VERDICT r7 #1): BENCH_r07 carried a
     # uniform ~1.3x smear from a contended box (concurrent pytest /
     # ladder runs); recording the 1-min load average before and after
     # lets the next judge tell contention from code regression.
     load_before = round(os.getloadavg()[0], 2)
     versions = _versions()
+    spark = session()
+    try:
+        if names:
+            return run_named(spark, names, load_before, versions)
+        return sweep(spark, load_before, versions)
+    finally:
+        spark.stop()
+
+
+def sweep(spark, load_before: float, versions: dict) -> int:
+    import __spark_entry__ as entry
+
     canary_band = _canary_band()
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
+    warm_up(spark)
 
-    # warm up the JVM, codegen, and input-table file indexes without
-    # billing any query (a long-running cluster has all of these hot)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from kafka_clickhouse_pipeline_spark.catalog import load_table
-    from kafka_clickhouse_pipeline_spark.schemas import FIXTURE_TABLES
-
-    for t in FIXTURE_TABLES:
-        load_table(spark, SF_DIR, t).limit(1).collect()
-
-    # min of two runs per query: steady-state engine cost, insulated
-    # from one-off JIT/IO noise so round-over-round trends are real
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     errors: dict[str, str] = {}
-
-    def _time(key: str, fn, runs: int = 2, sf_dir: str = SF_DIR) -> None:
-        try:
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                best = min(best, time.perf_counter() - t0)
-            timings[key] = round(best, 3)
-        except Exception as exc:  # noqa: BLE001 - one bad query must not zero the bench
-            errors[key] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # full registry (VERDICT r5 #4): HEADLINE order first so the
-    # cross-round per-query diff lines up, then the rest sorted.
-    # Audit-tier queries run at the reduced fixture under bracketed
-    # keys (VERDICT r9 #4), never at SF_DIR.
-    audit_set = set(AUDITS)
-    order = [n for n in HEADLINE if n in qs and n not in audit_set] + sorted(
-        n for n in qs if n not in HEADLINE and n not in audit_set
-    )
     for name in HEADLINE:
         if name not in qs:
             errors[name] = "not registered"
-    for name in order:
-        _time(name, qs[name], runs=3 if name in PARITY else 2)
-    # audit tier at the reduced fixture (labeled keys so a cross-round
-    # diff can never silently compare sf0.01 against an old sf0.1 run)
+    for key, fn, runs, sf_dir in sweep_plan(qs):
+        try:
+            timings[key], layers[key] = time_key(spark, key, fn, sf_dir, runs)
+        except Exception as exc:  # noqa: BLE001 - one bad query must not zero the bench
+            errors[key] = f"{type(exc).__name__}: {exc}"[:300]
+    audit_set = set(AUDITS)
     audit_sf = AUDIT_SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    for name in AUDITS:
-        if name in qs:
-            _time(f"{name}[audit@sf{audit_sf}]", qs[name], sf_dir=AUDIT_SF_DIR)
-    # canary-pinned variants (see SHARED_PINNED)
-    for key, fn in SHARED_PINNED.values():
-        _time(key, fn)
     # paired-interleave canary (VERDICT r11 #1): separate runs, enters
     # no total -- see _paired_canary
     canary_pair, canary_pair_runs = _paired_canary(spark, qs)
@@ -574,6 +688,7 @@ def main() -> None:
                 "canary_band_prior": canary_band,
                 "canary_pair": canary_pair,
                 "canary_pair_runs": canary_pair_runs,
+                "layers": layers,
                 **({"errors": errors} if errors else {}),
             },
             fh,
@@ -611,7 +726,7 @@ def main() -> None:
             }
         )
     )
-    spark.stop()
+    return 0
 
 
 def _detail_path() -> str:

@@ -1834,7 +1834,7 @@ def q_salted_join_brand_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-shuffle); the explicit salt is the plan-stable form for the
     regimes where neither applies. That triage is MEASURED, not
     asserted (SCALE.md "Round-10 AQE-skew-join crossover ladder",
-    tools/aqe_skew_ladder.py): a 33x-row-skew hot key never trips
+    ``python tools/ladder.py --rung aqe_skew``): a 33x-row-skew hot key never trips
     AQE's DEFAULT byte trigger (256 MB skewedPartitionThresholdInBytes
     -- a bytes trigger cannot see a task-time straggler that is small
     in bytes, and a column-pruned constant hot key COMPRESSES below

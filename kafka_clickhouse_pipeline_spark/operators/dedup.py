@@ -380,6 +380,41 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def minhash_base_hashes(shingles: F.Column) -> F.Column:
+    """Each shingle string of an array column hashed once (xxhash64)."""
+    return F.transform(shingles, lambda s: F.xxhash64(s))
+
+
+def minhash_signature(base_hashes: F.Column) -> list[F.Column]:
+    """The MINHASH_HASHES minhashes of an array of 64-bit base hashes:
+    minhash i is the minimum of xxhash64(i, base) over the array, so
+    each shingle string is hashed once and the per-index passes re-hash
+    fixed-width longs. The one signature family of the batch operator
+    (``minhash_lsh_pairs``) and the streaming index
+    (``streaming.incremental_neardup``)."""
+
+    # Factory, NOT a default-arg lambda: PySpark infers higher-order
+    # lambda arity from the Python signature, so `lambda h, i=i:` would
+    # be called as an (element, index) lambda and silently bind i to
+    # the array-position column -- destroying the independent-hash
+    # family (all 16 minima collapse to one position-salted function).
+    def _minhash(i: int) -> F.Column:
+        return F.array_min(F.transform(base_hashes, lambda h: F.xxhash64(F.lit(i), h)))
+
+    return [_minhash(i) for i in range(MINHASH_HASHES)]
+
+
+def minhash_band_buckets(signature: list[F.Column]) -> F.Column:
+    """MINHASH_BANDS band buckets of a signature as one array column:
+    bucket b is xxhash64 of the band's MINHASH_ROWS minhashes."""
+    return F.array(
+        *[
+            F.xxhash64(*signature[b * MINHASH_ROWS:(b + 1) * MINHASH_ROWS])
+            for b in range(MINHASH_BANDS)
+        ]
+    )
+
+
 def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """MinHash + banded LSH near-dup pairs, verified with exact Jaccard.
     Unordered; ``q_dedup_minhash_lsh`` adds the presentation sort and
@@ -409,33 +444,16 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     # for the exact-Jaccard verification of candidates.
     shingle_sets = (
         _shingle_arrays(docs)
-        .select(
-            "doc_id", "sh", F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hs")
-        )
+        .select("doc_id", "sh", minhash_base_hashes(F.col("sh")).alias("hs"))
         .transform(cut_lineage)
     )
-    hashed = shingle_sets.select("doc_id", "hs")
-
-    # Factory, NOT a default-arg lambda: PySpark infers higher-order
-    # lambda arity from the Python signature, so `lambda h, i=i:` would
-    # be called as an (element, index) lambda and silently bind i to
-    # the array-position column -- destroying the independent-hash
-    # family (all 16 minima collapse to one position-salted function).
-    def _minhash(i: int) -> F.Column:
-        return F.array_min(
-            F.transform(F.col("hs"), lambda h: F.xxhash64(F.lit(i), h))
-        ).alias(f"h{i}")
-
-    sigs = hashed.select("doc_id", *[_minhash(i) for i in range(MINHASH_HASHES)])
-
+    sigs = shingle_sets.select(
+        "doc_id",
+        *[h.alias(f"h{i}") for i, h in enumerate(minhash_signature(F.col("hs")))],
+    )
     # one posexplode pass over an 8-element band-hash array (instead of
     # an 8-way union that duplicates the whole upstream plan)
-    band_hashes = F.array(
-        *[
-            F.xxhash64(*[F.col(f"h{b * MINHASH_ROWS + r}") for r in range(MINHASH_ROWS)])
-            for b in range(MINHASH_BANDS)
-        ]
-    )
+    band_hashes = minhash_band_buckets([F.col(f"h{i}") for i in range(MINHASH_HASHES)])
     bands = sigs.select("doc_id", F.posexplode(band_hashes).alias("band", "bucket"))
 
     a = bands.alias("a")

@@ -2113,7 +2113,7 @@ def q_node_jaccard_minhash(
     (1000-executor clusters are network-bound where this local[32]
     fixture is CPU-bound). Regime (a) is now MEASURED, not asserted
     (VERDICT r7 #5; SCALE.md round-8 winning-regime ladder,
-    tools/wedge_regime_ladder.py): on a planted-twin fixture
+    ``python tools/ladder.py --rung wedge_regime``): on a planted-twin fixture
     (adjacency j 0.50-0.64 over a j ~ 0.006 background),
     ``bands=16, rows=2`` cuts 190.7M exact wedge pairs to 0.48M
     candidates (397x) and wins 12.6 s vs 48.3 s at 1x with top-K
@@ -3739,7 +3739,7 @@ GRAPH_ORACLES["q_hits_purchases"] = _hits_oracle()
 # ---- Threshold near-dup via r=2 MinHash banding (round 9) ----
 
 #: The MEASURED winning geometry from the round-8 regime ladder
-#: (SCALE.md, tools/wedge_regime_ladder.py; VERDICT r8 #4): 16 bands
+#: (SCALE.md, ``tools/ladder.py --rung wedge_regime``; VERDICT r8 #4): 16 bands
 #: of 2 rows. Pass probability at adjacency-jaccard j is
 #: 1-(1-j^2)^16 -- 0.990 at j=0.5, ~6e-4 at the fixture's j~0.006
 #: background -- which is what cut 190.7M exact wedge pairs to 0.48M

@@ -283,7 +283,17 @@ def make_handler(spark: SparkSession, sf_dir: str):
             if self.path != "/api/sql":
                 self._reply(t0, 404, b'{"error": "not found"}')
                 return
-            length = int(self.headers.get("Content-Length", 0))
+            # outside input: int() can raise, and rfile.read(-1) blocks
+            # until the client closes its socket
+            raw_length = self.headers.get("Content-Length", "0")
+            try:
+                length = int(raw_length)
+            except ValueError:
+                length = -1
+            if length < 0:
+                body = json.dumps({"error": f"bad Content-Length: {raw_length!r}"}).encode()
+                self._reply(t0, 400, body)
+                return
             sql_text = self.rfile.read(length).decode("utf-8", "replace")
             try:
                 status, body = 200, json.dumps(get_sql_payload(spark, sf_dir, sql_text)).encode()

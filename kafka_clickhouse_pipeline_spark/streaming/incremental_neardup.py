@@ -50,10 +50,11 @@ from pyspark.sql.types import (
 
 from ..lineage import cut_lineage
 from ..operators.dedup import (
-    MINHASH_BANDS,
     MINHASH_HASHES,
-    MINHASH_ROWS,
     _shingle_arrays,
+    minhash_band_buckets,
+    minhash_base_hashes,
+    minhash_signature,
 )
 
 #: ceil(JACCARD_THRESHOLD * MINHASH_HASHES): signature-estimated
@@ -73,36 +74,18 @@ INDEX_SCHEMA = StructType(
 def minhash_sig_bands(docs: DataFrame) -> DataFrame:
     """(doc_id, sig, band, bucket) -- one row per band per document
     with >= 3 tokens (shingle-less docs carry no signature and cannot
-    near-collide; callers pass them through as unique). Same hash
-    family as operators.dedup.minhash_lsh_pairs: each shingle string
-    xxhash64-hashed once, the per-index hashes derived by rehashing the
-    64-bit base with the index, band buckets from rehashing the band's
-    minhash pair."""
-    hashed = (
-        _shingle_arrays(docs)
-        .select(
-            "doc_id",
-            F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hs"),
-        )
+    near-collide; callers pass them through as unique). Built from the
+    same column builders as operators.dedup.minhash_lsh_pairs
+    (``minhash_base_hashes``, ``minhash_signature``,
+    ``minhash_band_buckets``), so both agree hash for hash."""
+    hashed = _shingle_arrays(docs).select(
+        "doc_id", minhash_base_hashes(F.col("sh")).alias("hs")
     )
-
-    def _minhash(i: int):
-        return F.array_min(
-            F.transform(F.col("hs"), lambda h: F.xxhash64(F.lit(i), h))
-        )
-
-    sig = F.array(*[_minhash(i) for i in range(MINHASH_HASHES)])
-    with_sig = hashed.select("doc_id", sig.alias("sig"))
-    band_hashes = F.array(
-        *[
-            F.xxhash64(
-                *[
-                    F.col("sig")[b * MINHASH_ROWS + r]
-                    for r in range(MINHASH_ROWS)
-                ]
-            )
-            for b in range(MINHASH_BANDS)
-        ]
+    with_sig = hashed.select(
+        "doc_id", F.array(*minhash_signature(F.col("hs"))).alias("sig")
+    )
+    band_hashes = minhash_band_buckets(
+        [F.col("sig")[i] for i in range(MINHASH_HASHES)]
     )
     return with_sig.select(
         "doc_id", "sig", F.posexplode(band_hashes).alias("band", "bucket")

@@ -15,6 +15,8 @@ import decimal
 import math
 from datetime import date, datetime
 
+from tools.strict_check import _unlarge
+
 
 def _norm(v):
     """Normalize a cell so Spark and DuckDB renderings hash alike."""
@@ -47,20 +49,6 @@ def canonical(rows, colnames) -> list[str]:
         out.append("|".join(_norm(vals[i]) for i in order))
     out.sort()
     return out
-
-
-def _unlarge(t):
-    """Normalize DuckDB's large_string/large_list offset widths to the
-    plain Arrow twins (container detail, value-identical)."""
-    import pyarrow as pa
-
-    if pa.types.is_large_string(t):
-        return pa.string()
-    if pa.types.is_large_binary(t):
-        return pa.binary()
-    if pa.types.is_large_list(t) or pa.types.is_list(t):
-        return pa.list_(_unlarge(t.value_type))
-    return t
 
 
 def assert_arrow_types_match(spark_df, oracle, sql):

@@ -8,6 +8,7 @@ import logging
 import os
 import re
 import shutil
+import socket
 import threading
 import time
 import urllib.error
@@ -452,6 +453,32 @@ def test_api_metrics_counts_requests(spark, sf_dir):
         assert metrics["prepared"]["size"] == 2
         # the first snapshot was counted before it was sent
         assert _get(base, "/api/metrics")[1]["routes"]["/api/metrics"]["requests"] == 1
+    finally:
+        httpd.shutdown()
+
+
+def test_api_sql_bad_content_length_is_400(spark, sf_dir):
+    """A non-integer or a negative ``Content-Length`` gets a 400 with an
+    error body, counted in ``/api/metrics``, while the client holds its
+    socket open (a negative length used to block the handler in
+    ``rfile.read(-1)``; a non-integer one raised out of ``do_POST``)."""
+    httpd = serving_app.serve(spark, sf_dir, port=0)
+    port = httpd.server_address[1]
+    try:
+        for length in ("abc", "-1"):
+            with socket.create_connection(("127.0.0.1", port), timeout=5) as sock:
+                sock.sendall(
+                    f"POST /api/sql HTTP/1.1\r\nHost: localhost\r\n"
+                    f"Content-Length: {length}\r\n\r\n".encode()
+                )
+                reply = b""
+                while chunk := sock.recv(65536):  # the server closes after replying
+                    reply += chunk
+            head, _, body = reply.partition(b"\r\n\r\n")
+            assert head.split()[1] == b"400", reply
+            assert json.loads(body) == {"error": f"bad Content-Length: {length!r}"}
+        routes = _get(f"http://127.0.0.1:{port}", "/api/metrics")[1]["routes"]
+        assert (routes["/api/sql"]["requests"], routes["/api/sql"]["errors"]) == (2, 2)
     finally:
         httpd.shutdown()
 
