@@ -18,15 +18,17 @@ Operational guards mirrored from the reference: table-existence check
 before every query with graceful empty payloads (app.py:16-42), and
 /api/status as the health probe.
 
-Each chart query is built and planned once per version of the
+Each chart query's rows are computed once per version of the
 ``events`` file (``catalog.file_version``: inode, size, mtime, ctime
-and split confs) and session time zone; a warm request only executes
-the stored DataFrame. A rewritten file has a new version, so the next
-request plans the query afresh and sees the new rows. A directory
+and split confs) and session time zone; a warm request shapes the
+stored rows and starts no Spark job. A rewritten file has a new
+version, so the next request computes its rows afresh. A directory
 ``events`` table (a streaming sink's output) has no version and is
-planned on every request. ``/api/sql`` is never stored: ad-hoc SQL can
-call ``rand()`` or ``current_timestamp()``, whose values a stored plan
-would freeze.
+computed on every request. ``/api/sql`` is never stored: ad-hoc SQL
+can read files outside the key, or call ``rand()`` or
+``current_timestamp()``, whose values stored rows would freeze.
+``/api/status`` stays a health probe: it asks the JVM whether the
+SparkContext has stopped before it answers from stored rows.
 
 ``GET /api/metrics`` reports per-route request, error and latency
 counters and the stored-query cache's hits and misses.
@@ -44,13 +46,14 @@ import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Row, SparkSession
 
 from .catalog import file_version, tables_exist
 from .operators import serving
 from .schemas import FIXTURE_TABLES
 
-#: One INFO line per request: method, path, status and milliseconds.
+#: One INFO line per request: method, path, status and milliseconds,
+#: and ``rows=K`` (result rows) for a chart or SQL payload.
 #: Python's default WARNING level drops them; a deployment that wants
 #: an access log sets this logger to INFO.
 log = logging.getLogger(__name__)
@@ -58,34 +61,41 @@ log = logging.getLogger(__name__)
 REQUIRED_TABLES = ("events",)
 
 
-#: One prepared chart query per (session, sf_dir, query function,
-#: ``events`` file version, session time zone). The time zone is in the
-#: key because the plan keeps the zone it was analysed in (the ANCHOR
-#: casts, and the rendering of a zoned ``ts``); the split confs are in
-#: the file version. Preparing costs the DataFrame build over Py4J,
-#: analysis, optimization and planning: on the sf0.1 dashboard
-#: benchmark (4-vCPU VM, 10 interleaved runs each) the median CPU per
-#: request fell from 399 to 197 ms once a warm request only executed
-#: the stored plan. Bounded, because every rewrite of the file
-#: adds four keys, and an entry pins its planned query and, when the
-#: scan is many splits, the shuffle output its adaptive plan
-#: materialized (a re-run reads it instead of running those stages
-#: again); Spark drops that output once an evicted entry is collected.
-#: Two threads that miss at once both prepare; either result is right.
+#: One chart query's collected rows per (session, sf_dir, query
+#: function, ``events`` file version, session time zone). The rows are
+#: a pure function of that key: ``ANCHOR`` stands in for ``now()``, the
+#: time zone decides the ANCHOR casts and the rendering of a zoned
+#: ``ts``, and the split confs are in the file version. The query
+#: function is in the key, so a traced wrapper of it misses once.
+#: Re-running a stored plan still cost one Spark job per warm request,
+#: mostly closure cleaning, task serialization and the Py4J collect; on
+#: the sf0.1 dashboard benchmark (4-vCPU VM, 10 interleaved runs each)
+#: the median CPU per request fell from 156 to 32 ms once a warm
+#: request only shaped stored rows. Bounded, because every rewrite of
+#: the file adds four keys; an entry holds only rows (at most 24), no
+#: plan and no shuffle output. Two threads that miss at once both
+#: compute; either result is right.
 @functools.lru_cache(maxsize=32)
-def _prepared(spark: SparkSession, sf_dir: str, query, version: tuple, time_zone: str) -> DataFrame:
-    return query(spark, sf_dir)
+def _stored_rows(spark: SparkSession, sf_dir: str, query, version: tuple,
+                 time_zone: str) -> tuple[Row, ...]:
+    return tuple(query(spark, sf_dir).collect())
 
 
-def _rows(spark: SparkSession, sf_dir: str, query) -> list[Row]:
-    """``query(spark, sf_dir)``'s rows, from the stored DataFrame of the
-    current ``events`` file version, or from a fresh one when the table
-    has no version."""
+def _rows(spark: SparkSession, sf_dir: str, query) -> tuple[Row, ...]:
+    """``query(spark, sf_dir)``'s rows: stored for the current ``events``
+    file version, or collected afresh when the table has no version."""
     version = file_version(spark, sf_dir, "events")
     if version is None:
-        return query(spark, sf_dir).collect()
+        return tuple(query(spark, sf_dir).collect())
     time_zone = spark.conf.get("spark.sql.session.timeZone")
-    return _prepared(spark, sf_dir, query, version, time_zone).collect()
+    return _stored_rows(spark, sf_dir, query, version, time_zone)
+
+
+def context_stopped(spark: SparkSession) -> bool:
+    """Whether the session's SparkContext has stopped: one JVM call, so
+    the health probe cannot answer ``ok`` from stored rows alone."""
+    jsc = spark.sparkContext._jsc
+    return jsc is None or jsc.sc().isStopped()
 
 
 def get_sales_payload(spark: SparkSession, sf_dir: str) -> dict:
@@ -136,6 +146,8 @@ def get_recent_payload(spark: SparkSession, sf_dir: str) -> dict:
 
 def get_status_payload(spark: SparkSession, sf_dir: str) -> dict:
     """Health payload for /api/status (app.py:158-176)."""
+    if context_stopped(spark):
+        raise RuntimeError("the SparkContext has stopped")
     if not tables_exist(spark, sf_dir, REQUIRED_TABLES):
         return {"status": "initializing", "counts": {}}
     rows = _rows(spark, sf_dir, serving.status_counts)
@@ -204,6 +216,11 @@ def get_sql_payload(spark: SparkSession, sf_dir: str, sql_text: str) -> dict:
     }
 
 
+#: The payload entry whose length is a route's number of result rows,
+#: for the request log.
+_ROWS_KEY = {"/api/sales": "labels", "/api/stock": "labels", "/api/recent": "sales",
+             "/api/status": "counts", "/api/sql": "rows"}
+
 #: Upper bounds, in ms, of the latency buckets ``/api/metrics``
 #: reports; a slower request lands in ``+Inf``.
 LATENCY_BUCKETS_MS = (5, 10, 25, 50, 100, 250, 500, 1000, 2500, 5000, 10000)
@@ -243,7 +260,7 @@ class RequestMetrics:
         every server in the process)."""
         with self._lock:
             routes = copy.deepcopy(self._routes)
-        info = _prepared.cache_info()
+        info = _stored_rows.cache_info()
         return {
             "routes": routes,
             "prepared": {"hits": info.hits, "misses": info.misses,
@@ -273,10 +290,11 @@ def make_handler(spark: SparkSession, sf_dir: str):
                 self._reply(t0, 404, b'{"error": "not found"}')
                 return
             try:
-                status, body = 200, json.dumps(fn(spark, sf_dir)).encode()
+                payload = fn(spark, sf_dir)
             except Exception as exc:  # graceful degradation, app.py:74-77
-                status, body = 500, json.dumps({"error": str(exc)}).encode()
-            self._reply(t0, status, body)
+                self._reply(t0, 500, json.dumps({"error": str(exc)}).encode())
+                return
+            self._reply_payload(t0, payload)
 
         def do_POST(self):  # noqa: N802 (stdlib API name)
             t0 = time.perf_counter()
@@ -296,15 +314,20 @@ def make_handler(spark: SparkSession, sf_dir: str):
                 return
             sql_text = self.rfile.read(length).decode("utf-8", "replace")
             try:
-                status, body = 200, json.dumps(get_sql_payload(spark, sf_dir, sql_text)).encode()
+                payload = get_sql_payload(spark, sf_dir, sql_text)
             except Exception as exc:  # bad SQL -> client error, not a crash
                 # ParseException's text starts with a blank line
                 first = next((ln for ln in str(exc).splitlines() if ln.strip()), type(exc).__name__)
-                status, body = 400, json.dumps({"error": first}).encode()
-            self._reply(t0, status, body)
+                self._reply(t0, 400, json.dumps({"error": first}).encode())
+                return
+            self._reply_payload(t0, payload)
+
+        def _reply_payload(self, t0: float, payload: dict) -> None:
+            rows = len(payload[_ROWS_KEY[self.path]])
+            self._reply(t0, 200, json.dumps(payload).encode(), rows=rows)
 
         def _reply(self, t0: float, status: int, body: bytes,
-                   content_type: str = "application/json") -> None:
+                   content_type: str = "application/json", rows: int | None = None) -> None:
             # counted before the reply is sent, so a client that has
             # its response sees it in the next /api/metrics
             ms = (time.perf_counter() - t0) * 1000.0
@@ -314,7 +337,8 @@ def make_handler(spark: SparkSession, sf_dir: str):
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
-            log.info("%s %s %d %.1f ms", self.command, self.path, status, ms)
+            rows_note = "" if rows is None else f" rows={rows}"
+            log.info("%s %s %d %.1f ms%s", self.command, self.path, status, ms, rows_note)
 
         def log_message(self, *args):  # requests are logged by _reply
             pass

@@ -37,6 +37,7 @@ MERGED_RAW_SCHEMA = StructType(
 @dataclass
 class StreamDefinition:
     """One reference materialized view: named source->transform->sink.
+    ``transform`` must be stateless: it is applied to each micro-batch.
     ``foreach_batch``, when set, replaces the standard table sink with a
     custom per-batch router (used by the multiplexed pipeline)."""
 
@@ -61,13 +62,21 @@ class PipelineManager:
         self.definitions[definition.name] = definition
 
     def attach(self, name: str, trigger_available_now: bool = False) -> StreamingQuery:
-        """Start consumption (ATTACH TABLE analog, README.md:68-69)."""
+        """Start consumption (ATTACH TABLE analog, README.md:68-69).
+
+        The transform runs on each micro-batch, inside the sink, not in
+        the streaming plan: the batch plan folds its
+        ``processing_time`` into a literal that codegen does not inline
+        (``transforms.with_processing_time``), so warm batches reuse
+        compiled code."""
         d = self.definitions[name]
-        df = d.transform(d.source(self.spark))
+        sink = d.foreach_batch or idempotent_batch_writer(d.table_path)
+
+        def write(batch_df: DataFrame, batch_id: int) -> None:
+            sink(d.transform(batch_df), batch_id)
+
         writer = (
-            df.writeStream.foreachBatch(
-                d.foreach_batch or idempotent_batch_writer(d.table_path)
-            )
+            d.source(self.spark).writeStream.foreachBatch(write)
             .option("checkpointLocation", d.checkpoint)
             .queryName(name)
         )

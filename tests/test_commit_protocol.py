@@ -549,6 +549,67 @@ class TestCommittedOnlyReaders:
         w(b1, 1)  # the replay commits it
         assert counts() == both != batch0
 
+    @pytest.mark.parametrize("backend", ["local", "hadoop_fs"])
+    def test_mv_table_reader_hides_a_pending_batch_until_replay(
+        self, backend, request, spark, tmp_path
+    ):
+        """``sink.read_table`` over both multiplexed MV tables: a batch
+        published but not marked is hidden from both (the stock table
+        reads its markers from the sales table), and after its replay
+        every row is seen exactly once, also after the stock table is
+        compacted."""
+        import json
+
+        from kafka_clickhouse_pipeline_spark.sources.kafka import (
+            parse_json_payload,
+        )
+        from kafka_clickhouse_pipeline_spark.streaming import sink
+        from kafka_clickhouse_pipeline_spark.streaming.ingest import (
+            MERGED_RAW_SCHEMA,
+            multiplexed_file_pipeline,
+        )
+
+        self._use_backend(request, backend)
+        sales, stock = str(tmp_path / "sales"), str(tmp_path / "stock")
+        route = multiplexed_file_pipeline(
+            spark, str(tmp_path / "in"), sales, stock, str(tmp_path / "ckpt")
+        ).definitions["multiplex_mv"].foreach_batch
+
+        def batch(b):
+            lines = tmp_path / f"batch{b}.jsonl"
+            lines.write_text("".join(json.dumps(ev) + "\n" for ev in (
+                {"event_id": f"s{b}", "event_type": "sale",
+                 "event_time": f"2024-0{b + 1}-15 10:00:00", "product_id": b,
+                 "price": 10.0, "discount": 0.0, "total": 10.0},
+                {"event_id": f"w{b}", "event_type": "stock_movement",
+                 "event_time": f"2024-0{b + 1}-15 11:00:00", "product_id": b,
+                 "quantity": 5, "movement_type": "supply"},
+            )))
+            return parse_json_payload(spark.read.text(str(lines)), MERGED_RAW_SCHEMA)
+
+        def seen():
+            return (
+                sorted(r.event_id for r in sink.read_table(spark, sales).collect()),
+                sorted(r.event_id for r in sink.read_table(
+                    spark, stock, marker_dir=sales).collect()),
+            )
+
+        route(batch(0), 0)
+        assert seen() == (["s0"], ["w0"])
+        # crash window: batch 1 published into both tables, not marked
+        route(batch(1), 1)
+        os.remove(commit.marker_path(sales, 1))
+        assert any(f.startswith("b1-") for f in os.listdir(
+            os.path.join(stock, "event_month=202402")))
+        assert seen() == (["s0"], ["w0"])
+        route(batch(1), 1)  # the replay commits it
+        assert seen() == (["s0", "s1"], ["w0", "w1"])
+        # compaction finds the stock table's batches through the same markers
+        assert sink.compact_partitions(
+            spark, stock, max_files_per_partition=0, target_files=1, marker_dir=sales
+        ) == ["202401", "202402"]
+        assert seen() == (["s0", "s1"], ["w0", "w1"])
+
     def test_unmarked_index_file_does_not_suppress_a_fresh_doc(
         self, spark, tmp_path
     ):

@@ -193,16 +193,24 @@ _ADHOC_SQL = (
     ],
 )
 def test_warm_route_jobs(spark, sf_dir, count_jobs, route, jobs):
-    """Jobs per warm request, pinned: no route pays a parquet
-    schema-inference job (catalog.load_table caches the schema)."""
+    """Jobs per request, pinned. ``jobs`` is what a request pays to
+    compute its rows, with no parquet schema-inference job
+    (catalog.load_table caches the schema). A chart route stores its
+    rows for the file version, so a warm request after it starts none;
+    ``/api/sql`` stores nothing and pays ``jobs`` on every request."""
     if route == "sql":
         def call():
             serving_app.get_sql_payload(spark, sf_dir, _ADHOC_SQL)
+        warm = jobs
     else:
         def call():
             serving_app.ROUTES[f"/api/{route}"](spark, sf_dir)
+        warm = 0
     call()
-    assert count_jobs(call) == jobs
+    if route != "sql":
+        serving_app._stored_rows.cache_clear()
+        assert count_jobs(call) == jobs
+    assert count_jobs(call) == warm
 
 
 def _oracle_payloads(oracle) -> dict[str, dict]:
@@ -248,15 +256,13 @@ def test_one_split_gate_branches(spark, sf_dir, oracle, count_jobs, splits, jobs
     shrinks the split size in the same session, so a partition-count
     cache that ignored the conf would keep coalescing and fail the pin.
 
-    The first call prepares the route's stored query and runs the
-    branch's jobs; a warm call runs one job in both branches: with many
-    splits, re-running the finished adaptive plan reads the shuffle
-    output its first run materialized."""
+    The first call computes and stores the route's rows and runs the
+    branch's jobs; a warm call runs none in either branch."""
     conf = "spark.sql.files.maxPartitionBytes"
     before = spark.conf.get(conf, None)
     if splits == "many":
         spark.conf.set(conf, str(os.path.getsize(table_path(sf_dir, "events")) // 4))
-    serving_app._prepared.cache_clear()
+    serving_app._stored_rows.cache_clear()
     try:
         n = load_table(spark, sf_dir, "events").rdd.getNumPartitions()
         assert (n == 1) if splits == "one" else (n > 1)
@@ -265,10 +271,10 @@ def test_one_split_gate_branches(spark, sf_dir, oracle, count_jobs, splits, jobs
             fn = serving_app.ROUTES[f"/api/{route}"]
             got = []
             assert count_jobs(lambda: got.append(fn(spark, sf_dir))) == want, route
-            assert count_jobs(lambda: got.append(fn(spark, sf_dir))) == 1, route
+            assert count_jobs(lambda: got.append(fn(spark, sf_dir))) == 0, route
             for payload in got:
                 assert json.dumps(payload) == json.dumps(expected[route]), route
-        info = serving_app._prepared.cache_info()
+        info = serving_app._stored_rows.cache_info()
         assert (info.misses, info.hits) == (4, 4)
     finally:
         if before is None:
@@ -285,9 +291,9 @@ def _duckdb_over(path: str):
 
 def test_stored_queries_under_concurrency(spark, sf_dir, oracle):
     """8 threads x 4 routes, cold (all threads miss at once) and warm
-    (all run the stored plans at once): every payload equals DuckDB's."""
+    (all shape the stored rows at once): every payload equals DuckDB's."""
     expected = _oracle_payloads(oracle)
-    serving_app._prepared.cache_clear()
+    serving_app._stored_rows.cache_clear()
     barrier = threading.Barrier(8)
 
     def client(i):
@@ -300,12 +306,12 @@ def test_stored_queries_under_concurrency(spark, sf_dir, oracle):
             results = list(pool.map(client, range(8)))
         for got in results:
             assert json.dumps(got, sort_keys=True) == json.dumps(expected, sort_keys=True)
-    assert serving_app._prepared.cache_info().currsize == 4
+    assert serving_app._stored_rows.cache_info().currsize == 4
 
 
 def test_rewritten_events_file_is_prepared_again(spark, sf_dir, tmp_path):
     """A rewrite of ``events.parquet`` in place (same inode) is a new
-    file version: the next request prepares its query again and
+    file version: the next request computes its rows again and
     matches DuckDB over the new file."""
     path = table_path(str(tmp_path), "events")
     shutil.copyfile(table_path(sf_dir, "events"), path)
@@ -321,15 +327,15 @@ def test_rewritten_events_file_is_prepared_again(spark, sf_dir, tmp_path):
     assert expected != first
     for route in ("sales", "stock", "recent", "status"):
         fn = serving_app.ROUTES[f"/api/{route}"]
-        misses = serving_app._prepared.cache_info().misses
+        misses = serving_app._stored_rows.cache_info().misses
         assert json.dumps(fn(spark, str(tmp_path))) == json.dumps(expected[route]), route
-        assert serving_app._prepared.cache_info().misses == misses + 1, route
+        assert serving_app._stored_rows.cache_info().misses == misses + 1, route
     con.close()
 
 
 def test_directory_events_table_is_never_stored(spark, sf_dir, tmp_path):
     """A directory ``events`` table (a streaming sink's output) is
-    planned on every request: nothing is stored, and a file that lands
+    computed on every request: nothing is stored, and a file that lands
     in it is seen by the next request."""
     d = table_path(str(tmp_path), "events")
     os.makedirs(d)
@@ -337,7 +343,7 @@ def test_directory_events_table_is_never_stored(spark, sf_dir, tmp_path):
     half = table.num_rows // 2
     pq.write_table(table.slice(0, half), os.path.join(d, "part-0.parquet"))
     con = _duckdb_over(os.path.join(d, "*.parquet"))
-    serving_app._prepared.cache_clear()
+    serving_app._stored_rows.cache_clear()
     for landed in (False, True):
         if landed:
             pq.write_table(table.slice(half), os.path.join(d, "part-1.parquet"))
@@ -345,14 +351,14 @@ def test_directory_events_table_is_never_stored(spark, sf_dir, tmp_path):
             fn = serving_app.ROUTES[f"/api/{route}"]
             assert json.dumps(fn(spark, str(tmp_path))) == json.dumps(
                 _oracle_payloads(con)[route]), route
-    info = serving_app._prepared.cache_info()
+    info = serving_app._stored_rows.cache_info()
     assert (info.currsize, info.hits, info.misses) == (0, 0, 0)
     con.close()
 
 
 def test_time_zone_change_misses_the_stored_query(spark, sf_dir, tmp_path):
-    """The stored plan keeps the session time zone it was analysed in,
-    so a request after a time-zone change prepares its query again.
+    """Stored rows keep the session time zone they were computed in,
+    so a request after a time-zone change computes its rows again.
     The fixture's ``ts`` is zone-less, so the rows here come from a copy
     whose ``ts`` is a UTC instant: its hour labels move with the zone."""
     table = pq.read_table(table_path(sf_dir, "events"))
@@ -363,17 +369,56 @@ def test_time_zone_change_misses_the_stored_query(spark, sf_dir, tmp_path):
     before = spark.conf.get("spark.sql.session.timeZone")
     utc = fn(spark, str(tmp_path))
     assert utc["labels"]
-    misses = serving_app._prepared.cache_info().misses
+    misses = serving_app._stored_rows.cache_info().misses
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         shifted = fn(spark, str(tmp_path))
-        assert serving_app._prepared.cache_info().misses == misses + 1
+        assert serving_app._stored_rows.cache_info().misses == misses + 1
         assert shifted["labels"] != utc["labels"]
-        serving_app._prepared.cache_clear()
-        assert fn(spark, str(tmp_path)) == shifted  # the same rows planned cold
+        serving_app._stored_rows.cache_clear()
+        assert fn(spark, str(tmp_path)) == shifted  # the same rows computed cold
     finally:
         spark.conf.set("spark.sql.session.timeZone", before)
     assert fn(spark, str(tmp_path)) == utc
+
+
+def test_mutated_payload_does_not_reach_the_next_request(spark, sf_dir, oracle):
+    """A payload is built afresh from the stored rows on every request:
+    a caller that mutates one does not change the next request's."""
+    expected = _oracle_payloads(oracle)
+    for route, want in expected.items():
+        fn = serving_app.ROUTES[f"/api/{route}"]
+        first = fn(spark, sf_dir)
+        for value in first.values():
+            if isinstance(value, list):
+                if value and isinstance(value[0], dict):
+                    value[0].clear()
+                value.append("mutated")
+            elif isinstance(value, dict):
+                value["mutated"] = -1
+        first["status"] = "mutated"
+        assert json.dumps(fn(spark, sf_dir)) == json.dumps(want), route
+
+
+def test_status_answers_500_when_the_context_has_stopped(spark, sf_dir, monkeypatch):
+    """``/api/status`` is the health probe: with the SparkContext
+    stopped it answers 500 even though its rows are stored, and ``ok``
+    again, from the stored rows, once the context is back."""
+    httpd = serving_app.serve(spark, sf_dir, port=0)
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
+    try:
+        assert _get(base, "/api/status")[1]["status"] == "ok"
+        hits = serving_app._stored_rows.cache_info().hits
+        monkeypatch.setattr(serving_app, "context_stopped", lambda s: True)
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            _get(base, "/api/status")
+        assert exc.value.code == 500
+        assert "stopped" in json.loads(exc.value.read())["error"]
+        monkeypatch.undo()
+        assert _get(base, "/api/status")[1]["status"] == "ok"
+        assert serving_app._stored_rows.cache_info().hits == hits + 1
+    finally:
+        httpd.shutdown()
 
 
 def test_api_sql_joins_two_tables(spark, sf_dir, oracle):
@@ -407,18 +452,30 @@ def test_named_tables_match_whole_identifiers():
 
 def test_requests_are_logged(server, caplog):
     """One INFO line per request on the module logger: method, path,
-    status and milliseconds."""
+    status and milliseconds, and the result's row count for a chart or
+    SQL payload."""
     caplog.set_level(logging.INFO, logger=serving_app.log.name)
-    assert _get(server, "/api/status")[0] == 200
+    status, payload = _get(server, "/api/status")
+    assert status == 200
     assert _post_sql(server, b"SELECT FROM nowhere")[0] == 400
-    pattern = re.compile(r"(GET /api/status 200|POST /api/sql 400) \d+\.\d ms")
+    assert _post_sql(server, b"SELECT 1 AS one UNION ALL SELECT 2")[0] == 200
+    with urllib.request.urlopen(server + "/", timeout=120) as resp:
+        assert resp.status == 200
+    patterns = [
+        rf"GET /api/status 200 \d+\.\d ms rows={len(payload['counts'])}",
+        r"POST /api/sql 400 \d+\.\d ms",
+        r"POST /api/sql 200 \d+\.\d ms rows=2",
+        r"GET / 200 \d+\.\d ms",  # not a payload route: no row count
+    ]
     deadline = time.monotonic() + 10
     while True:  # the server thread logs after it has written the reply
         lines = [r.getMessage() for r in caplog.records if r.name == serving_app.log.name]
-        if len(lines) >= 2 or time.monotonic() > deadline:
+        if len(lines) >= 4 or time.monotonic() > deadline:
             break
         time.sleep(0.05)
-    assert len(lines) == 2 and all(pattern.fullmatch(ln) for ln in lines), lines
+    assert len(lines) == 4, lines
+    for pattern in patterns:  # the server threads may log out of order
+        assert sum(bool(re.fullmatch(pattern, ln)) for ln in lines) == 1, (pattern, lines)
     assert all(r.levelno == logging.INFO for r in caplog.records if r.name == serving_app.log.name)
 
 
@@ -429,7 +486,7 @@ def test_api_metrics_counts_requests(spark, sf_dir):
     httpd = serving_app.serve(spark, sf_dir, port=0)
     base = f"http://127.0.0.1:{httpd.server_address[1]}"
     try:
-        serving_app._prepared.cache_clear()
+        serving_app._stored_rows.cache_clear()
         for _ in range(3):
             assert _get(base, "/api/sales")[0] == 200
         assert _get(base, "/api/status")[0] == 200
@@ -455,6 +512,18 @@ def test_api_metrics_counts_requests(spark, sf_dir):
         assert _get(base, "/api/metrics")[1]["routes"]["/api/metrics"]["requests"] == 1
     finally:
         httpd.shutdown()
+
+
+def test_api_metrics_payload_keys():
+    """The ``/api/metrics`` payload keys: per-route counters and the
+    stored-rows cache's counters under ``prepared``."""
+    metrics = serving_app.RequestMetrics()
+    metrics.record("/api/sales", 200, 1.0)
+    snap = metrics.snapshot()
+    assert set(snap) == {"routes", "prepared"}
+    assert set(snap["routes"]["/api/sales"]) == {"requests", "errors", "latency_ms"}
+    assert set(snap["routes"]["/api/sales"]["latency_ms"]) == {"count", "sum", "buckets"}
+    assert set(snap["prepared"]) == {"hits", "misses", "size", "max_size"}
 
 
 def test_api_sql_bad_content_length_is_400(spark, sf_dir):

@@ -316,3 +316,48 @@ def test_progress_reports_trigger_phases(spark, tmp_path):
     assert p["num_input_rows"] == len(SALES_EVENTS)
     assert p["state_operators"] == []
     assert mgr.progress("no_such_stream") == {"name": "no_such_stream", "state": "detached"}
+
+
+def test_warm_drain_compiles_no_code(spark, tmp_path):
+    """A second ``availableNow`` drain of both MV streams reuses the
+    first one's generated code: ``processing_time`` reaches codegen as
+    a reference, not as a timestamp inlined into each batch's source.
+    Every batch stamps all of its rows with one non-null
+    ``processing_time``."""
+    from pyspark.sql import functions as F
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    sales_in, stock_in = tmp_path / "in_sales", tmp_path / "in_stock"
+    sales_in.mkdir()
+    stock_in.mkdir()
+    mgr = file_pipeline(
+        spark, str(sales_in), str(stock_in), str(tmp_path / "sales"),
+        str(tmp_path / "stock"), str(tmp_path / "ckpt"),
+    )
+
+    def drain(k: int) -> int:
+        """Land batch ``k`` of both streams; the classes it compiled."""
+        for folder, events in ((sales_in, SALES_EVENTS), (stock_in, STOCK_EVENTS)):
+            with open(folder / f"batch{k}.jsonl", "w") as f:
+                for ev in events:
+                    f.write(json.dumps(dict(ev, event_id=f"{ev['event_id']}-{k}")) + "\n")
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        for name in ("sales_mv", "stock_movements_mv"):
+            q = mgr.attach(name, trigger_available_now=True)
+            q.awaitTermination(120)
+            assert q.exception() is None
+        mgr.detach_all()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    drain(0)
+    assert drain(1) == 0
+    for table, n in (("sales", 3), ("stock", 1)):
+        stamps = (
+            spark.read.parquet(str(tmp_path / table))
+            .groupBy(F.substring_index(F.input_file_name(), "/", -1).substr(1, 2).alias("batch"))
+            .agg(F.count("*").alias("rows"), F.count("processing_time").alias("stamped"),
+                 F.countDistinct("processing_time").alias("stamps"))
+            .orderBy("batch")
+            .collect()
+        )
+        assert [tuple(r) for r in stamps] == [("b0", n, n, 1), ("b1", n, n, 1)], table
