@@ -87,12 +87,11 @@ def upsert_batch(
     merged = merged.repartition(
         max(1, target_files_per_bucket), F.col(BUCKET_COL)
     ).transform(cut_lineage)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # dynamic for this write only: a session-wide conf would be shared
+    # with every stream's foreachBatch thread on the same session
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        BUCKET_COL
+    ).parquet(path)
 
 
 def upsert_batch_writer(

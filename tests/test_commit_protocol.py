@@ -8,6 +8,7 @@ itself so a refactor of any single writer can't reorder the protocol.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 
@@ -20,6 +21,11 @@ def _touch(path: str, content: str = "x") -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as fh:
         fh.write(content)
+
+
+def _use_backend(request, backend):
+    if backend == "hadoop_fs":
+        request.getfixturevalue("hadoop_fs")
 
 
 def test_marker_dir_must_be_a_destination(tmp_path):
@@ -323,28 +329,55 @@ class TestCompactionProtocol:
     PUTs -- and a writer-in-flight precondition is checked, not
     documented."""
 
-    def _build_table(self, spark, path):
+    @staticmethod
+    def _frame(spark, rows):
         from pyspark.sql import functions as F
 
+        return spark.createDataFrame(
+            rows, "event_time STRING, product_id INT, price DOUBLE"
+        ).withColumn("event_time", F.to_timestamp("event_time"))
+
+    def _build_table(self, spark, path):
         from kafka_clickhouse_pipeline_spark.streaming.sink import (
             idempotent_batch_writer,
         )
 
         writer = idempotent_batch_writer(path, target_files=2)
         for b in range(6):  # 12 files into 202401
-            df = spark.createDataFrame(
-                [
-                    (f"2024-01-{10 + b:02d} 00:00:00", b * 10 + i, 1.0)
-                    for i in range(5)
-                ],
-                "event_time STRING, product_id INT, price DOUBLE",
-            ).withColumn("event_time", F.to_timestamp("event_time"))
-            writer(df, b)
-        feb = spark.createDataFrame(
-            [("2024-02-01 00:00:00", 999, 2.0)],
-            "event_time STRING, product_id INT, price DOUBLE",
-        ).withColumn("event_time", F.to_timestamp("event_time"))
-        writer(feb, 100)
+            writer(self._frame(spark, [
+                (f"2024-01-{10 + b:02d} 00:00:00", b * 10 + i, 1.0)
+                for i in range(5)
+            ]), b)
+        writer(self._frame(spark, [("2024-02-01 00:00:00", 999, 2.0)]), 100)
+
+    @staticmethod
+    @contextlib.contextmanager
+    def _crash_at_marker():
+        """Every backend raises on a ``_compactions`` marker write: a
+        partition replace crashes after publishing, before its marker."""
+        real_backend = commit._backend
+
+        class _MarkerCrash:
+            def __init__(self, fs):
+                self._fs = fs
+
+            def __getattr__(self, n):
+                return getattr(self._fs, n)
+
+            def write_text(self, p, text):
+                if "_compactions" in p:
+                    raise RuntimeError("crash before compaction marker")
+                return self._fs.write_text(p, text)
+
+        def crashing(p, spark=None):
+            fs, pp = real_backend(p, spark)
+            return _MarkerCrash(fs), pp
+
+        commit._backend = crashing
+        try:
+            yield
+        finally:
+            commit._backend = real_backend
 
     @staticmethod
     def _rows(df):
@@ -375,39 +408,12 @@ class TestCompactionProtocol:
         assert self._rows(sink.read_table(spark, path)) == before
 
         # crash the first attempt at the marker write (publish done)
-        real_backend = commit._backend
-
-        class _MarkerCrash:
-            def __init__(self, fs):
-                self._fs = fs
-
-            def __getattr__(self, n):
-                return getattr(self._fs, n)
-
-            def write_text(self, p, text):
-                if "_compactions" in p:
-                    raise RuntimeError("crash before compaction marker")
-                return self._fs.write_text(p, text)
-
-        def crashing(p, spark=None):
-            fs, pp = real_backend(p, spark)
-            return _MarkerCrash(fs), pp
-
-        import pytest as _pytest
-
-        from kafka_clickhouse_pipeline_spark.streaming import (
-            commit as commit_mod,
-        )
-
-        orig = commit_mod._backend
-        commit_mod._backend = crashing
-        try:
-            with _pytest.raises(RuntimeError, match="crash before"):
-                sink.compact_partitions(
-                    spark, path, max_files_per_partition=8, target_files=2
-                )
-        finally:
-            commit_mod._backend = orig
+        with self._crash_at_marker(), pytest.raises(
+            RuntimeError, match="crash before"
+        ):
+            sink.compact_partitions(
+                spark, path, max_files_per_partition=8, target_files=2
+            )
 
         # half-published state exists on disk (raw glob, not the lagged
         # backend)...
@@ -453,7 +459,8 @@ class TestCompactionProtocol:
         jan = g.glob(os.path.join(path, "event_month=202401", "*.parquet"))
         assert len(jan) <= 2, jan
 
-    def test_detach_first_is_a_checked_invariant(self, spark, tmp_path):
+    @pytest.mark.parametrize("replace", ["compact", "overwrite"])
+    def test_detach_first_is_a_checked_invariant(self, spark, tmp_path, replace):
         from kafka_clickhouse_pipeline_spark.streaming import sink
 
         path = str(tmp_path / "table")
@@ -461,6 +468,88 @@ class TestCompactionProtocol:
         # a batch writer's staging dir = writer attached or crashed
         os.makedirs(os.path.join(path, "_staging", "7"))
         with pytest.raises(RuntimeError, match="DETACH"):
+            if replace == "compact":
+                sink.compact_partitions(spark, path)
+            else:
+                jan = [("2024-01-20 00:00:00", 500, 3.0)]
+                sink.overwrite_partitions(self._frame(spark, jan), path)
+
+    def test_overwrite_crash_before_marker_then_replay(self, spark, tmp_path):
+        """overwrite_partitions crashing between publish and marker: the
+        reader sees the old rows exactly once, and the replay sweeps the
+        crashed attempt's files and commits the new rows once."""
+        import glob as g
+
+        from kafka_clickhouse_pipeline_spark.streaming import sink
+
+        path = str(tmp_path / "table")
+        self._build_table(spark, path)
+        before = self._rows(sink.read_table(spark, path))
+        jan = self._frame(spark, [
+            ("2024-01-20 00:00:00", 500 + i, 3.0) for i in range(3)
+        ])
+        with self._crash_at_marker(), pytest.raises(
+            RuntimeError, match="crash before"
+        ):
+            sink.overwrite_partitions(jan, path, target_files=2)
+        assert g.glob(os.path.join(path, "event_month=202401", "c0-*.parquet"))
+        assert self._rows(sink.read_table(spark, path)) == before
+
+        sink.overwrite_partitions(jan, path, target_files=2)
+        after = sorted(self._rows(jan) + [r for r in before if r[0] == 999])
+        assert self._rows(sink.read_table(spark, path)) == after
+        assert self._rows(spark.read.parquet(path)) == after
+
+    @pytest.mark.parametrize("backend", ["local", "hadoop_fs"])
+    def test_overwrite_after_compaction_reads_each_row_once(
+        self, backend, request, spark, tmp_path
+    ):
+        """Compact a month, overwrite it, land one more batch: the
+        reader and a second compaction see every row exactly once (the
+        overwrite supersedes the compacted files by marker, so no
+        committed manifest names a deleted file)."""
+        from kafka_clickhouse_pipeline_spark.streaming import sink
+
+        _use_backend(request, backend)
+        path = str(tmp_path / "table")
+        self._build_table(spark, path)
+        assert sink.compact_partitions(
+            spark, path, max_files_per_partition=8, target_files=2
+        ) == ["202401"]
+        jan = self._frame(spark, [
+            ("2024-01-20 00:00:00", 500 + i, 3.0) for i in range(3)
+        ])
+        sink.overwrite_partitions(jan, path, target_files=2)
+        late = self._frame(spark, [("2024-01-25 00:00:00", 700, 4.0)])
+        sink.idempotent_batch_writer(path, target_files=2)(late, 6)
+        expected = sorted(
+            self._rows(jan) + self._rows(late) + [(999, "2024-02-01 00:00:00")]
+        )
+        assert self._rows(sink.read_table(spark, path)) == expected
+        assert sink.compact_partitions(
+            spark, path, max_files_per_partition=1, target_files=1
+        ) == ["202401"]
+        assert self._rows(sink.read_table(spark, path)) == expected
+        assert self._rows(spark.read.parquet(path)) == expected
+
+    @pytest.mark.parametrize(
+        "text",
+        ["committed", '{"v": 1}', '{"v": 1, "partitions": []}'],
+        ids=["text", "no_partitions", "partitions_list"],
+    )
+    def test_malformed_compaction_marker_raises_naming_its_path(
+        self, spark, tmp_path, text
+    ):
+        """A ``_compactions`` marker that is not a v1 manifest is an
+        error naming the marker file, for readers and the compactor."""
+        from kafka_clickhouse_pipeline_spark.streaming import sink
+
+        path = str(tmp_path / "table")
+        marker = os.path.join(path, "_compactions", "0")
+        _touch(marker, text)
+        with pytest.raises(ValueError, match=re.escape(repr(marker))):
+            sink.read_table(spark, path)
+        with pytest.raises(ValueError, match=re.escape(repr(marker))):
             sink.compact_partitions(spark, path)
 
     def test_null_partition_never_compacted(self, spark, tmp_path):
@@ -495,11 +584,6 @@ class TestCommittedOnlyReaders:
     any other read failure propagates."""
 
     @staticmethod
-    def _use_backend(request, backend):
-        if backend == "hadoop_fs":
-            request.getfixturevalue("hadoop_fs")
-
-    @staticmethod
     def _batches(spark, state):
         import datetime
 
@@ -528,7 +612,7 @@ class TestCommittedOnlyReaders:
     def test_uncommitted_batch_is_hidden_until_replay(
         self, state, backend, request, spark, tmp_path
     ):
-        self._use_backend(request, backend)
+        _use_backend(request, backend)
         writer, read, (b0, b1) = self._batches(spark, state)
         path = str(tmp_path / "state")
         w = writer(path)
@@ -569,7 +653,7 @@ class TestCommittedOnlyReaders:
             multiplexed_file_pipeline,
         )
 
-        self._use_backend(request, backend)
+        _use_backend(request, backend)
         sales, stock = str(tmp_path / "sales"), str(tmp_path / "stock")
         route = multiplexed_file_pipeline(
             spark, str(tmp_path / "in"), sales, stock, str(tmp_path / "ckpt")
@@ -638,9 +722,34 @@ class TestCommittedOnlyReaders:
 
     @pytest.mark.parametrize("backend", ["local", "hadoop_fs"])
     def test_missing_path_reads_as_empty(self, backend, request, spark, tmp_path):
-        self._use_backend(request, backend)
+        _use_backend(request, backend)
         out = commit.read_state(spark, str(tmp_path / "none"), "x bigint")
         assert out.collect() == []
+
+    @pytest.mark.parametrize("backend", ["local", "hadoop_fs"])
+    def test_mv_table_with_no_committed_batch_reads_as_empty(
+        self, backend, request, spark, tmp_path
+    ):
+        """``sink.read_table`` on an MV table whose only batch is
+        published but not marked reads as no rows with the table's
+        columns, never as a raw read of every file; a missing path
+        keeps Spark's PATH_NOT_FOUND."""
+        from pyspark.errors import AnalysisException
+
+        from kafka_clickhouse_pipeline_spark.streaming import sink
+
+        _use_backend(request, backend)
+        path = str(tmp_path / "table")
+        batch = spark.createDataFrame(
+            [("2024-01-10 00:00:00", 1)], "event_time STRING, product_id INT"
+        ).selectExpr("to_timestamp(event_time) AS event_time", "product_id")
+        sink.idempotent_batch_writer(path)(batch, 0)
+        os.remove(commit.marker_path(path, 0))
+        got = sink.read_table(spark, path)
+        assert got.collect() == []
+        assert sorted(got.columns) == ["event_month", "event_time", "product_id"]
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            sink.read_table(spark, str(tmp_path / "none"))
 
     @pytest.mark.parametrize("backend", ["local", "hadoop_fs"])
     def test_unreadable_committed_file_raises(
@@ -650,7 +759,7 @@ class TestCommittedOnlyReaders:
         whose file is not parquet must raise, not read as empty."""
         from py4j.protocol import Py4JJavaError
 
-        self._use_backend(request, backend)
+        _use_backend(request, backend)
         path = str(tmp_path / "state")
         _touch(os.path.join(path, "b0-part-0.parquet"), "not parquet")
         commit.write_marker(path, 0, {path: ["b0-part-0.parquet"]})

@@ -84,6 +84,33 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert _table(spark, path)[7] == (1, "v7")
 
 
+def test_upsert_leaves_the_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Dynamic overwrite is an option of the one write, never a session
+    conf set and restored around it: the session is shared with every
+    other stream's foreachBatch thread, and a restore racing another
+    upsert's write would turn that write into a full-table overwrite."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    set_keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        set_keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    path = str(tmp_path / "t")
+    upsert_batch(
+        _rows(spark, [(k, 1, f"v{k}") for k in range(40)]), path, ["k"], ["ts"], 8
+    )
+    before = _files_by_bucket(path)
+    upsert_batch(_rows(spark, [(1, 2, "updated")]), path, ["k"], ["ts"], 8)
+    assert set_keys == []
+    after = _files_by_bucket(path)
+    assert sum(after.get(b) != before[b] for b in before) == 1
+    assert len(_table(spark, path)) == 40
+
+
 def test_upsert_stream_available_now(spark, tmp_path):
     """End-to-end streaming path: file source -> upsert sink with an
     availableNow trigger (the ATTACH analog), then an incremental second
