@@ -423,7 +423,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag + cumulative-sum windows: assign session ids, then summarize
     each session (start, end, n_events, revenue). Two window passes
     over one shuffle on user_id -- the standard batch sessionization
-    plan; the streaming twin lives in streaming.stateful."""
+    plan; the streaming twin is streaming.sessions.sessionize_stream."""
     from pyspark.sql.window import Window
 
     events = load_table(spark, sf_dir, "events")

@@ -61,7 +61,7 @@ def connected_components(
     # each round becomes a map-side join + one O(nodes) min shuffle.
     # Above the gate the shuffle-join rounds stay.
     bcast_labels = labels.count() <= PAGERANK_BROADCAST_MAX_NODES
-    for rnd in range(max_iter):
+    for _ in range(max_iter):
         # each node adopts the min label among itself and its neighbors
         neighbor_labels = (
             sym.join(
@@ -70,16 +70,12 @@ def connected_components(
             )
             .select(F.col("src").alias("node"), "label")
         )
-        # checkpoint every ITER_CKPT_EVERY rounds (r12): the
-        # convergence agg below materializes the round either way, so
-        # an uncut round costs one in-memory recompute of its (cheap)
-        # join+min when the next round consumes it -- half the
-        # scheduled checkpoint jobs on a latency-bound loop
-        labels = _maybe_cut(
+        # loops cut every round: every 2nd measured no faster (OPTIMIZATION_r12.md)
+        labels = (
             labels.unionByName(neighbor_labels)
             .groupBy("node")
-            .agg(F.min("label").alias("label")),
-            rnd,
+            .agg(F.min("label").alias("label"))
+            .transform(cut_lineage)
         )
         new_sum = labels.agg(label_sum).first()["s"]
         if prev_sum is not None and new_sum == prev_sum:
@@ -149,7 +145,7 @@ def connected_components_twostar(
     # for the rewire joins -- each round keeps only the dedup
     # exchanges. Above the gate the shuffle joins stay.
     bcast_mins = edge_nodes.count() <= PAGERANK_BROADCAST_MAX_NODES
-    for rnd in range(max_iter):
+    for _ in range(max_iter):
         if prev[0] == 0:
             break
         # LARGE-STAR: for each center, connect its strictly-larger
@@ -188,16 +184,13 @@ def connected_components_twostar(
                 smins.select(F.col("u").alias("a"), F.col("m").alias("b"))
             )
         )
-        # checkpoint every ITER_CKPT_EVERY rounds (r12): the signature
-        # aggregate materializes the round either way; an uncut round
-        # is recomputed in memory once by the next round's consumers
-        canon = _maybe_cut(
+        canon = (
             small.select(
                 F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
             )
             .filter(F.col("u") != F.col("v"))
-            .distinct(),
-            rnd,
+            .distinct()
+            .transform(cut_lineage)
         )
         cur = signature(canon)
         if cur == prev:
@@ -281,32 +274,6 @@ PAGERANK_ITERS = 5
 #: full rank vector ships to every executor every round -- fine for a
 #: 200k-part catalog, fatal at web-graph scale.
 PAGERANK_BROADCAST_MAX_NODES = 4_000_000
-
-#: Cut lineage every N rounds in the iterative loops (r12, VERDICT r11
-#: #3). Measured NEGATIVE at 2, kept at 1 (the r10/r11 cut-every-round
-#: shape): an interleaved in-session A/B at sf0.1 (4 alternating pairs
-#: per query, per-pair ratios so the box's ghost load cancels;
-#: OPTIMIZATION_r12.md "iterative-loop checkpoint batching") showed
-#: q_dedup_clusters_twostar 1.25x SLOWER with batching (53 vs 46
-#: scheduled jobs -- each round's canon feeds sym TWICE plus the
-#: signature action, so an uncut round is re-derived ~3x and the saved
-#: checkpoint job is repaid with interest), q_dedup_clusters 35 vs 34
-#: jobs (the per-round convergence agg schedules regardless, and the
-#: uncut round makes it do the round's work), and LPA/modularity/
-#: closeness inside the +/-8% noise floor (calibrated by an
-#: identical-code null pair in the same session). The hypothesis that
-#: per-round localCheckpoint jobs dominate these loops' wall was
-#: wrong: the convergence/collect actions pin a job per round anyway.
-ITER_CKPT_EVERY = 1
-
-
-def _maybe_cut(df: DataFrame, rnd: int) -> DataFrame:
-    """Cut lineage on every ITER_CKPT_EVERY-th round (0-based ``rnd``;
-    rounds ITER_CKPT_EVERY-1, 2*ITER_CKPT_EVERY-1, ... are cut)."""
-    if rnd % ITER_CKPT_EVERY == ITER_CKPT_EVERY - 1:
-        return df.transform(cut_lineage)
-    return df
-
 
 def pagerank_fixed_point(
     edges: DataFrame | None,
@@ -1036,13 +1003,9 @@ def lpa_labels(edges: DataFrame, *, _nodes: DataFrame | None = None) -> DataFram
         else edges.select(F.col("src").alias("node")).distinct()
     ).withColumn("label", F.col("node"))
     small = labels.count() <= LPA_BROADCAST_MAX_NODES
-    for rnd in range(LPA_ROUNDS):
-        # r12: cut every ITER_CKPT_EVERY rounds -- each round's labels
-        # have exactly one consumer (the next round), so an uncut round
-        # just deepens the lazy plan by one bounded join+aggregate and
-        # the next cut materializes both rounds in ONE scheduled job
-        labels = _maybe_cut(
-            _lpa_round(edges, labels, broadcast_labels=small), rnd
+    for _ in range(LPA_ROUNDS):
+        labels = _lpa_round(edges, labels, broadcast_labels=small).transform(
+            cut_lineage
         )
     return labels
 
@@ -2626,7 +2589,7 @@ def q_closeness_sampled(
                 ).alias(f"b{j}")
                 for j in range(n_words)
             ],
-        ).transform(lambda df: _maybe_cut(df, hop - 1))
+        ).transform(cut_lineage)
         any_new = None
         for j in range(n_words):
             cond = F.col(f"new{j}") != 0

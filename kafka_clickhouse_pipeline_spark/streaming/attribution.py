@@ -1,8 +1,9 @@
 """Last-touch attribution: native watermarked stream-stream join.
 
-The other streaming operators here (sessions, funnel, dedup, drift...)
-are foreachBatch state machines because their semantics need
-cross-batch custom state. Attribution candidates are different: "every
+Most other streaming operators here (funnel, dedup, drift...) are
+foreachBatch state machines because their semantics need cross-batch
+custom state. Attribution candidates are different, as sessions are
+(a native ``session_window`` aggregation): "every
 (purchase, click) pair of the same user with the click inside the
 trailing window" is EXACTLY the shape Structured Streaming's
 stream-stream inner join with event-time range condition + watermarks

@@ -18,8 +18,8 @@ Correctness contract: exact for event-time-ordered arrival ACROSS
 batches (any order within a batch is fine -- the range windows sort).
 An event arriving after its user's state has advanced more than the
 chain window past it is treated as too-late and cannot anchor new
-chains -- the same trailing-watermark semantics the stateful session
-operator documents; completed flags are never lost.
+chains -- a per-user trailing watermark; completed flags are never
+lost.
 """
 
 from __future__ import annotations

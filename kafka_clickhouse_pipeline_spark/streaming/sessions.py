@@ -1,150 +1,47 @@
-"""Custom stateful streaming operator: gap-based sessionization via
-``applyInPandasWithState`` -- the escape hatch for stateful semantics
-the built-in window/dedup operators can't express (arbitrary per-key
-state machines with event-time timeouts).
+"""Streaming gap sessionization on Spark's native ``session_window``.
 
 Semantics match the batch twin (operators.analytics.q_sessionize): a
 session is a maximal run of a user's events with inter-event gaps <=
-GAP; a session closes when the event-time watermark passes
-last_event + GAP (timeout), and the closed session summary is emitted
-(append mode).
+GAP_SECONDS (a gap of exactly 30:00 stays in the session; 30:00.000001
+splits it). A session is emitted once, in append mode, when the
+event-time watermark passes its last event + GAP_SECONDS.
 
-State per key: (session_start_ms, last_ts_ms, n_events, revenue) --
-constant size, evicted on timeout, so total state is bounded by the
-number of users active inside the gap horizon regardless of stream
-length. Arrow batches in/out; no per-row Python calls.
+The engine's streaming aggregation keeps the state: each user's open
+sessions, merged as events arrive in any order the watermark still
+admits, so an out-of-order event extends, joins or splits sessions as
+it would in the batch plan. No Python runs per batch. q_sessionize
+measures gaps in whole seconds, so the two differ only on a gap
+between 30:00 and 30:01 whose events carry sub-second parts.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql import functions as F
 
 GAP_SECONDS = 30 * 60
 
-SESSION_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", IntegerType()),
-        StructField("revenue", DoubleType()),
-    ]
-)
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("start_ms", LongType()),
-        StructField("last_ms", LongType()),
-        StructField("n_events", IntegerType()),
-        StructField("revenue", DoubleType()),
-    ]
-)
-
-
-def _sessionize_group(
-    key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    closed: list[tuple] = []
-
-    if state.hasTimedOut:
-        start_ms, last_ms, n, rev = state.get
-        closed.append((user_id, start_ms, last_ms, n, rev))
-        state.remove()
-    else:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        if state.exists:
-            start_ms, last_ms, n, rev = state.get
-        else:
-            start_ms = last_ms = None  # type: ignore[assignment]
-            n, rev = 0, 0.0
-        for ts, value in zip(rows["ts"], rows["value"]):
-            ts_ms = int(ts.timestamp() * 1000)
-            if last_ms is not None and ts_ms - last_ms > GAP_SECONDS * 1000:
-                closed.append((user_id, start_ms, last_ms, n, rev))
-                start_ms, n, rev = ts_ms, 0, 0.0
-            if start_ms is None:
-                start_ms = ts_ms
-            last_ms = ts_ms
-            n += 1
-            rev += float(value) if pd.notna(value) else 0.0
-        state.update((start_ms, last_ms, n, rev))
-        # close the session when the watermark passes last event + gap
-        state.setTimeoutTimestamp(last_ms + GAP_SECONDS * 1000)
-
-    if closed:
-        yield pd.DataFrame(
-            {
-                "user_id": [c[0] for c in closed],
-                "session_start": [pd.Timestamp(c[1], unit="ms") for c in closed],
-                "session_end": [pd.Timestamp(c[2], unit="ms") for c in closed],
-                "n_events": pd.Series([c[3] for c in closed], dtype="int32"),
-                "revenue": [round(c[4], 2) for c in closed],
-            }
-        )
-
-
-def sessionize_stream_native(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """The built-in counterpart: ``F.session_window`` gap sessions --
-    Spark's native dynamic-gap window, state managed by the engine's
-    streaming aggregation (no Python in the loop at all). Prefer this
-    form when the per-session output is expressible as aggregates;
-    ``sessionize_stream`` (applyInPandasWithState) remains the escape
-    hatch for arbitrary per-key state machines.
-
-    Semantics difference to the custom operator, inherent to
-    session_window: the reported window end is last_event + gap (the
-    session's timeout horizon), not the last event's timestamp; starts,
-    event counts, and sums are identical."""
-    from pyspark.sql import functions as F
-
+def sessionize_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+    """events(user_id, ts, value) stream -> closed-session summaries
+    (user_id, session_start, session_end, n_events, revenue), where
+    session_end is the session's last event and a null value counts
+    as 0 revenue."""
+    w = F.session_window("ts", f"{GAP_SECONDS} seconds")
     return (
         events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        .groupBy("user_id", w.alias("w"))
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("revenue"),
+            F.round(F.coalesce(F.sum("value"), F.lit(0.0)), 2).alias("revenue"),
         )
         .select(
             "user_id",
             F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
+            (F.col("w.end") - F.expr(f"INTERVAL {GAP_SECONDS} SECONDS")).alias(
+                "session_end"
+            ),
             "n_events",
             "revenue",
-        )
-    )
-
-
-def sessionize_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """events(user_id, event_id, ts, value) stream -> closed-session
-    summaries. Requires an event-time watermark (drives both late-data
-    semantics and session timeouts)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_group,
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )

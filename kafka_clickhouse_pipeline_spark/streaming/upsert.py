@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..lineage import cut_lineage
+from . import commit
 
 #: Partition column holding the key hash bucket.
 BUCKET_COL = "key_bucket"
@@ -64,14 +65,14 @@ def upsert_batch(
     n_buckets: int = 64,
     target_files_per_bucket: int = 1,
 ) -> None:
-    """Merge one (micro-)batch into the keyed table at ``path``."""
-    import os
-
+    """Merge one (micro-)batch into the keyed table at ``path`` (a plain
+    path or any URI the commit backends route)."""
     spark = batch_df.sparkSession
     upd = latest_per_key(batch_df, keys, version_cols).withColumn(
         BUCKET_COL, F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
     )
-    if os.path.exists(path):
+    fs, p = commit._backend(path, spark)
+    if fs.exists(p):
         touched = [r[0] for r in upd.select(BUCKET_COL).distinct().collect()]
         if not touched:
             return

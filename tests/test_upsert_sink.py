@@ -7,6 +7,8 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
+
 from kafka_clickhouse_pipeline_spark.streaming.upsert import (
     BUCKET_COL,
     latest_per_key,
@@ -82,6 +84,24 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert len(changed) == 1  # exactly key 1's bucket
     assert _table(spark, path)[1] == (2, "updated")
     assert _table(spark, path)[7] == (1, "v7")
+
+
+@pytest.mark.parametrize("as_uri", [False, True], ids=["plain_path", "file_uri"])
+def test_upsert_reads_the_current_table_at_any_uri(spark, tmp_path, as_uri):
+    """The existing-table check goes through the commit backends, so a
+    table named by a file:// URI keeps the untouched rows of the
+    buckets a batch rewrites instead of replacing them with the batch."""
+    path = str(tmp_path / "t")
+    if as_uri:
+        path = f"file://{path}"
+    upsert_batch(
+        _rows(spark, [(k, 1, f"v{k}") for k in range(40)]), path, ["k"], ["ts"], 2
+    )
+    upsert_batch(_rows(spark, [(1, 2, "updated")]), path, ["k"], ["ts"], 2)
+    table = _table(spark, path)
+    assert len(table) == 40
+    assert table[1] == (2, "updated")
+    assert table[7] == (1, "v7")
 
 
 def test_upsert_leaves_the_session_conf_alone(spark, tmp_path, monkeypatch):
