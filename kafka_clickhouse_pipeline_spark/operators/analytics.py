@@ -423,21 +423,24 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag + cumulative-sum windows: assign session ids, then summarize
     each session (start, end, n_events, revenue). Two window passes
     over one shuffle on user_id -- the standard batch sessionization
-    plan; the streaming twin is streaming.sessions.sessionize_stream."""
+    plan; the streaming twin is streaming.sessions.sessionize_stream.
+    Gaps are measured in microseconds, as the stream measures them: a
+    gap of exactly 30:00 stays in the session, 30:00.000001 splits it."""
     from pyspark.sql.window import Window
 
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # TIMESTAMP_NTZ cannot cast straight to BIGINT in Spark 4; go via
-    # an epoch-seconds expression that is NTZ-safe.
-    ts_secs = F.col("ts").cast("timestamp").cast("long")
-    gap = ts_secs - F.lag(ts_secs).over(w)
+    # unix_micros takes a TIMESTAMP; the cast also admits TIMESTAMP_NTZ.
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = ts_us - F.lag(ts_us).over(w)
     with_flag = events.select(
         "user_id",
         "event_id",
         "ts",
         F.col("value").cast(DEC).alias("value"),
-        F.when(gap.isNull() | (gap > 1800), 1).otherwise(0).alias("new_session"),
+        F.when(gap.isNull() | (gap > 1_800_000_000), 1)
+        .otherwise(0)
+        .alias("new_session"),
     )
     with_sid = with_flag.withColumn(
         "session_seq",
@@ -548,8 +551,8 @@ ANALYTICS_ORACLES: dict[str, str] = {
         WITH flagged AS (
           SELECT user_id, event_id, ts,
                  CAST(value AS DECIMAL(18,2)) AS value,
-                 CASE WHEN CAST(floor(epoch(ts)) AS BIGINT) - lag(CAST(floor(epoch(ts)) AS BIGINT))
-                        OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800
+                 CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
+                        OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
                       OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
                       THEN 1 ELSE 0 END AS new_session
           FROM events),

@@ -21,6 +21,31 @@ from ..catalog import load_table
 from ..lineage import cut_lineage
 from .dedup import JACCARD_THRESHOLD, minhash_lsh_pairs
 
+#: Broadcast a frame of per-node state (ranks, labels, frontiers,
+#: degrees) only while it has at most this many rows. A row is mostly
+#: two longs, ~16 B, so 4M rows is ~64 MB of payload: inside Spark's
+#: 8 GB broadcast limit with room for overhead, while a billion-node
+#: graph falls through to the shuffle join. Below it the per-round
+#: state rides to every executor and the checkpointed edge list never
+#: reshuffles across rounds (LPA: 17.2 s -> 4.1 s warm at sf0.1).
+#: Betweenness and HITS bound a row count that is not a node count
+#: (sources x nodes, and edges), hence ROWS.
+BROADCAST_MAX_ROWS = 4_000_000
+
+
+def _broadcastable(rows: int) -> bool:
+    """Whether a frame of ``rows`` rows may be broadcast (the one gate
+    every per-node broadcast in this module reads)."""
+    return rows <= BROADCAST_MAX_ROWS
+
+
+def _adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The checkpointed co-purchase adjacency of the fixture's
+    ``lineitem`` (see co_purchase_adjacency): the prep frame most
+    graph queries start from."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return co_purchase_adjacency(li).transform(cut_lineage)
+
 
 def connected_components(
     nodes: DataFrame, edges: DataFrame, max_iter: int = 20
@@ -56,11 +81,11 @@ def connected_components(
     label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     prev_sum = None
     # r11 (guide section 3.1): the label frame is one row per
-    # edge-touched node; under the PageRank node gate broadcast it so
+    # edge-touched node; within BROADCAST_MAX_ROWS, broadcast it so
     # the (checkpointed) edge list never reshuffles across rounds --
     # each round becomes a map-side join + one O(nodes) min shuffle.
-    # Above the gate the shuffle-join rounds stay.
-    bcast_labels = labels.count() <= PAGERANK_BROADCAST_MAX_NODES
+    # Above the bound the shuffle-join rounds stay.
+    bcast_labels = _broadcastable(labels.count())
     for _ in range(max_iter):
         # each node adopts the min label among itself and its neighbors
         neighbor_labels = (
@@ -140,11 +165,11 @@ def connected_components_twostar(
 
     prev = signature(canon)
     # r11 (guide section 3.1): the per-center minimum frames are one
-    # row per surviving node; under the PageRank node gate broadcast
+    # row per surviving node; within BROADCAST_MAX_ROWS, broadcast
     # them so the (shrinking, checkpointed) edge set never reshuffles
     # for the rewire joins -- each round keeps only the dedup
-    # exchanges. Above the gate the shuffle joins stay.
-    bcast_mins = edge_nodes.count() <= PAGERANK_BROADCAST_MAX_NODES
+    # exchanges. Above the bound the shuffle joins stay.
+    bcast_mins = _broadcastable(edge_nodes.count())
     for _ in range(max_iter):
         if prev[0] == 0:
             break
@@ -208,6 +233,25 @@ def connected_components_twostar(
     )
 
 
+def _dedup_clusters(spark: SparkSession, sf_dir: str, components) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size) for every document in a
+    multi-document cluster, the clusters being ``components(nodes,
+    edges)`` over the near-dup pair graph."""
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = minhash_lsh_pairs(docs).select(
+        F.col("d1").alias("src"), F.col("d2").alias("dst")
+    )
+    nodes = docs.select(F.col("doc_id").alias("node"))
+    comp = components(nodes, pairs)
+    sizes = comp.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return (
+        comp.join(sizes, "cluster_id")
+        .filter(F.col("cluster_size") > 1)
+        .select(F.col("node").alias("doc_id"), "cluster_id", "cluster_size")
+        .orderBy("cluster_id", "doc_id")
+    )
+
+
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate clusters: connected components over the 3-gram
     Jaccard pair graph (threshold 0.8). Pairs come from the
@@ -217,19 +261,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall at this threshold is ~1, tested). Output one row per
     document in a multi-document cluster: (doc_id, cluster_id,
     cluster_size)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs).select(
-        F.col("d1").alias("src"), F.col("d2").alias("dst")
-    )
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    comp = connected_components(nodes, pairs)
-    sizes = comp.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        comp.join(sizes, "cluster_id")
-        .filter(F.col("cluster_size") > 1)
-        .select(F.col("node").alias("doc_id"), "cluster_id", "cluster_size")
-        .orderBy("cluster_id", "doc_id")
-    )
+    return _dedup_clusters(spark, sf_dir, connected_components)
 
 
 def q_dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,21 +273,7 @@ def q_dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     components. See connected_components_twostar for why the
     O(log^2 n)-round form is the 100 TB default when component
     diameters are unbounded."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs).select(
-        F.col("d1").alias("src"), F.col("d2").alias("dst")
-    )
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    comp = connected_components_twostar(nodes, pairs)
-    sizes = comp.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return (
-        comp.join(sizes, "cluster_id")
-        .filter(F.col("cluster_size") > 1)
-        .select(F.col("node").alias("doc_id"), "cluster_id", "cluster_size")
-        .orderBy("cluster_id", "doc_id")
-    )
+    return _dedup_clusters(spark, sf_dir, connected_components_twostar)
 
 
 #: Fixed-point PageRank: ranks are BIGINTs scaled by 10^12 and every
@@ -265,15 +283,6 @@ def q_dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
 PAGERANK_SCALE = 10**12
 PAGERANK_ITERS = 5
 
-#: Broadcast the per-round rank vector only while it is genuinely
-#: small. Each contrib row is ~16 bytes of payload (two longs); 4M
-#: nodes keeps the broadcast comfortably inside Spark's default 8GB
-#: hard limit with room for overhead, while a billion-node graph
-#: falls through to a plain shuffle join on src (both sides already
-#: partitioned by the join key after round one). Without the gate the
-#: full rank vector ships to every executor every round -- fine for a
-#: 200k-part catalog, fatal at web-graph scale.
-PAGERANK_BROADCAST_MAX_NODES = 4_000_000
 
 def pagerank_fixed_point(
     edges: DataFrame | None,
@@ -290,7 +299,7 @@ def pagerank_fixed_point(
     Driver runs the loop; data never leaves the executors. Per round:
     the rank vector joins onto the checkpointed edge list -- map-side
     broadcast while the vector is small (node count under
-    PAGERANK_BROADCAST_MAX_NODES), a plain shuffle join beyond that --
+    BROADCAST_MAX_ROWS), a plain shuffle join beyond that --
     then one shuffle of per-destination partial sums; partial
     aggregation means that shuffle carries O(nodes), not O(edges),
     regardless of graph size. The materialized frame is the PER-NODE
@@ -323,10 +332,9 @@ def pagerank_fixed_point(
     ranks = adj.select(
         F.col("src").alias("node"), F.lit(r0).cast("long").alias("r")
     )
-    small_enough = n <= PAGERANK_BROADCAST_MAX_NODES
     for _ in range(iters):
         ranks = _pagerank_round(
-            edges_v, deg, ranks, teleport, broadcast_ranks=small_enough
+            edges_v, deg, ranks, teleport, broadcast_ranks=_broadcastable(n)
         ).transform(cut_lineage)
     return ranks
 
@@ -413,18 +421,17 @@ def q_ppr_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round spread join reads it and explodes map-side, degree is a
     size() projection, and the seed draw scans |V| rows instead of
     distinct-ing |E|."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj = co_purchase_adjacency(li).transform(cut_lineage)
+    adj = _adjacency(spark, sf_dir)
     edges = adj.select("src", F.explode("nbrs").alias("dst"))
     deg = adj.select("src", F.size("nbrs").alias("d"))
     # r11 (guide section 3.1): the nonzero-rank frame is bounded by |V|
-    # (and usually far smaller -- it IS the walk frontier); under the
-    # PageRank node gate broadcast it so the adjacency never reshuffles
+    # (and usually far smaller -- it IS the walk frontier); within
+    # BROADCAST_MAX_ROWS, broadcast it so the adjacency never reshuffles
     # across rounds -- each spread is then a map-side join + one
-    # O(frontier) partial-sum shuffle. Above the gate the plain
+    # O(frontier) partial-sum shuffle. Above the bound the plain
     # shuffle-join rounds stay (a billion-node frontier cannot
     # broadcast).
-    bcast_state = adj.count() <= PAGERANK_BROADCAST_MAX_NODES
+    bcast_state = _broadcastable(adj.count())
     seed_order = [F.md5(F.col("src").cast("string")), F.col("src")]
     seeds = (
         adj.select("src")
@@ -720,7 +727,8 @@ def _wedge_reduce_arrow(
     State: the linked keys (8 B/edge) and the (ids, degs) arrays
     (16 B/node) ride one sc.broadcast fetched once per WORKER -- the
     data volume the fallback broadcasts as JVM hash relations under
-    the same NODE_JACCARD_BROADCAST_MAX_* gates. Per-task state is
+    the same BROADCAST_MAX_ROWS and NODE_JACCARD_BROADCAST_MAX_EDGES
+    gates. Per-task state is
     the partition's key slice (~_WEDGE_PAIRS_PER_TASK x 8 B)."""
     import numpy as np
     import pyarrow as pa
@@ -853,8 +861,7 @@ def q_triangle_count_copurchase(
     broadcast the adjacency arrays, so the per-edge rows carrying
     ``nu`` never cross an exchange (guide section 2.3/3.1); above the
     gate the original width-scaled shuffle joins are kept."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+    adj0 = _adjacency(spark, sf_dir)
     # directed edge list has both orientations, so out-degree = degree
     deg = adj0.select("src", F.size("nbrs").alias("d"))
     und = adj0.select(
@@ -876,7 +883,7 @@ def q_triangle_count_copurchase(
     # orient by (degree, id): lo = the lower-(d, id) endpoint. ds came
     # out of the explode; dd is one degree join (size-gated broadcast)
     dd = deg.select(F.col("src").alias("d_"), F.col("d").alias("dd"))
-    if n_nodes <= NODE_JACCARD_BROADCAST_MAX_NODES:
+    if _broadcastable(n_nodes):
         dd = F.broadcast(dd)
     ranked = und.join(dd, F.col("dst") == F.col("d_"))
     src_first = (F.col("ds") < F.col("dd")) | (
@@ -949,11 +956,6 @@ def q_triangle_count_copurchase(
 #: so the oracle can unroll the exact computation.
 LPA_ROUNDS = 3
 
-#: Broadcast the per-round label frame when the graph has at most this
-#: many nodes (~16 bytes/row -> ~80 MB at the bound); bigger graphs
-#: fall back to the shuffle join.
-LPA_BROADCAST_MAX_NODES = 5_000_000
-
 
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection on the co-purchase graph by deterministic
@@ -969,7 +971,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     then argmax per node as a min(struct) -- no window sort). Labels
     are lineage-cut per round, so the plan never grows with rounds;
     edge list materialized once. When the node set fits a broadcast
-    (<= LPA_BROADCAST_MAX_NODES, one bounded count decides), the label
+    (<= BROADCAST_MAX_ROWS, one bounded count decides), the label
     frame is broadcast-hinted so the edge list NEVER shuffles across
     the rounds -- measured 17.2 s -> 4.1 s warm at sf0.1; a
     billion-node graph exceeds the bound and falls back to the shuffle
@@ -977,20 +979,24 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-dependent and unreproducible on a cluster; the synchronous
     min-tie-break variant trades convergence speed for determinism --
     the right trade when results must be auditable."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj = co_purchase_adjacency(li).transform(cut_lineage)
-    return lpa_labels(
+    adj = _adjacency(spark, sf_dir)
+    labels, _ = lpa_labels(
         adj.select("src", F.explode("nbrs").alias("dst")),
         _nodes=adj.select("src"),
-    ).select(
+    )
+    return labels.select(
         F.col("node").alias("partkey"), F.col("label").alias("community")
     ).orderBy("partkey")
 
 
-def lpa_labels(edges: DataFrame, *, _nodes: DataFrame | None = None) -> DataFrame:
+def lpa_labels(
+    edges: DataFrame, *, _nodes: DataFrame | None = None
+) -> tuple[DataFrame, int]:
     """The LPA loop shared by q_label_propagation and the modularity
-    audit: (src, dst) directed edges -> (node, label) after LPA_ROUNDS
-    synchronous rounds (see q_label_propagation for the contract).
+    audit: (src, dst) directed edges -> ((node, label) after LPA_ROUNDS
+    synchronous rounds, node count), so a caller that gates on the
+    node count need not count again (see q_label_propagation for the
+    contract).
     ``_nodes`` (optional, one column of already-distinct node ids)
     skips the label-init distinct when the caller has the node
     universe in hand -- r11: both callers pass the adjacency frame's
@@ -1002,12 +1008,12 @@ def lpa_labels(edges: DataFrame, *, _nodes: DataFrame | None = None) -> DataFram
         if _nodes is not None
         else edges.select(F.col("src").alias("node")).distinct()
     ).withColumn("label", F.col("node"))
-    small = labels.count() <= LPA_BROADCAST_MAX_NODES
+    n_nodes = labels.count()
     for _ in range(LPA_ROUNDS):
-        labels = _lpa_round(edges, labels, broadcast_labels=small).transform(
-            cut_lineage
-        )
-    return labels
+        labels = _lpa_round(
+            edges, labels, broadcast_labels=_broadcastable(n_nodes)
+        ).transform(cut_lineage)
+    return labels, n_nodes
 
 
 def _lpa_round(
@@ -1389,10 +1395,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the matched neighbor lists map-side, instead of re-scanning a
     flat edge checkpoint ~10x its size in deserialized rows; the seed
     draw needs no distinct (adjacency src is the node universe)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    adj = co_purchase_adjacency(
-        li.select("l_orderkey", "l_partkey")
-    ).transform(cut_lineage)
+    adj = _adjacency(spark, sf_dir)
     visited = (
         adj.select("src")
         .filter(F.col("src") % 100 == 1)
@@ -1401,11 +1404,11 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frontier = visited.select("node")
     # r11 (guide section 3.1): frontier and visited are bounded by |V|;
-    # under the node gate broadcast both so each hop is a map-side
+    # within BROADCAST_MAX_ROWS, broadcast both so each hop is a map-side
     # probe of the checkpointed adjacency + one distinct shuffle --
-    # the adjacency itself never reshuffles. Above the gate the
+    # the adjacency itself never reshuffles. Above the bound the
     # shuffle joins stay (a billion-node visited set cannot broadcast).
-    bcast_state = adj.count() <= PAGERANK_BROADCAST_MAX_NODES
+    bcast_state = _broadcastable(adj.count())
     for hop in range(1, BFS_MAX_HOPS + 1):
         nxt = (
             adj.join(
@@ -1461,12 +1464,10 @@ NODE_JACCARD_TOPK = 20
 #: input-scaled sizing the triangle census uses for its 2-hop stage).
 _WEDGE_PAIRS_PER_TASK = 2_000_000
 
-#: Broadcast the (node, degree) frame below this node count (~16
-#: bytes/row -> ~80 MB at the bound; the LPA gate) and the undirected
-#: edge list below this edge count -- both joins probe the ~n^2-sized
-#: candidate-pair frame, so broadcasting the small side keeps that
-#: frame from re-shuffling three times.
-NODE_JACCARD_BROADCAST_MAX_NODES = 5_000_000
+#: Broadcast the undirected edge list below this edge count (the
+#: (node, degree) frame follows BROADCAST_MAX_ROWS) -- both joins
+#: probe the ~n^2-sized candidate-pair frame, so broadcasting the
+#: small side keeps that frame from re-shuffling three times.
 NODE_JACCARD_BROADCAST_MAX_EDGES = 50_000_000
 
 
@@ -1515,10 +1516,7 @@ def _wedge_link_scores(
     if _adj is not None:
         adj0 = _adj
     else:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+        adj0 = _adjacency(spark, sf_dir)
     dsz = F.size("nbrs").cast("long")
     keep = F.lit(True) if max_degree is None else dsz <= F.lit(max_degree)
     sizes = adj0.agg(
@@ -1542,7 +1540,7 @@ def _wedge_link_scores(
         and 0 <= sizes.min_id
         and 2 * vb + db <= _PAIR_KEY_BITS
     )
-    small_nodes = sizes.nodes <= NODE_JACCARD_BROADCAST_MAX_NODES
+    small_nodes = _broadcastable(sizes.nodes)
     small_edges = sizes.m2 // 2 <= NODE_JACCARD_BROADCAST_MAX_EDGES
     adj = adj0 if max_degree is None else adj0.filter(keep)
     # Round-robin the centers over the wedge-derived width before
@@ -1788,8 +1786,7 @@ def q_node_jaccard_capped(
     so the co-purchase self-group runs once (ADVICE r5; r11 moved the
     shared frame from the flat edge list to the adjacency arrays --
     degree is a map-side size() of it)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+    adj0 = _adjacency(spark, sf_dir)
     deg = adj0.select("src", F.size("nbrs").alias("d"))
     cap = _discrete_degree_cap(deg, pct)
     return q_node_jaccard(spark, sf_dir, max_degree=cap, _adj=adj0)
@@ -2105,10 +2102,7 @@ def q_node_jaccard_minhash(
     if _adj is not None:
         adj0 = _adj
     else:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+        adj0 = _adjacency(spark, sf_dir)
     # ONE shared signature/candidate/verify stage with the threshold
     # twin (minhash_adjacency_pairs_scored, VERDICT r9 #5) -- band
     # geometry: default one-row bands (the oracle-pinned top-K
@@ -2212,13 +2206,10 @@ def q_wedge_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full wedge expansion ON PURPOSE -- this is the audit, run on
     samples at production scale while q_node_jaccard_minhash serves
     the hot path."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
     # ONE checkpointed adjacency feeds both sides (r11): the exact
     # wedge expansion and the minhash signature/verify stages all
     # consume (src, nbrs) directly
-    adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+    adj0 = _adjacency(spark, sf_dir)
     exact = q_node_jaccard(spark, sf_dir, _adj=adj0).select("u", "v")
     approx = q_node_jaccard_minhash(spark, sf_dir, _adj=adj0).select(
         "u", "v"
@@ -2283,14 +2274,13 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (r11): one checkpointed adjacency frame -- the source
     endpoint's degree rides out of the explode for free, leaving ONE
-    size-gated broadcast degree join (8 bytes/node, the node-Jaccard
-    gate) to attach the destination degree; the edge view never
+    size-gated broadcast degree join (BROADCAST_MAX_ROWS) to attach
+    the destination degree; the edge view never
     shuffles; ONE map-side-combined aggregate folds the moments."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj = co_purchase_adjacency(li).transform(cut_lineage)
+    adj = _adjacency(spark, sf_dir)
     n_nodes = adj.count()  # bounded driver scalar: gates the broadcast
     dv = adj.select(F.col("src").alias("d_"), F.size("nbrs").alias("dv"))
-    if n_nodes <= NODE_JACCARD_BROADCAST_MAX_NODES:
+    if _broadcastable(n_nodes):
         dv = F.broadcast(dv)
     paired = (
         adj.select(
@@ -2368,16 +2358,10 @@ def q_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one label join onto the undirected edge list
     (size-gated broadcast, the LPA-round pattern) + two map-side
     combined aggregates. Nothing beyond the LPA loop's own cost."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj = co_purchase_adjacency(li).transform(cut_lineage)
+    adj = _adjacency(spark, sf_dir)
     edges = adj.select("src", F.explode("nbrs").alias("dst"))
-    labels = lpa_labels(edges, _nodes=adj.select("src"))
-    n_nodes = labels.count()
-    lab = (
-        F.broadcast(labels)
-        if n_nodes <= LPA_BROADCAST_MAX_NODES
-        else labels
-    )
+    labels, n_nodes = lpa_labels(edges, _nodes=adj.select("src"))
+    lab = F.broadcast(labels) if _broadcastable(n_nodes) else labels
     und = edges.filter(F.col("src") < F.col("dst"))
     intra = (
         und.join(
@@ -2521,8 +2505,7 @@ def q_closeness_sampled(
     # joins the broadcast frontier against |V| array rows and explodes
     # the matched neighbor lists map-side, and the landmark draw /
     # node count scan |V| rows with no distinct.
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj = co_purchase_adjacency(li).transform(cut_lineage)
+    adj = _adjacency(spark, sf_dir)
     n_words = (landmarks + 63) // 64
     seed_order = [F.md5(F.col("src").cast("string")), F.col("src")]
     seeds = (
@@ -2556,7 +2539,7 @@ def q_closeness_sampled(
             F.col("node").alias("fsrc"),
             *[F.col(f"b{j}").alias(f"fb{j}") for j in range(n_words)],
         )
-        if n_nodes <= NODE_JACCARD_BROADCAST_MAX_NODES:
+        if _broadcastable(n_nodes):
             f = F.broadcast(f)
         neigh = (
             adj.join(f, adj["src"] == f["fsrc"])
@@ -2804,8 +2787,7 @@ def q_adamic_adar_capped(
     degree histogram is passed through so the co-purchase self-group
     runs once (r11: the shared frame is the adjacency arrays; degree
     is a map-side size() of it)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+    adj0 = _adjacency(spark, sf_dir)
     deg = adj0.select("src", F.size("nbrs").alias("d"))
     cap = _discrete_degree_cap(deg, pct)
     return q_adamic_adar(spark, sf_dir, max_degree=cap, _adj=adj0)
@@ -2890,8 +2872,7 @@ def q_betweenness_sampled(
     # the forward hops and the backward Brandes sweep each join it
     # per hop (9+ scans total), so the ~10x-smaller array-row block
     # is what gets re-read; matched neighbor lists explode map-side.
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj = co_purchase_adjacency(li).transform(cut_lineage)
+    adj = _adjacency(spark, sf_dir)
     seed_order = [F.md5(F.col("src").cast("string")), F.col("src")]
     seeds = (
         adj.select("src")
@@ -2954,16 +2935,14 @@ def q_betweenness_sampled(
     # sf0.1 -- against a successor frame of at most |level| <= K x V
     # rows (~152k here, ~5 MB). The planner picked a shuffle join (the
     # successor side is two checkpoints + a join deep, so its size
-    # estimate is unusable); under the same node gate the iterative
+    # estimate is unusable); within the BROADCAST_MAX_ROWS bound the iterative
     # loops use, broadcast the successor side so the exploded frame
     # never crosses an exchange -- the term aggregate then partial-
     # aggregates map-side and ships only (source, node) partials.
     # Above the gate (K x V too big to broadcast) the shuffle join
     # stays. Profile delta: stages 70+73 (29.3 + 104.6 s run, 225 MB
     # exchanged) collapse into the map stage; see OPTIMIZATION_r12.md.
-    bcast_succ = (
-        sources * adj.count() <= PAGERANK_BROADCAST_MAX_NODES
-    )
+    bcast_succ = _broadcastable(sources * adj.count())
     all_deltas: list[DataFrame] = []
     for hop in range(BFS_MAX_HOPS - 1, -1, -1):
         succ = (
@@ -3192,7 +3171,6 @@ def q_randomwalk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     scope: the reference engine has no graph operators -- this extends
     the serving surface along SURVEY.md section 2's extension track.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # id-sorted adjacency ARRAYS (one row per node) instead of an
     # edge-level row_number window: the same ordering contract as the
     # oracle's row_number-over-(src ORDER BY dst), but each step scans
@@ -3202,7 +3180,7 @@ def q_randomwalk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape checkpointed the flat edge list first and re-grouped it,
     # paying the edge-dedup exchange and a 10x-fatter materialization
     # that only the seed draw ever read.
-    adj = co_purchase_adjacency(li).transform(cut_lineage)
+    adj = _adjacency(spark, sf_dir)
     seeds = (
         adj.select("src")
         .orderBy(F.md5(F.col("src").cast("string")), "src")
@@ -3341,15 +3319,14 @@ def q_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _TRIANGLE_ADJ_BROADCAST_MAX_EDGES both intersection joins
     broadcast the oriented adjacency so the ``nu`` arrays never cross
     an exchange (268 MB for 1.2M rows at sf0.1 before)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+    adj0 = _adjacency(spark, sf_dir)
     deg = adj0.select("src", F.size("nbrs").alias("d"))
     und = adj0.select(
         "src", F.size("nbrs").alias("ds"), F.explode("nbrs").alias("dst")
     ).filter(F.col("src") < F.col("dst"))
     n_all_nodes = adj0.count()
     dd = deg.select(F.col("src").alias("d_"), F.col("d").alias("dd"))
-    if n_all_nodes <= NODE_JACCARD_BROADCAST_MAX_NODES:
+    if _broadcastable(n_all_nodes):
         dd = F.broadcast(dd)
     ranked = und.join(dd, F.col("dst") == F.col("d_"))
     src_first = (F.col("ds") < F.col("dd")) | (
@@ -3395,11 +3372,7 @@ def q_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     eligible = deg.filter(F.col("d") >= LCC_MIN_DEGREE)
     n_nodes = eligible.count()
-    tjoin = (
-        F.broadcast(tcounts)
-        if n_nodes <= NODE_JACCARD_BROADCAST_MAX_NODES
-        else tcounts
-    )
+    tjoin = F.broadcast(tcounts) if _broadcastable(n_nodes) else tcounts
     t0 = F.coalesce(F.col("t"), F.lit(0)).cast("long")
     return (
         eligible.join(tjoin, eligible["src"] == tjoin["node"], "left")
@@ -3485,7 +3458,7 @@ def q_brand_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bdst = brand.select(
         F.col("p_partkey").alias("dst"), F.col("p_brand").alias("brand_v")
     )
-    if n_parts <= NODE_JACCARD_BROADCAST_MAX_NODES:
+    if _broadcastable(n_parts):
         bsrc, bdst = F.broadcast(bsrc), F.broadcast(bdst)
     tagged = edges.join(bsrc, "src").join(bdst, "dst").transform(cut_lineage)
     totals = tagged.agg(
@@ -3592,15 +3565,15 @@ def q_hits_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c", F.lit(1).cast("decimal(38,0)").alias("h")
     )
     # r11 (guide section 3.1): the score frames are one row per
-    # customer / per part; under the PageRank node gate broadcast them
+    # customer / per part; within BROADCAST_MAX_ROWS, broadcast them
     # so the checkpointed edge list never reshuffles across rounds --
     # each half-round becomes a map-side join + one O(nodes)
-    # partial-sum shuffle. Above the gate (billion-node sides) the
+    # partial-sum shuffle. Above the bound (billion-node sides) the
     # shuffle-join rounds stay.
     # conservative gate: |customers|, |parts| <= |edges|, and counting
     # the checkpointed edge frame is a near-free cached-partition scan
     # (a countDistinct per side would cost a real aggregate job).
-    bcast_scores = edges.count() <= PAGERANK_BROADCAST_MAX_NODES
+    bcast_scores = _broadcastable(edges.count())
     a = None
     for _ in range(HITS_ROUNDS):
         a = (
@@ -3845,15 +3818,12 @@ def q_neardup_threshold_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference for the family's semantics is the exact q_node_jaccard
     (web-app/app.py has no graph ops; this family extends SURVEY.md
     section 2's analytics for LLM-pipeline dedup)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
     # r11: ONE checkpointed adjacency; twins are a map-side array
     # filter of it (planted_twin_adjacency) instead of re-deriving the
     # twin edge rows on every one of the stage's 4-5 passes over a
     # flat edge checkpoint. Twins point only at original nodes, so
     # the original src universe covers every neighbor (_nodes).
-    adj0 = co_purchase_adjacency(li).transform(cut_lineage)
+    adj0 = _adjacency(spark, sf_dir)
     return neardup_threshold_pairs(
         None,
         _adj=planted_twin_adjacency(adj0),

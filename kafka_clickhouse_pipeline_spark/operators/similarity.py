@@ -52,10 +52,6 @@ def _dot(u: Column, v: Column) -> Column:
     return F.aggregate(F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
 
 
-def _cosine(u: Column, v: Column) -> Column:
-    return _dot(u, v) / (F.sqrt(_dot(u, u)) * F.sqrt(_dot(v, v)))
-
-
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(

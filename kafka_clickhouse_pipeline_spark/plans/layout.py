@@ -1,21 +1,23 @@
 """Physical-layout utilities for scale: bucketed tables (shuffle-free
-fact-fact joins), salted joins (hot-key skew), and small-file
-compaction for streaming sinks.
+fact-fact joins) and salted joins (hot-key skew).
 
-These are the three operational levers SCALE.md names for the plans
-that still shuffle at 100 TB:
+These are two of the three operational levers SCALE.md names for the
+plans that still shuffle at 100 TB:
 - bucketing removes the lineitem><orders exchange entirely when both
   sides are written bucketed by the join key;
 - salting splits a pathological hot key across ``salt_buckets``
   sub-keys (AQE skew-join handles moderate skew at runtime; salting is
-  the deterministic heavy hammer for known-degenerate keys);
-- compaction bounds file counts on continuously-appended tables (the
-  MergeTree background-merge analog, SURVEY.md section 4).
+  the deterministic heavy hammer for known-degenerate keys).
+
+The third, compaction, bounds file counts on continuously-appended
+tables (the MergeTree background-merge analog, SURVEY.md section 4);
+it is ``streaming.sink.compact_partitions``, which replaces months
+through the tables' commit markers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -71,23 +73,3 @@ def salted_join(
     out = lsalted.join(rsalted, [key, "__salt"], how)
     return out.drop("__salt")
 
-
-def compact_table(
-    spark: SparkSession, path: str, target_files_per_partition: int = 1
-) -> None:
-    """Rewrite a month-partitioned table with bounded files per
-    partition (streaming sinks accrete small files per micro-batch;
-    this is the periodic background merge). Preserves the partition
-    column and re-sorts by the table sort key."""
-    df = spark.read.parquet(path)
-    sort_cols = [c for c in ("event_time", "product_id") if c in df.columns]
-    compacted = df.repartition(target_files_per_partition, "event_month")
-    if sort_cols:
-        compacted = compacted.sortWithinPartitions(*sort_cols)
-    tmp = path.rstrip("/") + "__compacting"
-    compacted.write.mode("overwrite").partitionBy("event_month").parquet(tmp)
-    # atomic-ish swap (HDFS/object stores would use a metastore swap)
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(tmp, path)

@@ -52,7 +52,7 @@ def default_rows(spark, sf_dir):
     "gate, value",
     [
         ("NODE_JACCARD_BROADCAST_MAX_EDGES", -1),
-        ("NODE_JACCARD_BROADCAST_MAX_NODES", 0),
+        ("BROADCAST_MAX_ROWS", 0),
         ("_PAIR_KEY_BITS", 0),
     ],
     ids=["edges", "nodes", "pack"],
@@ -88,7 +88,7 @@ def _capped_and_full_sizes(spark, sf_dir):
 @pytest.mark.parametrize(
     "gate, axis",
     [
-        ("NODE_JACCARD_BROADCAST_MAX_NODES", 0),
+        ("BROADCAST_MAX_ROWS", 0),
         ("NODE_JACCARD_BROADCAST_MAX_EDGES", 1),
     ],
     ids=["nodes", "edges"],

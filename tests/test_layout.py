@@ -1,19 +1,13 @@
 """Tests for the physical-layout levers: bucketed join has no
-exchange, salted join preserves results, compaction bounds files."""
+exchange, salted join preserves results."""
 
 from __future__ import annotations
-
-import glob
 
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_pipeline_spark import plans
 from kafka_clickhouse_pipeline_spark.catalog import load_table
-from kafka_clickhouse_pipeline_spark.plans.layout import (
-    compact_table,
-    salted_join,
-    write_bucketed,
-)
+from kafka_clickhouse_pipeline_spark.plans.layout import salted_join, write_bucketed
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir):
@@ -55,27 +49,3 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     )
     assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
 
-
-def test_compact_table_bounds_files(spark, tmp_path):
-    # simulate a streaming sink that accreted many small files
-    src = [
-        (i, f"2024-01-{(i % 27) + 1:02d} 10:00:00", 202401 if i % 2 == 0 else 202402)
-        for i in range(100)
-    ]
-    df = spark.createDataFrame(src, ["product_id", "event_time_s", "event_month"]).select(
-        "product_id",
-        F.col("event_time_s").cast("timestamp").alias("event_time"),
-        "event_month",
-    )
-    path = str(tmp_path / "tbl")
-    for chunk in range(5):  # five appends = many files
-        df.filter(F.col("product_id") % 5 == chunk).repartition(4).write.mode(
-            "append"
-        ).partitionBy("event_month").parquet(path)
-    before = len(glob.glob(f"{path}/*/*.parquet"))
-    n_before = spark.read.parquet(path).count()
-    compact_table(spark, path)
-    after = len(glob.glob(f"{path}/*/*.parquet"))
-    assert spark.read.parquet(path).count() == n_before
-    assert after < before
-    assert after <= 4  # bounded per partition

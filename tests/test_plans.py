@@ -297,7 +297,7 @@ def test_pagerank_python_free_and_topk(spark, sf_dir):
 
 def test_pagerank_broadcast_is_size_gated(spark):
     """The per-round rank-vector join broadcasts below
-    PAGERANK_BROADCAST_MAX_NODES and falls back to a shuffle join above
+    graph.BROADCAST_MAX_ROWS and falls back to a shuffle join above
     it (broadcasting a billion-row rank vector is the r1-flagged
     scale-killer). Assert both branches on one un-checkpointed round,
     with auto-broadcast disabled so the branch under test -- not the
@@ -365,7 +365,7 @@ def test_registry_plan_audit_no_row_python_no_cartesian(spark, sf_dir):
 
 def test_label_propagation_broadcast_is_size_gated(spark):
     """The per-round label join broadcasts below
-    LPA_BROADCAST_MAX_NODES (the edge list never reshuffles across
+    graph.BROADCAST_MAX_ROWS (the edge list never reshuffles across
     rounds -- measured 17.2 s -> 4.1 s at sf0.1) and falls back to a
     shuffle join above it (broadcasting a billion-row label frame is
     the scale-killer). Both branches compute identical labels."""

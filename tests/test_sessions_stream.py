@@ -18,7 +18,10 @@ from pyspark.sql.types import (
 
 from kafka_clickhouse_pipeline_spark.catalog import load_table
 from kafka_clickhouse_pipeline_spark.functions.canon import ts_str
-from kafka_clickhouse_pipeline_spark.operators.analytics import q_sessionize
+from kafka_clickhouse_pipeline_spark.operators.analytics import (
+    ANALYTICS_ORACLES,
+    q_sessionize,
+)
 from kafka_clickhouse_pipeline_spark.streaming.sessions import sessionize_stream
 
 RAW = StructType(
@@ -164,3 +167,55 @@ def test_gap_of_exactly_the_session_gap_stays_in_the_session(spark):
         # a null value counts as 0 revenue
         ("2024-01-15T11:00:00.000001", "2024-01-15T11:00:00.000001", 1, 0.0),
     ]
+
+
+def test_sub_second_gap_splits_batch_twin_and_stream(spark, tmp_path):
+    """A gap of 30:00.5 opens a new session in q_sessionize, in its
+    DuckDB twin and in sessionize_stream alike: all three measure the
+    gap in microseconds, not between whole-second floors (whose
+    difference here is exactly 1800 s)."""
+    from datetime import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "events.parquet"
+    # nanosecond timestamps, as in the events fixture
+    pq.write_table(
+        pa.table(
+            {
+                "user_id": pa.array([1, 1], pa.int64()),
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(
+                    [datetime(2024, 1, 15, 10, 0), datetime(2024, 1, 15, 10, 30, 0, 500000)],
+                    pa.timestamp("ns"),
+                ),
+                "value": pa.array([1.0, 2.0]),
+            }
+        ),
+        path,
+    )
+    want = [
+        ("2024-01-15 10:00:00", "2024-01-15 10:00:00", 1),
+        ("2024-01-15 10:30:00", "2024-01-15 10:30:00", 1),
+    ]
+    batch = q_sessionize(spark, str(tmp_path)).collect()
+    assert [(r.session_start, r.session_end, r.n_events) for r in batch] == want
+
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+        res = con.execute(ANALYTICS_ORACLES["q_sessionize"])
+        cols = [d[0] for d in res.description]
+        twin = [dict(zip(cols, r)) for r in res.fetchall()]
+    finally:
+        con.close()
+    assert [(r["session_start"], r["session_end"], r["n_events"]) for r in twin] == want
+
+    stream = sessionize_stream(load_table(spark, str(tmp_path), "events")).select(
+        ts_str("session_start").alias("session_start"),
+        ts_str("session_end").alias("session_end"),
+        "n_events",
+    )
+    assert sorted(tuple(r) for r in stream.collect()) == want
