@@ -61,11 +61,16 @@ and the DataFrame pipeline produce identical values. ``if(c, a, b)``,
 computed alias expressions in ORDER BY are already valid Spark SQL and
 pass through untouched.
 
-Translation is purely syntactic (balanced-parenthesis function-call
-rewriting, string-literal aware), so the output stays a declarative
-SQL string: Catalyst sees the same logical plan it would get from the
-hand-written Spark form -- predicate pushdown, partial aggregation,
-TakeOrderedAndProject all still apply. No UDFs are registered; the
+Translation is purely syntactic. One lexer (``_TOKEN``) splits the
+text into string literals, quoted names (backtick or double quote),
+comments (``--`` and ``/* */``), words, blanks and single characters.
+Literals, quoted names and comments are opaque: nothing inside them is
+rewritten, and no paren, quote or keyword inside them counts. One walk
+over those tokens rebuilds every dialect call from its translated
+arguments, so the output stays a declarative SQL string: Catalyst
+sees the same logical plan it would get from the hand-written Spark
+form -- predicate pushdown, partial aggregation, TakeOrderedAndProject
+all still apply. No UDFs are registered; the
 translated text uses only built-in functions.
 """
 
@@ -75,139 +80,18 @@ import re
 
 from ..functions import EVENT_TIME_FORMAT
 
-
-def _find_calls(sql: str, name: str) -> list[tuple[int, int, list[str]]]:
-    """Locate every top-level call of ``name(...)`` in ``sql`` outside
-    string literals: (start, end_exclusive, top_level_args). Scans
-    left-to-right; nested calls of the same name are found on the next
-    pass (the rewriter loops until fixpoint)."""
-    out = []
-    i, n = 0, len(sql)
-    lname = name.lower()
-    while i < n:
-        ch = sql[i]
-        if ch == "'":  # skip string literal ('' escapes)
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-            i += 1
-            continue
-        if sql[i : i + len(name)].lower() == lname and (
-            i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
-        ):
-            j = i + len(name)
-            while j < n and sql[j].isspace():
-                j += 1
-            if j < n and sql[j] == "(":
-                depth, k, args, last = 0, j, [], j + 1
-                in_str = False
-                while k < n:
-                    c = sql[k]
-                    if in_str:
-                        if c == "'":
-                            in_str = False
-                    elif c == "'":
-                        in_str = True
-                    elif c == "(":
-                        depth += 1
-                    elif c == ")":
-                        depth -= 1
-                        if depth == 0:
-                            args.append(sql[last:k].strip())
-                            break
-                    elif c == "," and depth == 1:
-                        args.append(sql[last:k].strip())
-                        last = k + 1
-                    k += 1
-                if depth == 0 and k < n:
-                    if args == [""]:
-                        args = []
-                    out.append((i, k + 1, args))
-                    i = k + 1
-                    continue
-        i += 1
-    return out
-
-
-def _rewrite(sql: str, name: str, build) -> str:
-    """Replace every ``name(...)`` call via ``build(args) -> str``,
-    repeating until a fixpoint (handles nested occurrences; stops if a
-    pass changes nothing, e.g. a rewrite that re-emits the name)."""
-    while True:
-        calls = _find_calls(sql, name)
-        if not calls:
-            return sql
-        # rewrite back-to-front so offsets stay valid; a build that
-        # returns None declines the span (left byte-identical)
-        prev = sql
-        for start, end, args in reversed(calls):
-            repl = build(args)
-            if repl is not None:
-                sql = sql[:start] + repl + sql[end:]
-        if sql == prev:
-            return sql
-
-
-def _rewrite_parametric(sql: str, name: str, build) -> str:
-    """Rewrite ClickHouse parametric-aggregate syntax ``name(params)(args)``
-    via ``build(params, args) -> str`` (e.g. ``quantile(0.5)(x)``)."""
-    while True:
-        calls = _find_calls(sql, name)
-        hit = None
-        for start, end, params in calls:
-            j = end
-            while j < len(sql) and sql[j].isspace():
-                j += 1
-            if j < len(sql) and sql[j] == "(":
-                # parse the second argument list with the same scanner
-                inner = _find_calls("f" + sql[j:], "f")
-                if inner and inner[0][0] == 0:
-                    _, iend, args = inner[0]
-                    hit = (start, j + iend - 1, params, args)
-                    break
-        if hit is None:
-            return sql
-        start, end, params, args = hit
-        sql = sql[:start] + build(params, args) + sql[end:]
-
-
-def _replace_keyword(sql: str, word: str, repl: str) -> str:
-    """Whole-word keyword replacement outside string literals."""
-    out, i, n = [], 0, len(sql)
-    lword = word.lower()
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if (
-            sql[i : i + len(word)].lower() == lword
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-            and (
-                i + len(word) >= n
-                or not (sql[i + len(word)].isalnum() or sql[i + len(word)] == "_")
-            )
-        ):
-            out.append(repl)
-            i += len(word)
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+#: The one lexer. A token is a string literal ('' and backslash
+#: escapes), a double-quoted or backtick name, a -- or /* */ comment, a
+#: word, a blank run, or any other single character. An unterminated
+#: literal, name or comment runs to the end of the text.
+_TOKEN = re.compile(
+    r"""'(?:[^'\\]|\\.|'')*(?:'|\Z)"""
+    r'''|"(?:[^"\\]|\\.|"")*(?:"|\Z)'''
+    r"|`(?:[^`]|``)*(?:`|\Z)"
+    r"|--[^\r\n]*|/\*.*?(?:\*/|\Z)"
+    r"|\w+|\s+|.",
+    re.S,
+)
 
 
 #: ClickHouse cast helpers -> closest Spark SQL type. UInt64 maps to
@@ -312,6 +196,140 @@ def _multi_if(args: list[str]) -> str:
     return " ".join(parts)
 
 
+
+
+#: Every ClickHouse function ``translate`` rewrites, by lowercased name:
+#: a word matches case-insensitively when the next non-blank token is
+#: "(". A build gets the translated, stripped arguments and returns the
+#: Spark text; one that returns None declines, and the call is kept.
+#: ``now`` depends on the anchor, so ``translate`` adds it per call.
+_CALLS = {
+    "tostartofhour": lambda a: f"date_trunc('hour', {a[0]})",
+    "toyyyymm": lambda a: f"CAST(year({a[0]}) * 100 + month({a[0]}) AS INT)",
+    "todecimal32": lambda a: f"CAST({a[0]} AS DECIMAL(9, {a[1] if len(a) > 1 else 0}))",
+    "parsedatetimebesteffortornull": lambda a: (
+        f"coalesce(to_timestamp({a[0]}, '{EVENT_TIME_FORMAT}'), "
+        f"to_timestamp({a[0]}))"
+    ),
+    # ClickHouse count() == count(*)
+    "count": lambda a: f"count({', '.join(a) or '*'})",
+    # parametric aggregates, name(params)(args): see _PARAMETRIC
+    "quantile": lambda p, a: f"percentile({a[0]}, {p[0]})",
+    "quantileexact": lambda p, a: f"percentile({a[0]}, {p[0]})",
+    "sumif": lambda a: f"sum(if(({a[1]}), ({a[0]}), 0))",
+    "countif": lambda a: f"sum(if(({a[0]}), 1, 0))",
+    **{
+        f"{agg}if": lambda a, s=agg: f"{s}(CASE WHEN ({a[1]}) THEN ({a[0]}) END)"
+        for agg in ("avg", "min", "max")
+    },
+    "uniqexact": lambda a: f"count(DISTINCT {', '.join(a)})",
+    "uniq": lambda a: f"count(DISTINCT {', '.join(a)})",
+    "argmax": lambda a: f"max_by({a[0]}, {a[1]})",
+    "argmin": lambda a: f"min_by({a[0]}, {a[1]})",
+    "multiif": _multi_if,
+    "arrayjoin": lambda a: f"explode({a[0]})",
+    "has": lambda a: f"array_contains({a[0]}, {a[1]})",
+    "splitbychar": lambda a: f"split({a[1]}, {_split_regex_literal(a[0])})",
+    "jsonextractstring": lambda a: (
+        f"get_json_object({a[0]}, '$.' || {a[1]})"
+        if not (a[1].startswith("'") and a[1].endswith("'"))
+        else f"get_json_object({a[0]}, '$.{a[1][1:-1]}')"
+    ),
+    "jsonextractint": lambda a: f"CAST(get_json_object({a[0]}, '$.{a[1][1:-1]}') AS BIGINT)",
+    "jsonextractfloat": lambda a: f"CAST(get_json_object({a[0]}, '$.{a[1][1:-1]}') AS DOUBLE)",
+    "todate": lambda a: f"to_date({a[0]})",
+    "todatetime": lambda a: f"to_timestamp({a[0]})",
+    **{
+        f.lower(): lambda a, u=unit: f"date_trunc('{u}', {a[0]})"
+        for f, unit in _TRUNC_FUNCS.items()
+    },
+    **{f.lower(): lambda a, p=part: f"{p}({a[0]})" for f, part in _PART_FUNCS.items()},
+    # ClickHouse: Monday=1..Sunday=7; Spark dayofweek: Sunday=1..Saturday=7
+    "todayofweek": lambda a: f"(((dayofweek({a[0]}) + 5) % 7) + 1)",
+    **{
+        f.lower(): lambda a, t=stype: f"CAST({a[0]} AS {t})"
+        for f, stype in _CAST_FUNCS.items()
+    },
+    "intdiv": lambda a: f"(({a[0]}) DIV ({a[1]}))",
+    "modulo": lambda a: f"(({a[0]}) % ({a[1]}))",
+    "formatdatetime": lambda a: f"date_format({a[0]}, {_format_pattern(a[1])})",
+    "grouparray": lambda a: f"collect_list({a[0]})",
+    "groupuniqarray": lambda a: f"collect_set({a[0]})",
+    # ClickHouse any()/anyLast() contract is 'some value from the
+    # group, nondeterministic'; Spark's any_value carries exactly that
+    # contract (anyLast's 'last seen' is itself arrival-order-defined,
+    # which a distributed read does not fix).
+    "anylast": lambda a: f"any_value({a[0]})",
+    # `x > ANY (SELECT ...)` is the SQL quantified comparison, not the
+    # ClickHouse aggregate: decline it
+    "any": lambda a: (
+        None
+        if len(a) == 1 and a[0].lstrip().lower().startswith("select")
+        else f"any_value({a[0]})"
+    ),
+}
+
+#: Builds that take two argument lists, ``quantile(0.5)(x)``.
+_PARAMETRIC = ("quantile", "quantileexact")
+
+
+def _walk(toks: list[str], i: int, end: int, calls: dict) -> str:
+    """Translate ``toks[i:end]``: each call in ``calls`` becomes its
+    build over its translated arguments, PREWHERE becomes WHERE, and
+    every other token is copied."""
+    out = []
+    while i < end:
+        tok = toks[i]
+        low = tok.lower()
+        text = None
+        if low in calls:
+            args, j = _args(toks, i + 1, end, calls)
+            if args is not None and low in _PARAMETRIC:
+                params, (args, j) = args, _args(toks, j, end, calls)
+                text = None if args is None else calls[low](params, args)
+            elif args is not None:
+                text = calls[low](args)
+        if text is None:
+            out.append("WHERE" if low == "prewhere" else tok)
+            i += 1
+        else:
+            out.append(text)
+            i = j
+    return "".join(out)
+
+
+def _args(toks: list[str], i: int, end: int, calls: dict):
+    """The translated arguments of the parenthesised list that starts at
+    the first non-blank token at or after ``i`` (split at depth-1
+    commas), and the index after its ")"; ``(None, i)`` if no complete
+    list starts there."""
+    while i < end and toks[i].isspace():
+        i += 1
+    if i == end or toks[i] != "(":
+        return None, i
+    depth, cuts = 0, [i]
+    for k in range(i, end):
+        if toks[k] == "(":
+            depth += 1
+        elif toks[k] == ")":
+            depth -= 1
+            if depth == 0:
+                cuts.append(k)
+                args = [_text(toks, a + 1, b, calls) for a, b in zip(cuts, cuts[1:])]
+                return ([] if args == [""] else args), k + 1
+        elif toks[k] == "," and depth == 1:
+            cuts.append(k)
+    return None, i
+
+
+def _text(toks: list[str], i: int, end: int, calls: dict) -> str:
+    """``_walk`` stripped of outer blanks. A trailing ``--`` comment
+    keeps its newline, so text placed after it stays code."""
+    text = _walk(toks, i, end, calls).strip()
+    last = next((t for t in reversed(toks[i:end]) if not t.isspace()), "")
+    return text + "\n" if last.startswith("--") else text
+
+
 def translate(sql: str, anchor: str | None = None) -> str:
     """ClickHouse SQL -> Spark SQL for the reference's query surface.
 
@@ -320,175 +338,21 @@ def translate(sql: str, anchor: str | None = None) -> str:
     data (the same ANCHOR contract operators/serving.py uses). Default
     keeps live ``current_timestamp()`` semantics.
     """
-    sql = _rewrite(
-        sql, "toStartOfHour", lambda a: f"date_trunc('hour', {a[0]})"
-    )
-    sql = _rewrite(
-        sql,
-        "toYYYYMM",
-        lambda a: f"CAST(year({a[0]}) * 100 + month({a[0]}) AS INT)",
-    )
-    sql = _rewrite(
-        sql,
-        "toDecimal32",
-        lambda a: f"CAST({a[0]} AS DECIMAL(9, {a[1].strip() if len(a) > 1 else 0}))",
-    )
-    sql = _rewrite(
-        sql,
-        "parseDateTimeBestEffortOrNull",
-        lambda a: (
-            f"coalesce(to_timestamp({a[0]}, '{EVENT_TIME_FORMAT}'), "
-            f"to_timestamp({a[0]}))"
-        ),
-    )
-    now_expr = (
-        f"TIMESTAMP '{anchor}'" if anchor is not None else "current_timestamp()"
-    )
-    sql = _rewrite(sql, "now", lambda a: now_expr)
-    # ClickHouse count() == count(*)
-    sql = _rewrite(sql, "count", lambda a: "count(*)" if not a else f"count({', '.join(a)})")
-
-    # ---- extended surface (see module docstring) ----
-    # parametric aggregates first: quantile(p)(x) would otherwise be
-    # seen as a plain call of quantile
-    for qname in ("quantileExact", "quantile"):
-        sql = _rewrite_parametric(
-            sql, qname, lambda p, a: f"percentile({a[0]}, {p[0]})"
-        )
-    sql = _rewrite(
-        sql, "sumIf", lambda a: f"sum(if(({a[1]}), ({a[0]}), 0))"
-    )
-    sql = _rewrite(sql, "countIf", lambda a: f"sum(if(({a[0]}), 1, 0))")
-    for cname, sname in (("avgIf", "avg"), ("minIf", "min"), ("maxIf", "max")):
-        sql = _rewrite(
-            sql,
-            cname,
-            lambda a, s=sname: f"{s}(CASE WHEN ({a[1]}) THEN ({a[0]}) END)",
-        )
-    for uname in ("uniqExact", "uniq"):
-        sql = _rewrite(
-            sql, uname, lambda a: f"count(DISTINCT {', '.join(a)})"
-        )
-    sql = _rewrite(sql, "argMax", lambda a: f"max_by({a[0]}, {a[1]})")
-    sql = _rewrite(sql, "argMin", lambda a: f"min_by({a[0]}, {a[1]})")
-    sql = _rewrite(sql, "multiIf", _multi_if)
-    sql = _rewrite(sql, "arrayJoin", lambda a: f"explode({a[0]})")
-    sql = _rewrite(sql, "has", lambda a: f"array_contains({a[0]}, {a[1]})")
-    sql = _rewrite(
-        sql,
-        "splitByChar",
-        lambda a: f"split({a[1]}, {_split_regex_literal(a[0])})",
-    )
-    sql = _rewrite(
-        sql,
-        "JSONExtractString",
-        lambda a: f"get_json_object({a[0]}, '$.' || {a[1]})"
-        if not (a[1].startswith("'") and a[1].endswith("'"))
-        else f"get_json_object({a[0]}, '$.{a[1][1:-1]}')",
-    )
-    sql = _rewrite(
-        sql,
-        "JSONExtractInt",
-        lambda a: f"CAST(get_json_object({a[0]}, '$.{a[1][1:-1]}') AS BIGINT)",
-    )
-    sql = _rewrite(
-        sql,
-        "JSONExtractFloat",
-        lambda a: f"CAST(get_json_object({a[0]}, '$.{a[1][1:-1]}') AS DOUBLE)",
-    )
-    sql = _rewrite(sql, "toDate", lambda a: f"to_date({a[0]})")
-    sql = _rewrite(sql, "toDateTime", lambda a: f"to_timestamp({a[0]})")
-    for fname, unit in _TRUNC_FUNCS.items():
-        sql = _rewrite(sql, fname, lambda a, u=unit: f"date_trunc('{u}', {a[0]})")
-    for fname, part in _PART_FUNCS.items():
-        sql = _rewrite(sql, fname, lambda a, p=part: f"{p}({a[0]})")
-    # ClickHouse: Monday=1..Sunday=7; Spark dayofweek: Sunday=1..Saturday=7
-    sql = _rewrite(
-        sql,
-        "toDayOfWeek",
-        lambda a: f"(((dayofweek({a[0]}) + 5) % 7) + 1)",
-    )
-    for fname, stype in _CAST_FUNCS.items():
-        sql = _rewrite(sql, fname, lambda a, t=stype: f"CAST({a[0]} AS {t})")
-    sql = _rewrite(sql, "intDiv", lambda a: f"(({a[0]}) DIV ({a[1]}))")
-    sql = _rewrite(sql, "modulo", lambda a: f"(({a[0]}) % ({a[1]}))")
-    sql = _rewrite(
-        sql,
-        "formatDateTime",
-        lambda a: f"date_format({a[0]}, {_format_pattern(a[1])})",
-    )
-    sql = _rewrite(sql, "groupArray", lambda a: f"collect_list({a[0]})")
-    sql = _rewrite(sql, "groupUniqArray", lambda a: f"collect_set({a[0]})")
-    # ClickHouse any()/anyLast() contract is 'some value from the
-    # group, nondeterministic'; Spark's any_value carries exactly that
-    # contract (anyLast's 'last seen' is itself arrival-order-defined,
-    # which a distributed read does not fix).
-    sql = _rewrite(sql, "anyLast", lambda a: f"any_value({a[0]})")
-    # guard: `x > ANY (SELECT ...)` is the SQL quantified comparison,
-    # not the ClickHouse aggregate -- re-emitting unchanged terminates
-    # the rewriter's fixpoint loop
-    sql = _rewrite(
-        sql,
-        "any",
-        lambda a: (
-            None
-            if len(a) == 1 and a[0].lstrip().lower().startswith("select")
-            else f"any_value({a[0]})"
-        ),
-    )
-    sql = _replace_keyword(sql, "PREWHERE", "WHERE")
-    sql = _rewrite_limit_by(sql)
-    return sql
+    now = f"TIMESTAMP '{anchor}'" if anchor is not None else "current_timestamp()"
+    return _rewrite_limit_by(_TOKEN.findall(sql), {**_CALLS, "now": lambda a: now})
 
 
-def _top_level_spans(sql: str):
-    """Yield (index, char) for characters at paren depth 0 outside
-    string literals -- the scanner the structural rewrites share."""
-    depth, i, n = 0, 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            yield i, ch
-        i += 1
+#: ``LIMIT n BY``, ``LIMIT off, n BY`` and ``LIMIT n OFFSET off BY`` over
+#: the upper-cased top-level tokens joined by single spaces.
+_LIMIT_BY = re.compile(r"LIMIT (\d+) (?:, (\d+) |OFFSET (\d+) )?BY ")
 
 
-def _find_top_keyword(sql: str, word: str, start: int = 0) -> int:
-    """Offset of the first whole-word top-level occurrence of ``word``
-    at or after ``start``, or -1."""
-    lword = word.lower()
-    flat = {i: c for i, c in _top_level_spans(sql)}
-    n, m = len(sql), len(word)
-    for i in sorted(flat):
-        if i < start or i + m > n:
-            continue
-        if all(k in flat for k in range(i, i + m)) and sql[i : i + m].lower() == lword:
-            before_ok = i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
-            after_ok = i + m == n or not (sql[i + m].isalnum() or sql[i + m] == "_")
-            if before_ok and after_ok:
-                return i
-    return -1
-
-
-def _rewrite_limit_by(sql: str) -> str:
-    """ClickHouse ``... ORDER BY <o> LIMIT <n> BY <cols> [LIMIT <m>]``
-    -> a row_number window over the BY columns ordered by <o>. The
-    offset variants ``LIMIT <off>, <n> BY`` and ``LIMIT <n> OFFSET
-    <off> BY`` keep rows ``BETWEEN off+1 AND off+n`` per group.
+def _rewrite_limit_by(toks: list[str], calls: dict) -> str:
+    """Translate ``toks``, rewriting ClickHouse ``... ORDER BY <o> LIMIT
+    <n> BY <cols> [LIMIT <m>]`` into a row_number window over the BY
+    columns ordered by <o>. The offset variants ``LIMIT <off>, <n> BY``
+    and ``LIMIT <n> OFFSET <off> BY`` keep rows ``BETWEEN off+1 AND
+    off+n`` per group.
 
     Spark has no LIMIT-BY clause; the standard rewrite wraps the query
     and keeps the first n rows per BY-group under the query's own
@@ -499,41 +363,39 @@ def _rewrite_limit_by(sql: str) -> str:
     ORDER BY is rejected: ClickHouse keeps 'first encountered' rows
     there, which no distributed engine can reproduce deterministically.
     """
-    lim = _find_top_keyword(sql, "LIMIT")
-    while lim != -1:
-        # three ClickHouse forms: LIMIT n BY, LIMIT offset, n BY,
-        # LIMIT n OFFSET offset BY (ADVICE r4: the offset variants
-        # previously fell through untranslated and died at Spark
-        # parse time instead of being handled)
-        m = re.match(
-            r"LIMIT\s+(\d+)\s*(?:,\s*(\d+)|OFFSET\s+(\d+))?\s+BY\s+",
-            sql[lim:],
-            re.IGNORECASE,
-        )
+    top, depth = [], 0  # indices of the non-blank tokens at paren depth 0
+    for k, tok in enumerate(toks):
+        if tok == ")":
+            depth -= 1
+        if depth == 0 and not tok.isspace():
+            top.append(k)
+        if tok == "(":
+            depth += 1
+    words = [toks[k].upper() for k in top]
+    for lim, word in enumerate(words):
+        m = word == "LIMIT" and _LIMIT_BY.match(" ".join(words[lim : lim + 6]) + " ")
         if m:
             break
-        lim = _find_top_keyword(sql, "LIMIT", lim + 5)
-    if lim == -1:
-        return sql
-    if m.group(2) is not None:  # LIMIT offset, n BY
-        offset, n_rows = int(m.group(1)), int(m.group(2))
-    elif m.group(3) is not None:  # LIMIT n OFFSET offset BY
-        offset, n_rows = int(m.group(3)), int(m.group(1))
     else:
-        offset, n_rows = 0, int(m.group(1))
-    cols_start = lim + m.end()
-    nxt = _find_top_keyword(sql, "LIMIT", cols_start)
-    cols = sql[cols_start : nxt if nxt != -1 else len(sql)].strip().rstrip(";")
-    tail = sql[nxt:].strip().rstrip(";") if nxt != -1 else ""
-    order = _find_top_keyword(sql, "ORDER", 0)
-    if order == -1 or order > lim:
+        return _walk(toks, 0, len(toks), calls)
+    if m[2] is not None:  # LIMIT offset, n BY
+        offset, n_rows = int(m[1]), int(m[2])
+    elif m[3] is not None:  # LIMIT n OFFSET offset BY
+        offset, n_rows = int(m[3]), int(m[1])
+    else:
+        offset, n_rows = 0, int(m[1])
+    by = lim + m[0].count(" ") - 1
+    nxt = next((top[q] for q in range(by + 1, len(words)) if words[q] == "LIMIT"), len(toks))
+    order = next((q for q, w in enumerate(words[:lim]) if w == "ORDER" and words[q + 1] == "BY"), None)
+    if order is None:
         raise ValueError(
             "LIMIT BY without a preceding ORDER BY is nondeterministic; "
             "add an ORDER BY to make the kept rows well-defined"
         )
-    om = re.match(r"ORDER\s+BY\s+", sql[order:], re.IGNORECASE)
-    o_expr = sql[order + om.end() : lim].strip()
-    head = sql[:order].strip()
+    head = _text(toks, 0, top[order], calls)
+    o_expr = _text(toks, top[order + 1] + 1, top[lim], calls)
+    cols = _text(toks, top[by] + 1, nxt, calls).rstrip(";")
+    tail = _text(toks, nxt, len(toks), calls).rstrip(";")
     keep = (
         f"__lb_rn BETWEEN {offset + 1} AND {offset + n_rows}"
         if offset

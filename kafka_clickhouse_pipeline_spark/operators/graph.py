@@ -3371,8 +3371,11 @@ def q_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("t"))
     )
     eligible = deg.filter(F.col("d") >= LCC_MIN_DEGREE)
-    n_nodes = eligible.count()
-    tjoin = F.broadcast(tcounts) if _broadcastable(n_nodes) else tcounts
+    # tcounts has at most one row per node, so the node count above
+    # bounds it. Gating on it instead of counting the eligible nodes
+    # changes the branch only for graphs of more than 4M nodes with at
+    # most 4M eligible ones; no fixture comes near that.
+    tjoin = F.broadcast(tcounts) if _broadcastable(n_all_nodes) else tcounts
     t0 = F.coalesce(F.col("t"), F.lit(0)).cast("long")
     return (
         eligible.join(tjoin, eligible["src"] == tjoin["node"], "left")

@@ -9,9 +9,7 @@ event-time watermark passes its last event + GAP_SECONDS.
 The engine's streaming aggregation keeps the state: each user's open
 sessions, merged as events arrive in any order the watermark still
 admits, so an out-of-order event extends, joins or splits sessions as
-it would in the batch plan. No Python runs per batch. q_sessionize
-measures gaps in whole seconds, so the two differ only on a gap
-between 30:00 and 30:01 whose events carry sub-second parts.
+it would in the batch plan. No Python runs per batch.
 """
 
 from __future__ import annotations

@@ -364,3 +364,50 @@ def test_limit_by_offset_forms(sales_view):
         assert not (got & first), (form, got, first)
         sql = translate(base.format(limit_by=form), anchor=ANCHOR)
         assert "BETWEEN 2 AND 2" in sql, sql
+
+
+# ---- one lexer: comments and quoted names are opaque ----
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        # the apostrophe in the comment opens no string literal, so the
+        # now() after it still takes the anchor
+        (
+            "SELECT count() AS n -- the user's count\nFROM events WHERE ts < now()",
+            "SELECT count(*) AS n -- the user's count\n"
+            f"FROM events WHERE ts < TIMESTAMP '{ANCHOR}'",
+        ),
+        (
+            "SELECT /* it's */ uniqExact(user_id) FROM events",
+            "SELECT /* it's */ count(DISTINCT user_id) FROM events",
+        ),
+        ("SELECT count() AS `count()` FROM t", "SELECT count(*) AS `count()` FROM t"),
+        ('SELECT "toDate(x)" FROM t', 'SELECT "toDate(x)" FROM t'),
+    ],
+    ids=["line_comment", "block_comment", "backtick_name", "double_quoted_name"],
+)
+def test_comments_and_quoted_names_are_opaque(sql, want):
+    assert translate(sql, anchor=ANCHOR) == want
+
+
+def test_limit_by_with_a_trailing_line_comment_runs(sales_view):
+    """The LIMIT BY rewrite places the BY columns before generated SQL;
+    a trailing -- comment on them must not swallow that SQL."""
+    sql = """
+        SELECT product_name,
+               toStartOfHour(event_time) as hour,
+               sum(total) as revenue
+        FROM sales
+        GROUP BY product_name, hour
+        ORDER BY revenue DESC, product_name, hour
+        LIMIT 1 BY product_name"""
+    plain = [tuple(r) for r in run_clickhouse_sql(sales_view, sql).collect()]
+    commented = [
+        tuple(r)
+        for r in run_clickhouse_sql(
+            sales_view, sql + " -- the best hour of each product"
+        ).collect()
+    ]
+    assert plain and commented == plain

@@ -204,3 +204,24 @@ def test_every_rewrite_emits_spark_parseable_sql(
         assert residue not in out, (residue, out)
     # parse (not analyze): syntax validity, no tables needed
     spark._jsparkSession.sessionState().sqlParser().parsePlan(out)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    body=st.text(alphabet=st.characters(blacklist_characters="`\"*\r\n"), max_size=40),
+    form=st.sampled_from(["line_comment", "block_comment", "backtick", "double_quote"]),
+)
+def test_translate_never_touches_comments_or_quoted_names(body, form):
+    """Comments and quoted names are as opaque as string literals: text
+    in them that spells dialect calls, PREWHERE, LIMIT BY or a lone
+    apostrophe survives unchanged, and the code after them is still
+    translated."""
+    text = f"now() count() toDate({body}) PREWHERE LIMIT 1 BY x '"
+    opaque = {
+        "line_comment": f"-- {text}\n",
+        "block_comment": f"/* {text} */",
+        "backtick": f"`{text}`",
+        "double_quote": f'"{text}"',
+    }[form]
+    out = translate(f"SELECT {opaque} AS c, now() AS t FROM x", anchor="2024-01-01 00:00:00")
+    assert out == f"SELECT {opaque} AS c, TIMESTAMP '2024-01-01 00:00:00' AS t FROM x"

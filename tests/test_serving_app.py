@@ -213,6 +213,19 @@ def test_warm_route_jobs(spark, sf_dir, count_jobs, route, jobs):
     assert count_jobs(call) == warm
 
 
+def test_api_sql_comment_leaves_rows_unchanged(server):
+    """A -- comment holding an apostrophe is opaque: both now() after
+    it still take the serving anchor, so the benchmark's ad-hoc query
+    returns the same rows with the comment as without it."""
+    commented = _ADHOC_SQL.replace("AS users ", "AS users -- each user's visits count once\n")
+    assert commented != _ADHOC_SQL
+    plain_status, plain = _post_sql(server, _ADHOC_SQL.encode())
+    status, got = _post_sql(server, commented.encode())
+    assert plain_status == status == 200
+    assert plain["rows"], "anchored 7-day window should contain events"
+    assert got == plain
+
+
 def _oracle_payloads(oracle) -> dict[str, dict]:
     """Each chart route's payload, computed by DuckDB over
     SERVING_ORACLES and shaped the way serving_app shapes Spark's rows."""
